@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark protocol (defensible by construction):
   *  - queries run in sorted-name order, so rounds are order-comparable
   *    even as entries are added;
@@ -26,9 +24,11 @@ import org.apache.spark.sql.SparkSession
   *  - failures are LOUD: a query that throws is reported as "err" in
   *    the JSON (with the exception in an `errors` map) and the process
   *    exits nonzero — a regression must never bench as a speedup.
-  *  - the full JSON line is also written to `BENCH_FULL.json` in the
-  *    working directory, so a consumer that truncates long stdout lines
-  *    still has the complete per-query recording.
+  *  - a full-registry run also writes the JSON line to
+  *    `BENCH_FULL.json` in the working directory, so a consumer that
+  *    truncates long stdout lines still has the complete per-query
+  *    recording; an isolated `SPARK_GRAFT_BENCH_ONLY` run leaves that
+  *    file alone.
   */
 object Bench {
   private def jsonEscape(s: String): String =
@@ -41,17 +41,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.configure(spark)  // registry + serve confs
     // Environment fingerprint on STDERR only (the stdout JSON contract
     // is untouched): round 13's driver session showed a 23-query,
     // 4-25x degradation at local[32] that no code path explains and
@@ -62,7 +54,7 @@ object Bench {
     // actually had, plus the host load it started under.
     System.err.println(s"[bench] env: heapMaxMb=${Runtime.getRuntime.maxMemory / (1024 * 1024)}" +
       s" availProcs=${Runtime.getRuntime.availableProcessors}" +
-      s" master=local[$cpus]" +
+      s" master=${spark.sparkContext.master}" +
       s" loadAvg=${java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage}")
     // Warm the JVM/codegen/parquet-reader paths once so the first timed
     // query doesn't carry session bring-up cost.
@@ -108,9 +100,10 @@ object Bench {
     val nErr = results.count(_._2.isLeft)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"first":$firsts,"errors":$errors,"n_errors":$nErr,"sf":"$sfDir","runs_per_query":$runs,"stat":"median"}"""
     println(json)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_FULL.json"),
-      (json + "\n").getBytes("UTF-8"))
+    if (only.isEmpty)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get("BENCH_FULL.json"),
+        (json + "\n").getBytes("UTF-8"))
     spark.stop()
     if (nErr > 0) {
       System.err.println(s"[bench] $nErr queries FAILED — see errors map")

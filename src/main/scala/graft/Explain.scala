@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: dump formatted physical plans for plan review (SURVEY §6).
+/** Dev tool: dump formatted physical plans for plan review (SURVEY §6),
+  * planned on the session Bench times (`SPARK_GRAFT_CPUS` cores).
   * Usage: runMain graft.Explain <sfDir> [queryName ...] (default: all). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.configure(spark)  // registry + serve confs (plan-affecting)
     names.foreach { name =>
       println(s"\n========== $name ==========")
       try println(SparkEntry.queries(name)(spark, sfDir)

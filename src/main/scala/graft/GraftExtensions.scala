@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.expressions.{DeflateLength, DotProduct, FreqItemsSketch, HyperplaneBands, MinHashSignature, SimHashSignature}
+import graft.functions.Registry
 
 /** Session-wide registration of graft's native expressions via the
   * SparkSessionExtensions SPI, so a SQL-only deployment gets them too:
@@ -12,36 +11,15 @@ import graft.functions.expressions.{DeflateLength, DotProduct, FreqItemsSketch, 
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *   SELECT graft_dot(a.embedding, b.embedding) FROM ...
   *
-  * (Library code can equally call graft.functions.Registry.register —
-  * both routes bind the same expressions.)
+  * Injects every function in [[graft.functions.Registry.functions]] —
+  * the same list Registry.register binds on an existing session — plus
+  * the TopKPerKey hint rule and planner strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(_ => graft.plans.ResolveTopKPerKeyHint)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hplane_bands"),
-      new ExpressionInfo(classOf[HyperplaneBands].getName, "graft_hplane_bands"),
-      (exprs: Seq[Expression]) => HyperplaneBands.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashSignature].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimHashSignature(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_freq_items"),
-      new ExpressionInfo(classOf[FreqItemsSketch].getName, "graft_freq_items"),
-      FreqItemsSketch.build))
-    ext.injectFunction((
-      FunctionIdentifier("graft_deflate_len"),
-      new ExpressionInfo(classOf[DeflateLength].getName, "graft_deflate_len"),
-      (exprs: Seq[Expression]) => DeflateLength(exprs.head)))
+    Registry.functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
   }
 }

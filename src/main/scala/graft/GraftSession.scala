@@ -37,7 +37,8 @@ object GraftSession {
     * [[InScanChunk]]: every graft-built IN is chunk-bounded anyway,
     * and ad-hoc caller INs up to 1024 literals stay in the
     * measured-safe depth band (tools.InPushdownProbe ran 1000-literal
-    * probes through the identical scan stack). */
+    * probes through the identical scan stack; SURVEY §6.9, source at
+    * 0791305). */
   val InFilterThreshold: Int = InScanChunk * 2
 
   /** Apply graft's session-level requirements to an existing session:
@@ -57,7 +58,8 @@ object GraftSession {
     * With the values pushed, the clustered tables' tight per-row-group
     * min/max skip the groups containing no probed key — measured 2.4×
     * on a 1000-key probe of a 200M-row clustered table
-    * (tools.InPushdownProbe, 0.69 → 0.29 s). The threshold is NOT
+    * (tools.InPushdownProbe, 0.69 → 0.29 s; SURVEY §6.8, source at
+    * 0791305). The threshold is NOT
     * 10000 (round 12's value): a pushed IN is a literal-count-deep
     * recursive Or tree, and past ~2k literals it overflows the task
     * stack — see [[InScanChunk]]; large probe sets are chunked into
@@ -73,13 +75,23 @@ object GraftSession {
     spark
   }
 
-  /** A local session with graft fully wired (the shape Verify/Bench/
-    * Explain run): extensions injected at build time, functions
-    * registered, shuffle partitions = cores. Fails fast if a session
-    * already exists in the JVM — getOrCreate would silently hand that
-    * session back with every config here ignored (no extensions, wrong
-    * shuffle width), breaking the "extensions injected at build time"
-    * contract; callers with an existing session want [[configure]]. */
+  /** Cores for the registry mains (Bench, Verify, Explain, Inventory,
+    * JobProfile) and ScaleUpFresh: `SPARK_GRAFT_CPUS`, default 4. Read
+    * in this one place so the plans Explain prints are the plans Bench
+    * times. */
+  def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** A local session with graft fully wired (the shape every graft main
+    * runs): extensions injected at build time, functions registered,
+    * shuffle partitions = cores. The one place graft builds a session.
+    * A master that spark-submit already set (the `spark.master` system
+    * property) is kept, so the same main calibrates a real cluster;
+    * otherwise the session runs at `local[cores]`. Fails fast if a
+    * session already exists in the JVM — getOrCreate would silently
+    * hand that session back with every config here ignored (no
+    * extensions, wrong shuffle width), breaking the "extensions
+    * injected at build time" contract; callers with an existing
+    * session want [[configure]]. */
   def local(cores: Int): SparkSession = {
     // check BOTH slots: a stopped thread-local active session must not
     // mask a live default session (getOrCreate would return the latter)
@@ -92,8 +104,9 @@ object GraftSession {
         "the extension stack. Use GraftSession.configure(session) instead, " +
         "or stop the existing session first.")
     }
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
+    val builder = SparkSession.builder()
+    val s = (if (sys.props.contains("spark.master")) builder
+             else builder.master(s"local[$cores]"))
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")

@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Introspection main: prints the operator inventory (name, oracle
   * coverage, output schema) so SURVEY §2 can be cross-checked against
   * the code mechanically. Usage: runMain graft.Inventory [sfDir]. */
 object Inventory {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
     val oracle = SparkEntry.oracleSql.keySet
     println(f"${"query"}%-24s ${"oracle"}%-7s columns")

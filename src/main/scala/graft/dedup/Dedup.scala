@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Num.rnd
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
+import graft.functions.{Registry, VectorFunctions}
 
 /** Deduplication suite for a training-data pipeline.
   *
@@ -340,8 +340,8 @@ object Dedup {
     * est_jaccard could be computed inside the bucket. At 1.5M docs
     * that exchange entered the single-box spill regime and the entry
     * left linear (9.5× wall for 3× data) with bucket occupancy
-    * MEASURED flat (max 4, pair volume exactly 3.0× — tools.
-    * MinhashDiag), i.e. pure wire weight, not pair growth. Now only
+    * MEASURED flat (max 4, pair volume 3.0× — tools.MinhashDiag, SURVEY
+    * §6.5, source at 0791305): pure wire weight, not pair growth. Now only
     * doc_id rides the band shuffle (~32 B/row) and the signatures
     * join back onto the CANDIDATE PAIRS — a frame ~N/20th the band
     * rows — from the sig frame pinned once (lazy localCheckpoint, the
@@ -973,7 +973,7 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs, blocked by label. */
   def embedCosine(spark: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.register(spark)
+    Registry.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
     val a = e.select(col("label"), col("vec_id").as("id_a"),
@@ -1003,7 +1003,7 @@ object Dedup {
     * corpus never self-pairs, and best-match is the same max(struct)
     * aggregate as ngramIncremental — no per-vector window sort. */
   def embedIncremental(spark: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.register(spark)
+    Registry.register(spark)
     embedIncrementalOn(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding")))
   }
@@ -1077,7 +1077,7 @@ object Dedup {
   def embedLshPairs(spark: SparkSession, e: DataFrame, bands: Int,
                     planesPerBand: Int, threshold: Double,
                     maxBucket: Int = 1024): DataFrame = {
-    VectorFunctions.register(spark)
+    Registry.register(spark)
     val banded = e
       .select(col("vec_id"), col("embedding"),
               posexplode(VectorFunctions.hyperplaneBands(
@@ -1155,7 +1155,7 @@ object Dedup {
     * always co-clustered and emitted. */
   def semantic(spark: SparkSession, dir: String,
                thr: Double = 0.99): DataFrame = {
-    VectorFunctions.register(spark)
+    Registry.register(spark)
     semanticPairs(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
       k = 16, iters = 3, thr = thr)

@@ -1,66 +1,73 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.functions.expressions.{BloomFileMightContain, BoundedBucket, DeflateLength, DotProduct, FreqItemsSketch, HyperplaneBands, MinHashSignature, SimHashSignature, UnicodeNormalize}
 
-/** Per-session registration of graft's native Catalyst expressions.
-  * Idempotent; the function registry is the supported route to custom
-  * expressions (the public Column API has no expression constructor). */
+/** graft's native Catalyst expressions as SQL functions. [[functions]]
+  * is the one name → builder list: [[register]] binds it on an
+  * existing session, and graft.GraftExtensions injects the same list
+  * through the SparkSessionExtensions SPI. The function registry is the
+  * supported route to custom expressions (the public Column API has no
+  * expression constructor). */
 object Registry {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSignature(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hplane_bands", HyperplaneBands.build, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHashSignature(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_freq_items", FreqItemsSketch.build, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bounded_bucket", BoundedBucket.build, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_deflate_len", exprs => DeflateLength(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_normalize", { exprs =>
-        val form = if (exprs.length < 2) "NFC" else exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(s, _)
-              if s != null => s.toString
-          case _ => throw new IllegalArgumentException(
-            "graft_normalize form must be a string literal")
-        }
-        UnicodeNormalize(exprs.head, form)
-      }, "built-in")
+
+  /** One SQL function: its name, the expression class it builds (shown
+    * by DESCRIBE FUNCTION) and the builder. */
+  final case class Fn(name: String, exprClass: Class[_],
+                      build: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(exprClass.getName, name)
+  }
+
+  val functions: Seq[Fn] = Seq(
+    Fn("graft_dot", classOf[DotProduct], exprs => DotProduct(exprs(0), exprs(1))),
+    Fn("graft_minhash_sig", classOf[MinHashSignature],
+      exprs => MinHashSignature(exprs.head)),
+    Fn("graft_hplane_bands", classOf[HyperplaneBands], HyperplaneBands.build),
+    Fn("graft_simhash", classOf[SimHashSignature],
+      exprs => SimHashSignature(exprs.head)),
+    Fn("graft_freq_items", classOf[FreqItemsSketch], FreqItemsSketch.build),
+    Fn("graft_bounded_bucket", classOf[BoundedBucket], BoundedBucket.build),
+    Fn("graft_deflate_len", classOf[DeflateLength],
+      exprs => DeflateLength(exprs.head)),
+    Fn("graft_normalize", classOf[UnicodeNormalize], { exprs =>
+      val form = if (exprs.length < 2) "NFC" else exprs(1) match {
+        case Literal(s, _) if s != null => s.toString
+        case _ => throw new IllegalArgumentException(
+          "graft_normalize form must be a string literal")
+      }
+      UnicodeNormalize(exprs.head, form)
+    }),
     // Spark's own bloom-filter pair (the expressions behind runtime
     // row-level filtering, SPARK-32268) exposed under graft names —
     // they are not in the public FunctionRegistry. The aggregate is
     // MERGEABLE (map-side partial combine), which is what makes a
     // persistent dedup membership index maintainable incrementally.
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_agg", { exprs =>
-        if (exprs.length != 3) throw new IllegalArgumentException(
-          s"graft_bloom_agg expects (xxhash64 value, est_items, num_bits), " +
-          s"got ${exprs.length} arguments")
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_might_contain", { exprs =>
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          s"graft_might_contain expects (bloom, xxhash64 value), " +
-          s"got ${exprs.length} arguments")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_probe", { exprs =>
-        if (exprs.length != 3) throw new IllegalArgumentException(
-          s"graft_bloom_probe expects (sidecar dir, shards, xxhash64 " +
-          s"value), got ${exprs.length} arguments")
-        BloomFileMightContain(exprs(0), exprs(1), exprs(2))
-      }, "built-in")
+    Fn("graft_bloom_agg", classOf[BloomFilterAggregate], { exprs =>
+      if (exprs.length != 3) throw new IllegalArgumentException(
+        s"graft_bloom_agg expects (xxhash64 value, est_items, num_bits), " +
+        s"got ${exprs.length} arguments")
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+    }),
+    Fn("graft_might_contain", classOf[BloomFilterMightContain], { exprs =>
+      if (exprs.length != 2) throw new IllegalArgumentException(
+        s"graft_might_contain expects (bloom, xxhash64 value), " +
+        s"got ${exprs.length} arguments")
+      BloomFilterMightContain(exprs(0), exprs(1))
+    }),
+    Fn("graft_bloom_probe", classOf[BloomFileMightContain], { exprs =>
+      if (exprs.length != 3) throw new IllegalArgumentException(
+        s"graft_bloom_probe expects (sidecar dir, shards, xxhash64 " +
+        s"value), got ${exprs.length} arguments")
+      BloomFileMightContain(exprs(0), exprs(1), exprs(2))
+    }),
+  )
+
+  /** Per-session registration of [[functions]]. Idempotent. */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    functions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.build, "built-in"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.expressions.DotProduct
@@ -11,16 +11,13 @@ import graft.functions.expressions.DotProduct
   * results are bit-identical to the DuckDB oracle's
   * CAST(... AS DOUBLE[]) + list_dot_product formulation.
   *
-  * `register` must run once per session before using these columns
-  * (the public Column API has no constructor for custom expressions;
-  * the function registry is the supported route).
+  * [[Registry.register]] must run once per session before using these
+  * columns (the public Column API has no constructor for custom
+  * expressions; the function registry is the supported route).
   */
 object VectorFunctions {
 
   private val FnName = "graft_dot"
-
-  /** Idempotent per-session registration of the native expressions. */
-  def register(spark: SparkSession): Unit = Registry.register(spark)
 
   /** Dot product (codegen'd); widens float elements to double. */
   def dot(a: Column, b: Column): Column = call_function(FnName, a, b)

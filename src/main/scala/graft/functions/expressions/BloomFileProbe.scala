@@ -17,7 +17,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * driver plan-weight at a mere 25 MB filter), and a scalar subquery
   * re-collects the bytes to the driver and re-broadcasts them every
   * micro-batch (measured 6.5 s/epoch at a 125 MB filter —
-  * tools.PregateDiag). Both costs scale with STATE, defeating the
+  * tools.PregateDiag, SURVEY §6.7, source at 0791305). Both costs
+  * scale with STATE, defeating the
   * point of a pregate. A delta sidecar, however, is immutable once its
   * commit marker exists — so each executor can load it ONCE from
   * storage and keep the deserialized filter for its lifetime: zero

@@ -30,9 +30,10 @@ import graft.functions.TextFunctions.reTokens
   * engines. Words carry a terminal "</w>" symbol (word-boundary
   * information survives in the merges, as in the paper).
   *
-  * Measured round-count bound (round 10, tools.BpeLadder on the 500k-doc
-  * crossover corpus, local[32]): K=256 merges in 43.2 s, K=1024 in
-  * 125.4 s — **~6–8 merge rounds/second**, sublinear in K because the
+  * Measured round-count bound (round 10, tools.BpeLadder — SURVEY §6.5,
+  * source at 0791305 — on the 500k-doc crossover corpus, local[32]):
+  * K=256 merges in 43.2 s, K=1024 in 125.4 s — **~6–8 merge
+  * rounds/second**, sublinear in K because the
   * per-round pair table shrinks as symbols merge; the cost is driver
   * job-scheduling round-trips (the dictionary itself was 3,100 words —
   * data is not the variable). At the measured rate a 30k-merge
@@ -132,8 +133,8 @@ object BpeVocab {
     * engine-independent, stable across runs — so the sampled
     * vocabulary is as reproducible as the full one.
     *
-    * What sampling buys, MEASURED (tools.BpeSampleAgreement, K=256,
-    * SURVEY §6.6): the corpus-sized word-count pass and the per-round
+    * What sampling buys, MEASURED (tools.BpeSampleAgreement at 0791305,
+    * K=256, SURVEY §6.6): the corpus-sized word-count pass and the per-round
     * dictionary shrink by 16/keep16 — the data-dependent terms, which
     * at 100 TB are the whole cost — while the K sequential argmax
     * rounds remain (wall 1.4–1.9× at this toy scale because rounds

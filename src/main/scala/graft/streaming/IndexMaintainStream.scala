@@ -320,9 +320,9 @@ object IndexMaintainStream {
     * the DEFAULT task-side and the filter silently clamps to 64 Mbit
     * (the 300M-seed rung shipped 1e8-key shards in 64 Mbit = FPP ~1,
     * turning the pregate into a full-state semi join every epoch;
-    * tools.BloomClampProbe pins the propagation difference). Small
-    * shards also bound the build's per-group buffers and each
-    * executor-cache load at any state size. */
+    * tools.BloomClampProbe pinned the propagation difference — SURVEY
+    * §6.7, source at 0791305). Small shards also bound the build's
+    * per-group buffers and each executor-cache load at any state size. */
   private val BloomShardItems = 4000000L
 
   /** Build + write a SHARDED bloom sidecar over the rows of
@@ -350,11 +350,11 @@ object IndexMaintainStream {
     * O(plan-literal path bytes), not O(filter bytes) (the collected-
     * literal and scalar-subquery alternatives both re-ship the filter
     * every epoch — measured 4–6.5 s/epoch at 25–125 MB filters,
-    * tools.PregateDiag). Per-epoch sidecars are batch-sized (S = 1); a
-    * compaction's state-sized rebuild is amortized over its cadence.
-    * Density is size-dependent — [[TightBitsPerKey]] for batch-sized
-    * filters, [[StateBitsPerKey]] for state-sized — recorded in a
-    * `_bpk-<n>` marker file per sidecar dir. */
+    * tools.PregateDiag, SURVEY §6.7, source at 0791305). Per-epoch
+    * sidecars are batch-sized (S = 1); a compaction's state-sized
+    * rebuild is amortized over its cadence. Density is size-dependent —
+    * [[TightBitsPerKey]] for batch-sized filters, [[StateBitsPerKey]] for
+    * state-sized — recorded in a `_bpk-<n>` marker file per sidecar dir. */
   private[graft] def writeBloomSidecar(spark: SparkSession,
                                        srcParquet: String,
                                        bloomPath: String,

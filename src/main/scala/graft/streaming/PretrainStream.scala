@@ -72,8 +72,8 @@ import graft.operators.TextOps
   * obvious alternatives both re-ship the filter every epoch and were
   * measured off the table (parse-time literal ~4 s/epoch at a 25 MB
   * filter; scalar subquery 6.5 s/epoch at 125 MB —
-  * tools.PregateDiag). Compaction rebuilds ONE bloom over the folded
-  * hash set
+  * tools.PregateDiag, SURVEY §6.7, source at 0791305). Compaction
+  * rebuilds ONE bloom over the folded hash set
   * (sized to its count, conf clamp caps raised — the
   * bloomIncrementalOn lesson) so the probe cost stays O(#deltas)
   * bounded by compaction cadence. Pre-bloom roots (deltas without the

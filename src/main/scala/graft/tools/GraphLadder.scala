@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale ladder for the iterative/self-join graph kernels — the one
@@ -33,19 +33,13 @@ import org.apache.spark.sql.functions._
 object GraphLadder {
   def main(args: Array[String]): Unit = {
     val e = if (args.length > 0) args(0).toLong else 1000000L
-    val cpus = if (args.length > 1) args(1) else "32"
+    val cpus = if (args.length > 1) args(1).toInt else 32
     val kernels: Set[String] =
       if (args.length > 2 && args(2).nonEmpty && args(2) != "all")
         args(2).split(",").map(_.trim).toSet
       else Set("pagerank", "label_prop", "degree_hist", "triangles")
     val runs = if (args.length > 3) args(3).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val n = math.max(100L, e / 10) // 10 edges/node on average
 

@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dev-only profiling harness (r13 optimization round): run queries
   * under the Bench session shape and report the SCHEDULING footprint —
@@ -30,16 +29,8 @@ object JobProfile {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.configure(spark)
 
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong

@@ -1,14 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** FRESH-CONTENT scaling-audit generator — the complement of
-  * [[ScaleUp]] (round 7, closing the round-6 verdict's methodology
-  * caveat): ScaleUp replicates documents/embeddings VERBATIM, so the
-  * ~sf1 corpus is a mass-duplicate stress where distinct-content
-  * cardinality stays constant and every pair generator's output grows
-  * ~quadratically in clone count. A TRUE larger SF instead grows the
+/** FRESH-CONTENT scaling-audit generator (round 7, closing the
+  * round-6 verdict's methodology caveat). The round-5 generator
+  * tools.ScaleUp (SURVEY §6.1, source at 0791305) replicated
+  * documents/embeddings VERBATIM, so its ~sf1 corpus was a
+  * mass-duplicate stress where distinct-content cardinality stays
+  * constant and every pair generator's output grows ~quadratically in
+  * clone count. A TRUE larger SF instead grows the
   * number of DISTINCT documents/vectors (more vocabulary, more LSH
   * buckets, more clusters — different shuffle/window behavior), with
   * duplicate mass growing only LINEARLY (each replica carries the
@@ -25,8 +26,9 @@ import org.apache.spark.sql.functions._
   *    drift sin(7i + d)/8 — distinct vectors with preserved scale;
   *    replica 0 stays verbatim. (A corpus-level shift per replica is
   *    the natural structure of a source/domain-partitioned corpus.)
-  *  - keyed tables replicate with the same per-domain strides as
-  *    ScaleUp (FK-consistent).
+  *  - keyed tables replicate with one stride per key domain
+  *    (FK-consistent), fixed-size dimensions (region, nation) copy
+  *    as-is.
   *
   * Usage: runMain graft.tools.ScaleUpFresh [srcDir dstDir replicas]
   */
@@ -35,12 +37,7 @@ object ScaleUpFresh {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/root/repo/.scratch/sf1f"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
@@ -74,7 +71,7 @@ object ScaleUpFresh {
     // Name#%09d convention), so replica entities are genuinely NEW
     // entities — identical names across replicas would recreate the
     // clone pathology inside name-blocked matching (etl_entity_match's
-    // blocks would grow ~quadratically, which is ScaleUp's regime)
+    // blocks would grow ~quadratically, which is the clone regime)
     def rekeyName(nameCol: String, prefix: String, keyCol: String)
         (d: DataFrame, i: Int): DataFrame =
       if (i == 0) d

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale ladder for the stateful streaming consumers — the per-EPOCH
@@ -51,23 +51,14 @@ object StreamLadder {
     val perEpoch = if (args.length > 1) args(1).toLong else 20000L
     val pregate = if (args.length > 2) args(2).toBoolean else true
     val compactEvery = if (args.length > 3) args(3).toInt else 0
-    val cpus = if (args.length > 4) args(4) else "32"
+    val cpus = if (args.length > 4) args(4).toInt else 32
     val mode = if (args.length > 5) args(5) else "pretrain"
     val seedKeys = if (args.length > 6) args(6).toLong else 0L
-    // honor an externally-supplied master (spark-submit sets the
-    // spark.master system property) so the SAME binary calibrates a
-    // real cluster — the README's pregate-crossover recipe; local
-    // otherwise
-    val builder0 = SparkSession.builder()
-    val spark = (if (sys.props.contains("spark.master")) builder0
-                 else builder0.master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // an externally-supplied master (spark-submit) is kept by the
+    // factory, so the SAME binary calibrates a real cluster — the
+    // README's pregate-crossover recipe
+    val spark = graft.GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.configure(spark)  // registry + serve confs
     import spark.implicits._
 
     val root = java.nio.file.Files
@@ -102,7 +93,7 @@ object StreamLadder {
       // with cpus-many state-sized buckets — same lesson as
       // IndexMaintainStream.compactedFileCount, applied pre-commit
       // because the seed bypasses compaction)
-      val seedFiles = math.max(cpus.toInt,
+      val seedFiles = math.max(cpus,
         math.min(4096L, seedKeys / 4000000L + 1L).toInt)
       val committed = graft.streaming.IndexMaintainStream
         .commitBatch(spark, root, "batch=0") { staging =>

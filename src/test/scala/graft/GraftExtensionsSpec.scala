@@ -13,16 +13,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * is reused and never stopped. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("extensions SPI binds graft_dot and graft_minhash_sig in SQL") {
+  private def withSpiSession(body: SparkSession => Unit): Unit = {
     val prior = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      val spark = SparkSession.builder()
+      body(SparkSession.builder()
         .master("local[2]")
         .withExtensions(new GraftExtensions)
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
+        .getOrCreate())
+    } finally {
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
+  test("extensions SPI binds graft_dot and graft_minhash_sig in SQL") {
+    withSpiSession { spark =>
       val dot = spark.sql(
         "SELECT graft_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D))")
         .collect().head.getDouble(0)
@@ -36,11 +46,20 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .collect().head.getSeq[Long](0)
       assert(bands.length === 4)
       assert(bands.forall(b => b >= 0 && b < 256))
-    } finally {
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
+    }
+  }
+
+  test("extensions SPI binds every Registry function (one list, two routes)") {
+    withSpiSession { spark =>
+      val names = functions.Registry.functions.map(_.name)
+      assert(names.distinct.size === names.size)
+      val missing = names.filterNot(n => spark.catalog.functionExists(n))
+      assert(missing.isEmpty, s"not bound on an SPI-only session: $missing")
+      // resolution, not just a catalog entry: the SPI builders run
+      assert(spark.sql("SELECT graft_normalize('e\u0301')")
+        .collect().head.getString(0) === "\u00e9")
+      assert(spark.sql("SELECT graft_bounded_bucket(id, 2) FROM range(5)")
+        .schema.nonEmpty)
     }
   }
 }

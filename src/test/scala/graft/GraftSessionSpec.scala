@@ -20,6 +20,7 @@ class GraftSessionSpec extends AnyFunSuite {
       // session defaults the operators assume
       assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
       assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+      assert(spark.conf.get("spark.master") === "local[2]")
       // an operator runs end-to-end on the factory session
       import spark.implicits._
       val scored = Seq(("a", 1L, 2.0), ("a", 2L, 9.0), ("a", 3L, 5.0))
@@ -28,6 +29,36 @@ class GraftSessionSpec extends AnyFunSuite {
         .collect().map(_.getLong(1)).toSet
       assert(top === Set(2L, 3L))
     } finally {
+      prior.foreach { p =>
+        SparkSession.setDefaultSession(p)
+        SparkSession.setActiveSession(p)
+      }
+    }
+  }
+
+  test("GraftSession.local keeps a master that spark-submit set") {
+    // the JVM's one SparkContext is already up, so the new session
+    // reuses it; a builder.master(local[cores]) call would still land
+    // in the session's own conf, which is what this checks
+    val ctxMaster = TestSpark.spark.sparkContext.master
+    val cores = 7
+    assert(ctxMaster !== s"local[$cores]")
+    val prior = SparkSession.getDefaultSession
+    val priorMaster = sys.props.get("spark.master")
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    sys.props("spark.master") = "local[3]"
+    try {
+      val spark = GraftSession.local(cores)
+      assert(spark.conf.get("spark.master") === ctxMaster)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === cores.toString)
+    } finally {
+      priorMaster match {
+        case Some(m) => sys.props("spark.master") = m
+        case None    => sys.props.remove("spark.master")
+      }
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
       prior.foreach { p =>
         SparkSession.setDefaultSession(p)
         SparkSession.setActiveSession(p)

@@ -336,7 +336,7 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.VectorFunctions.register(spark)
+    graft.functions.Registry.register(spark)
     val dir = "/root/testdata/sf0.001"
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // frozen model — trained once offline, shared by stream and cold path

@@ -88,27 +88,30 @@ class SearchIndexedSpec extends AnyFunSuite {
     // copy of query 1's vector lands in query 1's own coarse cell
     // (argmin determinism), every probe set includes that cell, and the
     // duplicate's per-subspace codes attain the per-subspace LUT maxima,
-    // so NO served candidate may out-score it. A serve rewrite that
+    // so NO scored candidate may out-score it. A serve rewrite that
     // drops the query's own cell (the r13 probed-cell narrowing made
-    // that the live risk) fails this loudly.
+    // that the live risk) fails this loudly. k = corpus size keeps
+    // every scored candidate of query 1, so the check holds the
+    // duplicate against all of them, not only the ones that survive a
+    // top-k cut where equal PQ codes tie.
     import graft.similarity.{AnnIndex, Knn}
-    functions.VectorFunctions.register(spark)
+    functions.Registry.register(spark)
     val e = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
     val dup = e.filter(col("vec_id") === 1L)
       .select(lit(100001L).as("vec_id"), col("embedding"))
     val planted = e.unionByName(dup)
     val (cbooks, coarse) = Knn.ivfPqFit(planted)
     val codes = AnnIndex.ivfPqAdd(planted, cbooks, coarse)
-    val served = Knn.ivfPqServe(spark, planted, k = 10, nprobe = 3,
-      cbooks, coarse, codes)
+    val scored = Knn.ivfPqServe(spark, planted, k = planted.count().toInt,
+      nprobe = 3, cbooks, coarse, codes)
       .filter(col("query_id") === 1L).collect()
-    assert(served.nonEmpty)
-    val dupRow = served.find(_.getAs[Long]("neighbor_id") == 100001L)
+    assert(scored.length > 10, "k = corpus size must keep every candidate")
+    val dupRow = scored.find(_.getAs[Long]("neighbor_id") == 100001L)
     assert(dupRow.isDefined,
-      "planted exact duplicate missing from its own query's serve")
-    val maxScore = served.map(_.getAs[Double]("adc_score")).max
+      "planted exact duplicate missing from its own query's candidates")
+    val maxScore = scored.map(_.getAs[Double]("adc_score")).max
     assert(dupRow.get.getAs[Double]("adc_score") === maxScore,
-      "planted duplicate must attain the served ADC maximum")
+      "planted duplicate must attain the ADC maximum over all scored candidates")
   }
 
   test("serving the pre-filtered query frame ≡ serving all queries then filtering (row identity)") {
@@ -117,7 +120,7 @@ class SearchIndexedSpec extends AnyFunSuite {
     // so narrowing the served query set (and with it the pushed
     // probed-cell IN) never changes a surviving query's rows
     import graft.similarity.{AnnIndex, Knn}
-    functions.VectorFunctions.register(spark)
+    functions.Registry.register(spark)
     val e = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
     val (cbooks, coarse, codes) = AnnIndex.ivfPqCached(spark, Sf)
     def rows(df: org.apache.spark.sql.DataFrame) =

@@ -23,7 +23,7 @@ class TrainPinSpec extends AnyFunSuite {
   import TestSpark._
 
   private def emb() = {
-    functions.VectorFunctions.register(spark)
+    functions.Registry.register(spark)
     Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
   }
 
