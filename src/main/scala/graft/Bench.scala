@@ -56,6 +56,14 @@ object Bench {
       s" availProcs=${Runtime.getRuntime.availableProcessors}" +
       s" master=${spark.sparkContext.master}" +
       s" loadAvg=${java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage}")
+    // ...and every spark.* conf the session runs under that is not a
+    // default (factory confs, spark-submit/--conf and -D injections),
+    // minus the per-run identifiers
+    val perRun = Set("spark.app.id", "spark.app.startTime", "spark.app.submitTime",
+      "spark.driver.host", "spark.driver.port", "spark.executor.id")
+    System.err.println("[bench] conf: " + spark.conf.getAll.toSeq
+      .filter { case (k, _) => k.startsWith("spark.") && !perRun(k) }
+      .sorted.map { case (k, v) => s"$k=$v" }.mkString(" "))
     // Warm the JVM/codegen/parquet-reader paths once so the first timed
     // query doesn't carry session bring-up cost.
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -35,6 +35,16 @@ object CheckpointBlocks {
     ).toOption
   }
 
+  /** `df` pinned by a lazy localCheckpoint, materialized together with
+    * its row count in ONE job: an RDD count over the checkpointed RDD
+    * computes and stores every partition's blocks, where
+    * `Dataset.count` would add an aggregate's shuffle stage. Release
+    * the returned frame with [[free]]. */
+  def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val pinned = df.localCheckpoint(false)
+    (pinned, checkpointedRdd(pinned).fold(pinned.count())(_.count()))
+  }
+
   /** Release the blocks `df`'s localCheckpoint pinned (no-op when the
     * frame is not a checkpointed leaf). Non-blocking. */
   def free(df: DataFrame): Unit =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-import graft.functions.expressions.{BloomFileMightContain, BoundedBucket, DeflateLength, DotProduct, FreqItemsSketch, HyperplaneBands, MinHashSignature, SimHashSignature, UnicodeNormalize}
+import graft.functions.expressions.{BloomFileMightContain, BoundedBucket, DeflateLength, DotProduct, FreqItemsSketch, GramCounts, HyperplaneBands, MinHashSignature, SimHashSignature, UnicodeNormalize}
 
 /** graft's native Catalyst expressions as SQL functions. [[functions]]
   * is the one name → builder list: [[register]] binds it on an
@@ -32,6 +32,8 @@ object Registry {
     Fn("graft_bounded_bucket", classOf[BoundedBucket], BoundedBucket.build),
     Fn("graft_deflate_len", classOf[DeflateLength],
       exprs => DeflateLength(exprs.head)),
+    Fn("graft_gram_counts", classOf[GramCounts],
+      exprs => GramCounts(exprs.head)),
     Fn("graft_normalize", classOf[UnicodeNormalize], { exprs =>
       val form = if (exprs.length < 2) "NFC" else exprs(1) match {
         case Literal(s, _) if s != null => s.toString

@@ -145,13 +145,13 @@ object TextOps {
 
   /** Quality gate + Gopher repetition gate — the full per-document
     * admission predicate (no cross-document state), shared between the
-    * batch flagship and the streaming twin. */
+    * batch flagship and the streaming twin. Both gates are per-row
+    * predicates over the same scan (the repetition gate is
+    * [[notRepetitive]]): the plan is map-only, with no exchange, no
+    * join and no window. */
   def cleanDocs(docs: DataFrame): DataFrame = {
-    val gated = gateDocs(docs)
-    val rep = repetitionMetrics(gated.select(col("doc_id"), col("text")))
-    gated.join(rep, Seq("doc_id"), "left")
-      .filter(!(coalesce(col("top_bigram_frac"), lit(0.0)) > 0.18 ||
-                coalesce(col("dup_trigram_frac"), lit(0.0)) > 0.30))
+    graft.functions.Registry.register(docs.sparkSession)
+    gateDocs(docs).filter(notRepetitive(col("text")))
   }
 
   /** The deterministic md5 holdout coin (bucket 0-15; 15 = held out). */
@@ -205,7 +205,7 @@ object TextOps {
 
   /** The WHOLE pretraining prep chain as one composed plan — the
     * flagship LLM-data query: C4-style quality gate (map-only) →
-    * Gopher repetition gate (shared repetitionMetrics core) →
+    * Gopher repetition gate (map-only, graft_gram_counts) →
     * exact-dedup keepers (one content-hash shuffle) → benchmark
     * decontamination (anti-join against dedup.Dedup.contamination's
     * flagged training docs; the eval md5-bucket itself never trains) →
@@ -417,61 +417,64 @@ object TextOps {
     * trigram occurrences that are duplicates (1 − distinct/total).
     * A doc is `repetitive` past the paper-ish thresholds (0.18 / 0.30).
     *
-    * Shape: one posexplode + one doc-partitioned window builds both
-    * gram widths in a single pass (no second pipeline, no self-join
-    * recompute), then both metrics aggregate from ONE exploded
-    * (doc, width, gram) stream: count per gram, then per-doc max/sum —
-    * every aggregate is hash-based with map-side partial combine, never
-    * a per-doc sort. At 100 TB this is the same two-shuffle profile as
-    * word count. */
+    * Shape: the per-document gram counts come from one native
+    * expression (graft_gram_counts) over the regex tokens, so the
+    * metric is a map-only projection of the scan; the presentation sort
+    * is the plan's only exchange. */
   def repetition(spark: SparkSession, dir: String): DataFrame =
     repetitionMetrics(Tables.documents(spark, dir))
       .select(col("doc_id"), col("n_bigrams"),
               col("top_bigram_frac"), col("dup_trigram_frac"),
-              (coalesce(col("top_bigram_frac"), lit(0.0)) > 0.18 ||
-               coalesce(col("dup_trigram_frac"), lit(0.0)) > 0.30)
-                .as("repetitive"))
+              col("repetitive"))
       .orderBy(col("doc_id"))
 
   /** Frame-level core (docs must have doc_id + text): per-doc repetition
-    * metrics, unsorted/unflagged — shared by text_repetition and the
-    * pretrain pipeline so thresholds can't silently diverge. */
+    * metrics with the `repetitive` flag, unsorted — shared with
+    * [[cleanDocs]] (the pretrain pipeline and its stream) through the
+    * same fractions and thresholds, so they can't silently diverge. A
+    * document with fewer than 2 tokens has no row; dup_trigram_frac is
+    * null below 3 tokens. */
   def repetitionMetrics(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val grams = docs
-      .select(col("doc_id"), posexplode(reTokens(col("text"))).as(Seq("pos", "w")))
-      .withColumn("w2", lead(col("w"), 1).over(byDoc))
-      .withColumn("w3", lead(col("w"), 2).over(byDoc))
-      .select(col("doc_id"), explode(array(
-        struct(lit(2).as("width"), concat_ws(" ", col("w"), col("w2")).as("gram"),
-               col("w2").isNotNull.as("ok")),
-        struct(lit(3).as("width"),
-               concat_ws(" ", col("w"), col("w2"), col("w3")).as("gram"),
-               col("w3").isNotNull.as("ok")))).as("g"))
-      .filter(col("g.ok"))
-      .select(col("doc_id"), col("g.width").as("width"), col("g.gram").as("gram"))
-    val perWidth = grams
-      .groupBy(col("doc_id"), col("width"), col("gram"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"), col("width"))
-      .agg(max(col("c")).as("top_c"), sum(col("c")).as("n"),
-           count(lit(1)).as("n_distinct"))
-    perWidth.groupBy(col("doc_id"))
-      .agg(
-        sum(when(col("width") === 2, col("n"))).as("n_bigrams"),
-        rnd(max(when(col("width") === 2, col("top_c") / col("n").cast("double"))), 4)
-          .as("top_bigram_frac"),
-        rnd(max(when(col("width") === 3,
-              lit(1.0) - col("n_distinct") / col("n").cast("double"))), 4)
-          .as("dup_trigram_frac"))
-      .select(col("doc_id"), coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-              col("top_bigram_frac"), col("dup_trigram_frac"),
-              (coalesce(col("top_bigram_frac"), lit(0.0)) > 0.18 ||
-               coalesce(col("dup_trigram_frac"), lit(0.0)) > 0.30)
-                .as("repetitive"))
-      .orderBy(col("doc_id"))
+    graft.functions.Registry.register(docs.sparkSession)
+    val (top, dup) = repetitionFracs(col("g"))
+    docs
+      .filter(size(reTokens(col("text"))) >= 2)
+      .select(col("doc_id"), gramCounts(col("text")).as("g"))
+      .select(col("doc_id"), col("g.n_bigrams").as("n_bigrams"),
+              top.as("top_bigram_frac"), dup.as("dup_trigram_frac"))
+      .withColumn("repetitive",
+        repetitive(col("top_bigram_frac"), col("dup_trigram_frac")))
   }
+
+  /** struct<n_bigrams, top_bigram_c, n_trigrams, distinct_trigrams> of
+    * the regex tokens of `text` (null under 2 tokens). */
+  private def gramCounts(text: Column): Column =
+    call_function("graft_gram_counts", reTokens(text))
+
+  /** (top_bigram_frac, dup_trigram_frac) from a [[gramCounts]] struct:
+    * Column arithmetic over the exact counts, rounded with [[rnd]];
+    * dup_trigram_frac is null without a trigram, both are null for a
+    * null struct. */
+  private def repetitionFracs(g: Column): (Column, Column) = (
+    rnd(g("top_bigram_c") / g("n_bigrams").cast("double"), 4),
+    when(g("n_trigrams") > 0,
+      rnd(lit(1.0) - g("distinct_trigrams") / g("n_trigrams").cast("double"), 4)))
+
+  /** [[cleanDocs]]' repetition gate as a scan predicate. It reads the
+    * gram counts through a one-element array so graft_gram_counts runs
+    * once per document: the filter is pushed below the projections into
+    * the scan, where a plain struct column would be re-inlined at each
+    * field reference. */
+  private def notRepetitive(text: Column): Column =
+    !exists(array(gramCounts(text)), { g =>
+      val (top, dup) = repetitionFracs(g)
+      repetitive(top, dup)
+    })
+
+  /** The Gopher thresholds; a missing fraction never trips its gate. */
+  private def repetitive(topBigramFrac: Column, dupTrigramFrac: Column): Column =
+    coalesce(topBigramFrac, lit(0.0)) > 0.18 ||
+      coalesce(dupTrigramFrac, lit(0.0)) > 0.30
 
   /** PII redaction — the scrub stage every pretraining pipeline runs
     * before anything leaves the ingest zone (emails/IPs/phones →

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Search, SearchIndex}
 import graft.similarity.{AnnIndex, Knn}
@@ -133,12 +134,25 @@ object IndexMaintainStream {
     (best, idOf("batch=").filter(_._2 > covers).sortBy(_._2))
   }
 
-  /** Union read of `table` across every visible delta. */
-  def readTable(spark: SparkSession, root: String, table: String): DataFrame = {
+  /** Union read of `table` across every visible delta, its schema
+    * inferred from the files (one Spark job per read). */
+  def readTable(spark: SparkSession, root: String, table: String): DataFrame =
+    spark.read.parquet(tablePaths(spark, root, table): _*)
+
+  /** Union read of `table` under the `schema` its writer declares — no
+    * inference job. Readers that must learn the schema from the files
+    * (a root's wire form, e.g. [[bm25WireFormOf]]) use the inferring
+    * overload. */
+  def readTable(spark: SparkSession, root: String, table: String,
+                schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(tablePaths(spark, root, table): _*)
+
+  private def tablePaths(spark: SparkSession, root: String,
+                         table: String): Seq[String] = {
     val (best, plain) = committed(spark, root)
     val paths = (best.toSeq ++ plain).map(p => s"${p._1}/$table")
     require(paths.nonEmpty, s"no committed deltas under $root")
-    spark.read.parquet(paths: _*)
+    paths
   }
 
   /** Visible delta dirs (newest compacted run first, then plain deltas
@@ -325,10 +339,13 @@ object IndexMaintainStream {
     * per-group buffers and each executor-cache load at any state size. */
   private val BloomShardItems = 4000000L
 
-  /** Build + write a SHARDED bloom sidecar over the rows of
-    * `srcParquet` (read back from staging — the mergeDocBatch
-    * precedent, so a batch is hashed once), keyed by `key` (must
-    * evaluate to a LONG — pass xxhash64(stringCol) for string keys).
+  /** Build + write a SHARDED bloom sidecar over the rows of `src`,
+    * keyed by `key` (must evaluate to a LONG — pass xxhash64(stringCol)
+    * for string keys). `rowCount` is `src`'s row count as the caller
+    * already knows it (PretrainStream counts in the job that pins its
+    * keepers; a caller holding only a written path passes
+    * `spark.read.schema(…).parquet(path)` and its count), so sizing
+    * runs no job of its own.
     * The sidecar is a DIRECTORY of `shard-<i>` files, each the
     * serialized filter (BloomFilterAggregate's byte format) over the
     * keys with floorMod(key, S) == i, S = ceil(est /
@@ -355,14 +372,13 @@ object IndexMaintainStream {
     * rebuild is amortized over its cadence. Density is size-dependent —
     * [[TightBitsPerKey]] for batch-sized filters, [[StateBitsPerKey]] for
     * state-sized — recorded in a `_bpk-<n>` marker file per sidecar dir. */
-  private[graft] def writeBloomSidecar(spark: SparkSession,
-                                       srcParquet: String,
+  private[graft] def writeBloomSidecar(src: DataFrame, rowCount: Long,
                                        bloomPath: String,
                                        key: org.apache.spark.sql.Column)
       : Unit = {
+    val spark = src.sparkSession
     graft.functions.Registry.register(spark)
-    val src = spark.read.parquet(srcParquet)
-    val est = math.max(src.count(), BloomFloorItems)
+    val est = math.max(rowCount, BloomFloorItems)
     // Batch-sized sidecars get the TIGHT density (aggregate probe FPP
     // is additive across accumulated deltas — see TightBitsPerKey);
     // state-sized ones keep the classic sizing, where bytes matter.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.functions.TextFunctions.normText
 import graft.operators.TextOps
@@ -98,13 +98,23 @@ import graft.operators.TextOps
   * gate chain. */
 object PretrainStream {
 
-  private def hashSchema =
+  /** The schemas the epoch writers declare: every stream-state read
+    * passes them instead of inferring one from the files (an inference
+    * is a Spark job per read), and the docs writer selects exactly
+    * `docsSchema`'s columns. Parquet reads every column back
+    * nullable. */
+  private val hashSchema =
     new StructType().add("norm_hash", StringType, nullable = true)
+  private val docsSchema = new StructType()
+    .add("doc_id", LongType, nullable = true)
+    .add("lang", StringType, nullable = true)
+    .add("n_words", LongType, nullable = true)
+    .add("text", StringType, nullable = true)
 
   /** Union of committed seen-hash deltas (empty frame before the first
     * commit). */
   private def priorHashes(spark: SparkSession, root: String): DataFrame =
-    try IndexMaintainStream.readTable(spark, root, "hashes")
+    try IndexMaintainStream.readTable(spark, root, "hashes", hashSchema)
     catch {
       case _: IllegalArgumentException =>
         spark.createDataFrame(
@@ -161,7 +171,7 @@ object PretrainStream {
     * map pass — md5 of the normalized text), not over `clean`: gates
     * can only SHRINK the batch, so every clean row's hash is among the
     * raw hashes and no-false-negatives is preserved, while the probe
-    * job skips re-evaluating the gate chain's windows. Extra positives
+    * job skips evaluating the gate chain's expressions. Extra positives
     * from gate-failing docs only pad the verify sliver. */
   /** Returns the first-seen frame plus the eagerly-checkpointed
     * positives frame when the pregate path pinned one — the CALLER
@@ -199,7 +209,8 @@ object PretrainStream {
           .collect().map(_.getString(0)).toSeq
         if (ph.isEmpty) (clean, Some(positives)) // every row definitely new
         else {
-          val state = spark.read.parquet(bloomed.map(d => s"$d/hashes"): _*)
+          val state = spark.read.schema(hashSchema)
+            .parquet(bloomed.map(d => s"$d/hashes"): _*)
           val confirmed =
             if (ph.length <= InPushdownCap)
               // chunked: one pushed IN per ≤InScanChunk literals — a
@@ -216,7 +227,8 @@ object PretrainStream {
     val out =
       if (legacy.isEmpty) afterBloomed
       else afterBloomed.join(
-        spark.read.parquet(legacy.map(d => s"$d/hashes"): _*),
+        spark.read.schema(hashSchema)
+          .parquet(legacy.map(d => s"$d/hashes"): _*),
         Seq("norm_hash"), "left_anti")
     (out, pinned)
   }
@@ -241,40 +253,43 @@ object PretrainStream {
     // (see DefaultPregateMinKeys); sidecars are still written so the
     // root is pregate-ready the moment committed state crosses
     val gated = pregateActive(spark, root, pregate, pregateMinKeys)
-    // the pregate's eagerly-checkpointed positives frame is released
-    // once the epoch's writes have consumed it (finally, so a failed
-    // epoch doesn't leak the blocks either)
-    var pinned: Option[DataFrame] = None
+    // the epoch's checkpointed frames (its keepers, and the pregate's
+    // positives) are released once the epoch's writes have consumed
+    // them (finally, so a failed epoch doesn't leak the blocks either)
+    var pinned = List.empty[DataFrame]
     try IndexMaintainStream.commitBatch(spark, root, s"batch=$epoch") {
         staging =>
       val clean = TextOps.cleanDocs(delivered)
         .withColumn("norm_hash", md5(normText(col("text"))))
       val (firstSeen, pin) = firstSeenOf(spark, root, delivered, clean, gated)
-      pinned = pin
+      pinned = pin.toList
       val byHash = Window.partitionBy(col("norm_hash")).orderBy(col("doc_id"))
-      // Consumed twice (hashes + docs). Recomputation is deterministic —
-      // row_number over (norm_hash, doc_id) is a total order — and the
-      // micro-batch plan is gate-sized, so re-evaluating beats pinning
-      // checkpoint blocks that would accumulate across epochs.
-      val keepers = firstSeen
-        .withColumn("rk", row_number().over(byHash))
-        .filter(col("rk") === 1)
+      // Consumed three times (hashes, bloom sidecar, docs), so the
+      // gate, dedup and window run ONCE: the keepers are pinned and
+      // counted in one job, the writers read the blocks, and the count
+      // sizes the sidecar. The pin is epoch-sized and freed below.
+      val (keepers, nKeepers) = graft.CheckpointBlocks.pinCounted(
+        firstSeen.withColumn("rk", row_number().over(byHash))
+          .filter(col("rk") === 1)
+          .select(col("norm_hash") +:
+            docsSchema.fieldNames.toSeq.map(col): _*))
+      pinned ::= keepers
       keepers.select(col("norm_hash"))
         .write.parquet(s"$staging/hashes")
-      if (pregate) IndexMaintainStream.writeBloomSidecar(spark,
-        s"$staging/hashes", s"$staging/bloom", xxhash64(col("norm_hash")))
+      if (pregate) IndexMaintainStream.writeBloomSidecar(keepers, nKeepers,
+        s"$staging/bloom", xxhash64(col("norm_hash")))
       keepers
         .filter(TextOps.holdoutCoin(col("doc_id")) =!= 15)
         .join(contaminated, col("doc_id") === col("train_doc_id"),
           "left_anti")
-        .select(col("doc_id"), col("lang"), col("n_words"), col("text"))
+        .select(docsSchema.fieldNames.toSeq.map(col): _*)
         .write.parquet(s"$staging/docs")
     } finally pinned.foreach(graft.CheckpointBlocks.free)
   }
 
   /** Start the firehose: `docs` is a streaming frame with at least
-    * (doc_id, lang, text). The accepted corpus and the seen-hash set
-    * accumulate under `root`. */
+    * (doc_id: long, lang, text). The accepted corpus and the seen-hash
+    * set accumulate under `root`. */
   def start(docs: DataFrame, contaminated: DataFrame, root: String,
             pregate: Boolean = true,
             pregateMinKeys: Long = DefaultPregateMinKeys): StreamingQuery =
@@ -288,7 +303,7 @@ object PretrainStream {
 
   /** The accepted corpus accumulated so far. */
   def acceptedDocs(spark: SparkSession, root: String): DataFrame =
-    IndexMaintainStream.readTable(spark, root, "docs")
+    IndexMaintainStream.readTable(spark, root, "docs", docsSchema)
 
   /** Fold accumulated per-epoch deltas into one compacted run —
     * thousands of micro-batches otherwise mean thousands of small
@@ -304,16 +319,16 @@ object PretrainStream {
   def compact(spark: SparkSession, root: String): Unit = {
     IndexMaintainStream.commitCompactedWith(spark, root) { stg =>
       graft.sinks.LakeSink.writeClustered(
-        IndexMaintainStream.readTable(spark, root, "hashes"),
+        IndexMaintainStream.readTable(spark, root, "hashes", hashSchema),
         s"$stg/hashes",
         // sized by input bytes — a hardcoded 1 was a single-task sort
         // of the whole seen-set (see compactedFileCount's scaladoc)
         IndexMaintainStream.compactedFileCount(spark, root, "hashes"),
         col("norm_hash"))
-      IndexMaintainStream.readTable(spark, root, "docs")
-        .write.parquet(s"$stg/docs")
-      IndexMaintainStream.writeBloomSidecar(spark,
-        s"$stg/hashes", s"$stg/bloom", xxhash64(col("norm_hash")))
+      acceptedDocs(spark, root).write.parquet(s"$stg/docs")
+      val folded = spark.read.schema(hashSchema).parquet(s"$stg/hashes")
+      IndexMaintainStream.writeBloomSidecar(folded, folded.count(),
+        s"$stg/bloom", xxhash64(col("norm_hash")))
     }
     IndexMaintainStream.dropCovered(spark, root)
   }

@@ -212,9 +212,12 @@ object SubstrStream {
       (if (form) SubstrDedup.gramsOfHashed(delivered, SubstrDedup.MinRun)
        else SubstrDedup.gramsOf(delivered, SubstrDedup.MinRun))
         .write.parquet(s"$staging/grams")
-      if (pregate) IndexMaintainStream.writeBloomSidecar(spark,
-        s"$staging/grams", s"$staging/bloom",
-        if (form) col("kh") else xxhash64(col("kg")))
+      if (pregate) {
+        val grams = spark.read.schema(gramSchema(form))
+          .parquet(s"$staging/grams")
+        IndexMaintainStream.writeBloomSidecar(grams, grams.count(),
+          s"$staging/bloom", if (form) col("kh") else xxhash64(col("kg")))
+      }
     } finally pinned.foreach(graft.CheckpointBlocks.free)
   }
 
@@ -269,9 +272,10 @@ object SubstrStream {
         col(gramKey(form)))
       IndexMaintainStream.readTable(spark, root, "spans")
         .write.parquet(s"$staging/spans")
-      IndexMaintainStream.writeBloomSidecar(spark,
-        s"$staging/grams", s"$staging/bloom",
-        if (form) col("kh") else xxhash64(col("kg")))
+      val grams = spark.read.schema(gramSchema(form))
+        .parquet(s"$staging/grams")
+      IndexMaintainStream.writeBloomSidecar(grams, grams.count(),
+        s"$staging/bloom", if (form) col("kh") else xxhash64(col("kg")))
     }
     IndexMaintainStream.dropCovered(spark, root)
   }

@@ -99,11 +99,13 @@ object StreamLadder {
         .commitBatch(spark, root, "batch=0") { staging =>
           // seeds write CLUSTERED by key — the steady-state layout (a
           // mature root is a compacted root, and compaction clusters)
+          // the sidecar is built from the same generated keys, whose
+          // row count is seedKeys by construction
           if (mode == "substr") {
+            val grams = spark.range(seedKeys)
+              .select(xxhash64(concat(lit("seedg"), col("id"))).as("kh"))
             graft.sinks.LakeSink.writeClustered(
-              spark.range(seedKeys)
-                .select(xxhash64(concat(lit("seedg"), col("id"))).as("kh")),
-              s"$staging/grams", seedFiles, col("kh"))
+              grams, s"$staging/grams", seedFiles, col("kh"))
             // 0-row spans THROUGH the real probe, so the seed delta's
             // schema is exactly what the stream writes
             graft.dedup.SubstrDedup.probeSpansHashed(
@@ -113,21 +115,20 @@ object StreamLadder {
                 graft.dedup.SubstrDedup.MinRun)
               .withColumn("epoch", lit(0L)).write.parquet(s"$staging/spans")
             if (pregate) graft.streaming.IndexMaintainStream
-              .writeBloomSidecar(spark, s"$staging/grams",
-                s"$staging/bloom", col("kh"))
+              .writeBloomSidecar(grams, seedKeys, s"$staging/bloom",
+                col("kh"))
           } else {
+            val hashes = spark.range(seedKeys)
+              .select(md5(concat(lit("seed"), col("id"))).as("norm_hash"))
             graft.sinks.LakeSink.writeClustered(
-              spark.range(seedKeys)
-                .select(md5(concat(lit("seed"), col("id")))
-                  .as("norm_hash")),
-              s"$staging/hashes", seedFiles, col("norm_hash"))
+              hashes, s"$staging/hashes", seedFiles, col("norm_hash"))
             spark.range(0).select(col("id").as("doc_id"),
                 lit("en").as("lang"), lit(0L).as("n_words"),
                 lit("").as("text"))
               .write.parquet(s"$staging/docs")
             if (pregate) graft.streaming.IndexMaintainStream
-              .writeBloomSidecar(spark, s"$staging/hashes",
-                s"$staging/bloom", xxhash64(col("norm_hash")))
+              .writeBloomSidecar(hashes, seedKeys, s"$staging/bloom",
+                xxhash64(col("norm_hash")))
           }
         }
       println(s"""{"tool":"stream_ladder","seed_keys":$seedKeys,""" +

@@ -447,9 +447,8 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     // rate over fresh keys must stay near the designed 1%.
     val root = tmp("bloomshard")
     val n = 9000000L // → 3 shards of ≤4M keys each
-    spark.range(n).select(xxhash64(col("id")).as("k"))
-      .write.parquet(s"$root/keys")
-    IndexMaintainStream.writeBloomSidecar(spark, s"$root/keys",
+    IndexMaintainStream.writeBloomSidecar(
+      spark.range(n).select(xxhash64(col("id")).as("k")), n,
       s"$root/bloom", col("k"))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -488,10 +487,9 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val sidecars = (0 until 32).map { d =>
-      spark.range(20000).select(
-          xxhash64(concat(lit(s"delta$d-"), col("id"))).as("k"))
-        .write.parquet(s"$root/d$d/keys")
-      IndexMaintainStream.writeBloomSidecar(spark, s"$root/d$d/keys",
+      IndexMaintainStream.writeBloomSidecar(
+        spark.range(20000).select(
+          xxhash64(concat(lit(s"delta$d-"), col("id"))).as("k")), 20000L,
         s"$root/d$d/bloom", col("k"))
       s"$root/d$d/bloom"
     }
@@ -524,12 +522,11 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     val root = tmp("bpkest")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    spark.range(100000).select(xxhash64(col("id")).as("k"))
-      .write.parquet(s"$root/keys")
+    val keys = spark.range(100000).select(xxhash64(col("id")).as("k"))
     // two committed deltas with identical tight sidecars, one stripped
     // of its marker to stand in for a pre-marker legacy dir
     Seq(0, 1).foreach { b =>
-      IndexMaintainStream.writeBloomSidecar(spark, s"$root/keys",
+      IndexMaintainStream.writeBloomSidecar(keys, 100000L,
         s"$root/batch=$b/bloom", col("k"))
       fs.create(new org.apache.hadoop.fs.Path(s"$root/batch=$b/_COMMIT"),
         true).close()

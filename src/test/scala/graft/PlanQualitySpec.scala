@@ -175,19 +175,33 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(plan.contains("TopKPerKeyPartial"), plan.take(3000))
   }
 
-  test("text_repetition reuses the gram window's partitioning for all aggs") {
+  test("text_repetition: the presentation sort is the only exchange") {
     val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      // window shuffle on doc_id + final presentation sort = the only
-      // two exchanges; all three aggregation levels must reuse the
-      // doc_id hash partitioning (doc_id ⊆ every grouping key)
+      // the gram counts are a per-row expression, so the metric is a
+      // map-only projection of the scan; only the doc_id ordering
+      // shuffles
       val plan = operators.TextOps.repetition(spark, Sf)
         .queryExecution.executedPlan
       val exchanges = plan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
       }
-      assert(exchanges.length <= 2, plan.toString.take(3000))
+      assert(exchanges.length <= 1, plan.toString.take(3000))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
+  }
+
+  test("cleanDocs plans map-only: no exchange, no join, no window") {
+    val prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = operators.TextOps.cleanDocs(Tables.documents(spark, Sf))
+        .queryExecution.executedPlan
+      assert(plan.collectFirst {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }.isEmpty, plan.toString.take(3000))
     } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
   }
 

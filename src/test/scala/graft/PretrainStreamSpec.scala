@@ -224,6 +224,18 @@ class PretrainStreamSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.keySet === before,
       "each epoch's eagerly-checkpointed positives must be released " +
       "(Dataset.unpersist would not do it — CheckpointBlocks does)")
+    // the below-crossover default (pregateMinKeys unset → naive
+    // anti-join) pins only the epoch's keepers, which must be gone
+    // after every epoch too
+    (4 to 6).foreach { ep =>
+      val base = ep * 30L
+      streaming.PretrainStream.processBatch(
+        (base until base + 30L)
+          .map(i => doc(i, if (i % 3 == 0) i - 30L else i)).toDF(),
+        empty, root, ep.toLong)
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before,
+        s"default-path epoch $ep must release its pinned keepers")
+    }
   }
 
   test("bloom sidecar rides every delta, survives compaction, and " +
