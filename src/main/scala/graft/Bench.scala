@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Benchmark protocol (defensible by construction):
   *  - queries run in sorted-name order, so rounds are order-comparable
   *    even as entries are added;
@@ -24,6 +27,10 @@ package graft
   *  - failures are LOUD: a query that throws is reported as "err" in
   *    the JSON (with the exception in an `errors` map) and the process
   *    exits nonzero — a regression must never bench as a speedup.
+  *  - per query, stderr gets one `[bench] codegen` line: the classes
+  *    compiled and the compile ms of the first run and of the later
+  *    runs together. Later runs compile only what fell out of Spark's
+  *    generated-code cache or what changes from call to call;
   *  - a full-registry run also writes the JSON line to
   *    `BENCH_FULL.json` in the working directory, so a consumer that
   *    truncates long stdout lines still has the complete per-query
@@ -38,6 +45,12 @@ object Bench {
       case c if c < ' '  => " "
       case c             => c.toString
     }
+
+  /** Classes compiled and compile nanoseconds so far in this JVM
+    * (Spark's codegen metrics; a class served from the generated-code
+    * cache is not compiled again). */
+  private def codegen(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -78,7 +91,9 @@ object Bench {
     val results: Seq[(String, Either[String, (Double, Double)])] = names.map { name =>
       val fn = SparkEntry.queries(name)
       var err: Option[String] = None
-      val times = (1 to runs).map { _ =>
+      val compiles = Array.fill(runs)((0L, 0L))
+      val times = (0 until runs).map { run =>
+        val c0 = codegen()
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).queryExecution.toRdd.count() }
         catch { case e: Throwable =>
@@ -86,6 +101,8 @@ object Bench {
             .replace('\n', ' ').take(300))
         }
         val dt = (System.nanoTime() - t0) / 1e9
+        val c1 = codegen()
+        compiles(run) = (c1._1 - c0._1, c1._2 - c0._2)
         // free only the blocks THIS run pinned (checkpoints), never
         // state that existed before it
         spark.sparkContext.getPersistentRDDs
@@ -93,6 +110,10 @@ object Bench {
             if (!preexisting.contains(id)) rdd.unpersist(blocking = false) }
         dt
       }
+      val later = compiles.drop(1)
+      System.err.println(f"[bench] codegen $name: first ${compiles(0)._1} classes " +
+        f"${compiles(0)._2 / 1e6}%.1f ms, later ${later.map(_._1).sum} classes " +
+        f"${later.map(_._2).sum / 1e6}%.1f ms")
       val sortedTimes = times.sorted
       name -> err.toLeft((sortedTimes(times.size / 2), times.head))
     }

@@ -14,6 +14,17 @@ import graft.functions.Registry
   * Injects every function in [[graft.functions.Registry.functions]] —
   * the same list Registry.register binds on an existing session — plus
   * the TopKPerKey hint rule and planner strategy.
+  *
+  * An extension cannot size Spark's generated-code cache: it is a
+  * static conf that `CodeGenerator` reads once per JVM. Pass it with the
+  * job, as [[GraftSession.local]] sets it:
+  *
+  *   --conf spark.sql.codegen.cache.maxEntries=4096
+  *
+  * (4096 = [[GraftSession.CodegenCacheEntries]]; the same holds for the
+  * [[GraftSession.configure]] route). A JVM that builds several
+  * sessions, such as a test JVM, gets the size of whichever session
+  * generates code first.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

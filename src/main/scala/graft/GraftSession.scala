@@ -11,6 +11,9 @@ import org.apache.spark.sql.SparkSession
   * Cluster deployments that build their own session can instead pass
   * `--conf spark.sql.extensions=graft.GraftExtensions` (the SPI route —
   * identical bindings) or call [[configure]] on an existing session.
+  * Either route also passes
+  * `--conf spark.sql.codegen.cache.maxEntries=` [[CodegenCacheEntries]],
+  * which only a session's builder can set.
   */
 object GraftSession {
 
@@ -41,12 +44,33 @@ object GraftSession {
     * 0791305). */
   val InFilterThreshold: Int = InScanChunk * 2
 
+  /** Entries of Spark's per-JVM generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). A serving
+    * session runs many registry entries, and every entry whose classes
+    * fell out of the cache compiles them again inside its tasks: with
+    * 100 entries a warm pass over perfbench's 12-entry mix recompiled
+    * 338 classes. A cold pass over the whole registry compiles 2,706
+    * classes at sf0.1 and 2,670 at sf0.001 (the sum of Bench's
+    * `[bench] codegen` first-run counts under an unbounded cache); 4096
+    * holds 1.5× the larger, so a warm pass over any mix of entries
+    * compiles only the classes whose generated source changes between
+    * calls.
+    *
+    * A static conf: `CodeGenerator`'s static initializer reads it once
+    * per JVM (through `SQLConf.get`, from whichever session generates
+    * code first), so only a session built by [[local]] or a
+    * `--conf spark.sql.codegen.cache.maxEntries=` on spark-submit can
+    * set it; [[configure]] cannot. */
+  val CodegenCacheEntries: Int = 4096
+
   /** Apply graft's session-level requirements to an existing session:
     * native function registration (idempotent) plus the runtime confs
-    * the serve paths assume. Extensions (rule/strategy) can only be
-    * injected at build time — sessions not built via [[local]]/the SPI
-    * still run every operator, with TopKPerKey falling back to its
-    * logical form's window rewrite.
+    * the serve paths assume: the IN-pushdown threshold below, and
+    * `parquet.nanosAsLong`, so a TIMESTAMP(NANOS) `events.ts` reads as
+    * the raw int64 that graft.Tables.events rescales. Extensions
+    * (rule/strategy) can only be injected at build time — sessions not
+    * built via [[local]]/the SPI still run every operator, with
+    * TopKPerKey falling back to its logical form's window rewrite.
     *
     * `parquet.pushdown.inFilterThreshold = ` [[InFilterThreshold]]:
     * Spark pushes a literal IN to parquet as a REAL In predicate only
@@ -72,6 +96,7 @@ object GraftSession {
     val inKey = "spark.sql.parquet.pushdown.inFilterThreshold"
     if (spark.conf.get(inKey, "10") == "10")
       spark.conf.set(inKey, InFilterThreshold.toString)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
 
@@ -83,7 +108,9 @@ object GraftSession {
 
   /** A local session with graft fully wired (the shape every graft main
     * runs): extensions injected at build time, functions registered,
-    * shuffle partitions = cores. The one place graft builds a session.
+    * shuffle partitions = cores, and the generated-code cache sized to
+    * [[CodegenCacheEntries]] unless the deployment set that key. The
+    * one place graft builds a session.
     * A master that spark-submit already set (the `spark.master` system
     * property) is kept, so the same main calibrates a real cluster;
     * otherwise the session runs at `local[cores]`. Fails fast if a
@@ -105,8 +132,11 @@ object GraftSession {
         "or stop the existing session first.")
     }
     val builder = SparkSession.builder()
+    val cacheKey = "spark.sql.codegen.cache.maxEntries"
     val s = (if (sys.props.contains("spark.master")) builder
              else builder.master(s"local[$cores]"))
+      // a deployment's own value (system property, spark-submit --conf) wins
+      .config(cacheKey, sys.props.getOrElse(cacheKey, CodegenCacheEntries.toString))
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")

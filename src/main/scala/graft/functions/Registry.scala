@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -67,9 +68,17 @@ object Registry {
     }),
   )
 
-  /** Per-session registration of [[functions]]. Idempotent. */
+  /** Per-session registration of [[functions]]. Idempotent: binds only
+    * the names that are missing or bound to another expression class,
+    * so a session that already has them (the SPI route, an earlier
+    * call) is left alone and logs no "replaced a previously registered
+    * function" warning. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    functions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.build, "built-in"))
+    functions.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.lookupFunction(id).exists(_.getClassName == f.exprClass.getName))
+        reg.registerFunction(id, f.info, f.build)
+    }
   }
 }

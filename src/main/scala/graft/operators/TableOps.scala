@@ -133,15 +133,8 @@ object TableOps {
   def runSql(spark: SparkSession, dir: String, sql: String): DataFrame = {
     require(sql.trim.toUpperCase.startsWith("SELECT"),
       "only SELECT statements are allowed")
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings")
-      .foreach { t =>
-        val df = t match {
-          case "events" => Tables.events(spark, dir)
-          case _        => spark.read.parquet(s"$dir/$t.parquet")
-        }
-        df.createOrReplaceTempView(s"v_$t")
-      }
+    Tables.Schemas.keys.foreach(t =>
+      Tables.byName(spark, dir, t).createOrReplaceTempView(s"v_$t"))
     spark.sql(sql)
   }
 

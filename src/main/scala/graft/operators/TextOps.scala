@@ -31,14 +31,20 @@ object TextOps {
       length(col("text")).cast("long").as("n_chars"))
 
   /** Quality scoring: word count, avg word length, stopword ratio. */
-  def quality(spark: SparkSession, dir: String): DataFrame = {
-    val words = reTokens(col("text"))
-    Tables.documents(spark, dir).select(
-      col("doc_id"),
-      size(words).cast("long").as("n_words"),
-      rnd(totalChars(words).cast("double") / size(words), 2).as("avg_word_len"),
-      rnd(vocabHits(words, EnStop).cast("double") / size(words), 4)
-        .as("stopword_ratio"))
+  def quality(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .select(col("doc_id") +: qualityScores(reTokens(col("text"))): _*)
+
+  /** The quality scores of a document's words ([[quality]], [[gateDocs]]).
+    * The ratios divide only by a positive word count: with no word token
+    * they are null, not DIVIDE_BY_ZERO under ANSI (a filter evaluates
+    * shared subexpressions before its conjunction short-circuits). */
+  private def qualityScores(words: Column): Seq[Column] = {
+    val perWord = when(size(words) > 0, size(words))
+    Seq(size(words).cast("long").as("n_words"),
+        rnd(totalChars(words).cast("double") / perWord, 2).as("avg_word_len"),
+        rnd(vocabHits(words, EnStop).cast("double") / perWord, 4)
+          .as("stopword_ratio"))
   }
 
   /** Language-ID heuristic: profile-vocabulary scoring + argmax. (The
@@ -126,19 +132,13 @@ object TextOps {
   /** The C4-style quality gate as a frame transform — callable on any
     * (doc_id, lang, text) frame, batch or micro-batch, so the batch
     * flagship and streaming.PretrainStream run the SAME expressions. */
-  def gateDocs(docs: DataFrame): DataFrame = {
-    val words = reTokens(col("text"))
+  def gateDocs(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), col("lang"), col("text"),
-              size(words).cast("long").as("n_words"),
-              rnd(totalChars(words).cast("double") / size(words), 2)
-                .as("avg_word_len"),
-              rnd(vocabHits(words, EnStop).cast("double") / size(words), 4)
-                .as("stopword_ratio"))
+      .select(Seq(col("doc_id"), col("lang"), col("text")) ++
+              qualityScores(reTokens(col("text"))): _*)
       .filter(col("n_words") >= 30 &&
               col("avg_word_len").between(3.0, 8.0) &&
               col("stopword_ratio") >= 0.02)
-  }
 
   private def gatedDocs(spark: SparkSession, dir: String): DataFrame =
     gateDocs(Tables.documents(spark, dir))

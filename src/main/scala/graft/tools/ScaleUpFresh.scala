@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** FRESH-CONTENT scaling-audit generator (round 7, closing the
@@ -39,8 +39,16 @@ object ScaleUpFresh {
     val replicas = if (args.length > 2) args(2).toInt else 10
     val spark = graft.GraftSession.local(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    write(spark, src, dst, replicas)
+    println(s"[scaleup-fresh] wrote ${replicas}x $src -> $dst")
+    spark.stop()
+  }
 
+  /** Write the `replicas`× corpus of `src` to `dst`. Tables are read
+    * as their files store them, not through graft.Tables: `events.ts`
+    * keeps its type (a TIMESTAMP(NANOS) one reads as int64 under the
+    * `nanosAsLong` conf GraftSession.configure sets). */
+  def write(spark: SparkSession, src: String, dst: String, replicas: Int): Unit = {
     def rd(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def wr(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$dst/$name.parquet")
@@ -105,7 +113,5 @@ object ScaleUpFresh {
              (x + sin(lit(7.0 * i) + j.cast("double")) / lit(8.0))
                .cast("float"))),
          "vec_id" -> vecS), "embeddings")
-    println(s"[scaleup-fresh] wrote ${replicas}x $src -> $dst")
-    spark.stop()
   }
 }

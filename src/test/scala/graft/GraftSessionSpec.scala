@@ -21,6 +21,8 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
       assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
       assert(spark.conf.get("spark.master") === "local[2]")
+      assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+        GraftSession.CodegenCacheEntries.toString)
       // an operator runs end-to-end on the factory session
       import spark.implicits._
       val scored = Seq(("a", 1L, 2.0), ("a", 2L, 9.0), ("a", 3L, 5.0))
@@ -36,26 +38,20 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
-  test("GraftSession.local keeps a master that spark-submit set") {
-    // the JVM's one SparkContext is already up, so the new session
-    // reuses it; a builder.master(local[cores]) call would still land
-    // in the session's own conf, which is what this checks
-    val ctxMaster = TestSpark.spark.sparkContext.master
-    val cores = 7
-    assert(ctxMaster !== s"local[$cores]")
+  /** Run `body` with the JVM's session slots cleared and `key` set as
+    * a system property (how spark-submit passes `--master`/`--conf`),
+    * then restore both. */
+  private def withSystemProperty(key: String, value: String)(body: => Unit): Unit = {
     val prior = SparkSession.getDefaultSession
-    val priorMaster = sys.props.get("spark.master")
+    val priorValue = sys.props.get(key)
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    sys.props("spark.master") = "local[3]"
-    try {
-      val spark = GraftSession.local(cores)
-      assert(spark.conf.get("spark.master") === ctxMaster)
-      assert(spark.conf.get("spark.sql.shuffle.partitions") === cores.toString)
-    } finally {
-      priorMaster match {
-        case Some(m) => sys.props("spark.master") = m
-        case None    => sys.props.remove("spark.master")
+    sys.props(key) = value
+    try body
+    finally {
+      priorValue match {
+        case Some(v) => sys.props(key) = v
+        case None    => sys.props.remove(key)
       }
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()
@@ -63,6 +59,27 @@ class GraftSessionSpec extends AnyFunSuite {
         SparkSession.setDefaultSession(p)
         SparkSession.setActiveSession(p)
       }
+    }
+  }
+
+  test("GraftSession.local keeps a master that spark-submit set") {
+    // the JVM's one SparkContext is already up, so the new session
+    // reuses it; a builder.master(local[cores]) call would still land
+    // in the session's own conf, which is what this checks
+    val ctxMaster = TestSpark.spark.sparkContext.master
+    val cores = 7
+    assert(ctxMaster !== s"local[$cores]")
+    withSystemProperty("spark.master", "local[3]") {
+      val spark = GraftSession.local(cores)
+      assert(spark.conf.get("spark.master") === ctxMaster)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === cores.toString)
+    }
+  }
+
+  test("GraftSession.local keeps a codegen cache size the deployment set") {
+    val key = "spark.sql.codegen.cache.maxEntries"
+    withSystemProperty(key, "777") {
+      assert(GraftSession.local(2).conf.get(key) === "777")
     }
   }
 

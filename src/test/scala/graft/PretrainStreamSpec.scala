@@ -133,6 +133,27 @@ class PretrainStreamSpec extends AnyFunSuite {
     assert(kept === Seq(10L)) // doc 3 is later-arriving duplicate content
   }
 
+  test("an epoch with a document of no word token completes") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmp("pretrainnoword")
+
+    val body = (0 until 40).map(j => s"word$j").mkString(" ") + " the of and a"
+    val input = MemoryStream[Doc]
+    val empty = spark.emptyDataset[Doc].select(col("doc_id").as("train_doc_id"))
+    val q = PretrainStream.start(input.toDF(), empty, root)
+    // the quality gate scores a document per word token: one with none
+    // must be rejected, not fail the epoch
+    input.addData(Seq(Doc(1L, "en", "!!! ..."), Doc(2L, "en", body)))
+    q.processAllAvailable()
+    q.stop()
+
+    val kept = PretrainStream.acceptedDocs(spark, root)
+      .select("doc_id").as[Long].collect().toSeq
+    assert(kept === Seq(2L))
+  }
+
   test("compaction preserves accounting AND the dedup seen-set") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -10,6 +10,11 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the factory's generated-code cache size, so the suite's many
+      // entries do not recompile each other's classes (the cache is
+      // per JVM and sized by whichever session generates code first)
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

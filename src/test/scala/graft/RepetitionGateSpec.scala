@@ -171,15 +171,10 @@ class RepetitionGateSpec extends AnyFunSuite {
 
   test("cleanDocs ≡ gate + left join to the window metrics, and rejects " +
        "the repetitive gated documents") {
-    // the quality gate divides by the word count, so a document with no
-    // word token cannot reach it under ANSI arithmetic (a Spark filter
-    // would not keep it out: the predicate evaluates its common
-    // subexpressions before the conjunction short-circuits)
-    val docs0 = frame(craftedDocs.filter(_._1 != 1L))
-    val got = TextOps.cleanDocs(docs0)
+    val got = TextOps.cleanDocs(crafted)
     assert(rows(got) ===
-      rows(cleanReference(docs0).select(got.columns.map(col).toSeq: _*)))
-    val gated = TextOps.gateDocs(docs0).select("doc_id").collect()
+      rows(cleanReference(crafted).select(got.columns.map(col).toSeq: _*)))
+    val gated = TextOps.gateDocs(crafted).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     val kept = got.select("doc_id").collect().map(_.getLong(0)).toSet
     // both reject branches and both boundary sides reach the gate
