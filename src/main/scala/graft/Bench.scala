@@ -31,11 +31,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   *    compiled and the compile ms of the first run and of the later
   *    runs together. Later runs compile only what fell out of Spark's
   *    generated-code cache or what changes from call to call;
-  *  - a full-registry run also writes the JSON line to
-  *    `BENCH_FULL.json` in the working directory, so a consumer that
-  *    truncates long stdout lines still has the complete per-query
-  *    recording; an isolated `SPARK_GRAFT_BENCH_ONLY` run leaves that
-  *    file alone.
+  *  - the JSON line is also written to a file in the working
+  *    directory, so a consumer that truncates long stdout lines still
+  *    has the complete per-query recording: `BENCH_FULL.json` for a
+  *    full-registry run, `BENCH_ONLY.json` for an isolated
+  *    `SPARK_GRAFT_BENCH_ONLY` run, which leaves `BENCH_FULL.json`
+  *    alone.
   */
 object Bench {
   private def jsonEscape(s: String): String =
@@ -129,10 +130,9 @@ object Bench {
     val nErr = results.count(_._2.isLeft)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"first":$firsts,"errors":$errors,"n_errors":$nErr,"sf":"$sfDir","runs_per_query":$runs,"stat":"median"}"""
     println(json)
-    if (only.isEmpty)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_FULL.json"),
-        (json + "\n").getBytes("UTF-8"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(if (only.isEmpty) "BENCH_FULL.json" else "BENCH_ONLY.json"),
+      (json + "\n").getBytes("UTF-8"))
     spark.stop()
     if (nErr > 0) {
       System.err.println(s"[bench] $nErr queries FAILED — see errors map")

@@ -1,64 +1,58 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions.reTokens
 
-/** Distributed BPE vocabulary learning (Sennrich et al. 2016, the
-  * subword-tokenizer training step every LLM data pipeline runs before
-  * token accounting means anything).
+/** BPE vocabulary learning (Sennrich et al. 2016, the subword-tokenizer
+  * training step every LLM data pipeline runs before token accounting
+  * means anything).
   *
   * The classic algorithm is sequential — merge the most frequent
-  * adjacent symbol pair, retokenize, repeat — and naive distribution
-  * retokenizes the CORPUS each round. The scalable formulation (the one
-  * the original implementation uses in-memory) runs on the WORD
-  * FREQUENCY DICTIONARY instead: a merge's effect on the corpus is
-  * fully determined by (word, count), so after ONE corpus-sized
-  * word-count pass every iteration is vocabulary-sized — at 100 TB the
-  * corpus is touched once, and the K merge rounds iterate over a frame
-  * millions of times smaller. Per round: a pair-count aggregate
-  * (map-side combined, weighted by word count), a 1-row argmax
-  * `collect` (the chosen merge — a bounded model parameter, same
-  * contract as the k-means/PQ codebooks), and a vocabulary-sized map
-  * applying the merge. Lineage is truncated per round with an eager
-  * localCheckpoint, exactly like ConnectedComponents' iterative regime.
+  * adjacent symbol pair, retokenize, repeat — and runs on the WORD
+  * FREQUENCY DICTIONARY, not the corpus: a merge's effect on the corpus
+  * is fully determined by (word, count). So the corpus is touched once,
+  * by one word-count aggregate, and the dictionary (vocabulary-sized,
+  * millions of times smaller than the corpus at 100 TB) is collected to
+  * the driver as a bounded model fit — the contract the k-means and PQ
+  * codebooks already use. All k merges then run there with Sennrich's
+  * incremental pair index: pair → weighted count, pair → the words
+  * containing it, and the pairs ranked in a sorted set, so each argmax
+  * is a lookup and each merge rewrites only the words that contain the
+  * chosen pair. A dictionary too large for the driver is what
+  * `learnOnSample` is for; `spark.driver.maxResultSize` makes such a
+  * collect fail loudly rather than run the driver out of memory.
   *
-  * Determinism: ties on pair count break lexicographically, so the
-  * merge sequence is reproducible across runs, partitionings, and
-  * engines. Words carry a terminal "</w>" symbol (word-boundary
-  * information survives in the merges, as in the paper).
+  * Semantics: overlapping pairs count (`aaa` holds (a,a) twice), a merge
+  * is applied greedily left to right, ties on pair count break on
+  * (left, right) in Spark's string order (the symbols are ASCII, so
+  * `String.compareTo` is that order), and learning stops early when no
+  * pair is left. Words carry a terminal "</w>" symbol (word-boundary
+  * information survives in the merges, as in the paper). The merge
+  * sequence is reproducible across runs and partitionings; BpeVocabSpec
+  * holds it to a recount-every-merge reference and to the merge tables
+  * the earlier one-Spark-job-per-merge form learned.
   *
-  * Measured round-count bound (round 10, tools.BpeLadder — SURVEY §6.5,
-  * source at 0791305 — on the 500k-doc crossover corpus, local[32]):
-  * K=256 merges in 43.2 s, K=1024 in 125.4 s — **~6–8 merge
-  * rounds/second**, sublinear in K because the
-  * per-round pair table shrinks as symbols merge; the cost is driver
-  * job-scheduling round-trips (the dictionary itself was 3,100 words —
-  * data is not the variable). At the measured rate a 30k-merge
-  * production vocabulary is ~60–80 min of inherently-sequential driver
-  * rounds — the DECLARED production limit of this operator. Batching
-  * multiple merges per round is deliberately NOT done: two merges
-  * chosen from one count table are only sequence-equivalent when no
-  * pair created by the first (count ≤ c₁ but possibly > c₂) would have
-  * out-ranked the second, which cannot be verified without the very
-  * recount being skipped — a batched variant would silently learn a
-  * DIFFERENT vocabulary. Sennrich-faithful sequences at lower latency
-  * come from training on a corpus SAMPLE (statistically standard —
-  * vocab quality saturates orders of magnitude below corpus size), not
-  * from reordering merges — that path is `learnOnSample`, with its
-  * sample-vs-full vocabulary agreement MEASURED in SURVEY §6.6 (the
-  * vocabulary SET converges with corpus size; the merge ORDER does
-  * not, so it is a comparable vocabulary, not an identical one).
+  * Measured: a k = 30,000 [[learnMerges]] fit over a seeded Zipf
+  * dictionary of 100,000 distinct words (788,638 symbols; BpeVocabSpec's
+  * `zipfDictionary`) takes 5.9–6.9 s of driver time, one thread, four
+  * runs in one JVM on a 4-vCPU Xeon VM with JDK 17 — 4,300–5,100
+  * merges/s. The word-count aggregate and its collect are the only
+  * Spark jobs.
   */
 object BpeVocab {
 
   case class WordSyms(count: Long, syms: Seq[String])
   case class Merge(rank: Int, left: String, right: String, pair_count: Long)
 
-  /** Learn `k` merges from a corpus of documents.
-    * @return (merges table, final symbolized dictionary) */
+  /** Learn `k` merges from a corpus of documents: one word-count
+    * aggregate, collected, then [[learnMerges]] on the driver.
+    * @return (merges table, final symbolized dictionary: the word
+    *         counts with the merges applied in creation order) */
   def learn(docs: DataFrame, k: Int): (Seq[Merge], Dataset[WordSyms]) = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -66,88 +60,103 @@ object BpeVocab {
     val wordCounts = docs
       .select(explode(reTokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("count"))
-    // symbolize: chars + terminal </w>
-    var dict: Dataset[WordSyms] = wordCounts.select(col("count"), col("word"))
-      .as[(Long, String)]
-      .map { case (c, w) => WordSyms(c, w.map(_.toString) :+ "</w>") }
-      .localCheckpoint(true)
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var exhausted = false
-    // lineage is truncated every CkptEvery rounds, not every round: an
-    // eager localCheckpoint is a full vocab materialization, while a
-    // ≤CkptEvery-deep chain of map()s recomputes in-task for pennies —
-    // the balance point of ConnectedComponents' iterative regime
-    val CkptEvery = 4
-    var base = dict // the last checkpointed frame (owns cached blocks)
-    var depth = 0   // map() links since `base`
-    while (rank <= k && !exhausted) {
-      // weighted adjacent-pair counts over the dictionary (vocab-sized)
-      // as a codegen'd DataFrame hash aggregate (the typed
-      // groupByKey.reduceGroups form it replaces ran through encoders
-      // with no whole-stage codegen; same exchange, same rows — r13 opt
-      // round, guide §4). The argmax stays orderBy+limit(1): it plans
-      // as TakeOrderedAndProject directly over the aggregate — one job
-      // — where a second global min_by aggregate was measured to add a
-      // SinglePartition exchange job per merge round (42 → 58 jobs).
-      val best = dict.flatMap { ws =>
-          ws.syms.iterator.sliding(2).withPartial(false)
-            .map(p => (p.head, p(1), ws.count))
-        }
-        .toDF("left", "right", "cnt")
-        .groupBy(col("left"), col("right")).agg(sum(col("cnt")).as("c"))
-        // argmax with lexicographic tie-break → deterministic merges
-        .orderBy(col("c").desc, col("left"), col("right"))
-        .limit(1).collect() // 1 row: the chosen merge (bounded model param)
-      if (best.isEmpty) exhausted = true
-      else {
-        val row = best.head
-        val (l, r, c) = (row.getString(0), row.getString(1), row.getLong(2))
-        merges += Merge(rank, l, r, c)
-        // apply the merge — map-only over the vocabulary
-        val next = dict.map { ws =>
-          val out = Seq.newBuilder[String]
-          var i = 0
-          val s = ws.syms
-          while (i < s.length) {
-            if (i + 1 < s.length && s(i) == l && s(i + 1) == r) {
-              out += (l + r); i += 2
-            } else { out += s(i); i += 1 }
-          }
-          WordSyms(ws.count, out.result())
-        }
-        if (depth + 1 >= CkptEvery) {
-          val nb = next.localCheckpoint(true)
-          base.unpersist(blocking = false)
-          base = nb; dict = nb; depth = 0
-        } else { dict = next; depth += 1 }
-        rank += 1
-      }
+      .as[(String, Long)]
+    val merges = learnMerges(wordCounts.collect().toSeq, k)
+    val dict = wordCounts.map { case (w, c) =>
+      WordSyms(c, merges.foldLeft(symbols(w))((s, m) => mergePair(s, m.left, m.right)))
     }
-    (merges.result(), dict)
+    (merges, dict)
   }
 
-  /** The declared production path for large corpora: learn on a
-    * deterministic md5-coin SAMPLE. The coin is the sampling family's
-    * standard first md5(doc_id) nibble — content-addressed,
-    * engine-independent, stable across runs — so the sampled
-    * vocabulary is as reproducible as the full one.
+  /** The first `k` merges of a (word, count) dictionary, by Sennrich's
+    * incremental pair index (see the object doc). */
+  private[graft] def learnMerges(words: Seq[(String, Long)], k: Int): Seq[Merge] = {
+    type Pair = (String, String)
+    val syms = words.map { case (w, _) => symbols(w) }.toArray
+    val counts = words.map(_._2).toArray
+    val pairCount = mutable.HashMap.empty[Pair, Long]
+    // a word may stay listed under a pair it no longer holds; merging
+    // such a word changes nothing
+    val pairWords = mutable.HashMap.empty[Pair, mutable.Set[Int]]
+    // every pair of positive count, in argmax order
+    val ranked = mutable.TreeSet.empty[(Long, Pair)](
+      Ordering.Tuple2(Ordering.Long.reverse, Ordering[Pair]))
+    val delta = mutable.HashMap.empty[Pair, Long]
+    def tally(w: Int, sign: Int): Unit = {
+      val s = syms(w)
+      var i = 0
+      while (i + 1 < s.length) {
+        val p = (s(i), s(i + 1))
+        delta(p) = delta.getOrElse(p, 0L) + sign * counts(w)
+        if (sign > 0) pairWords.getOrElseUpdate(p, mutable.Set.empty) += w
+        i += 1
+      }
+    }
+    def commit(): Unit = {
+      delta.foreach { case (p, d) =>
+        if (d != 0) {
+          val old = pairCount.getOrElse(p, 0L)
+          if (old > 0) ranked -= ((old, p))
+          if (old + d > 0) { pairCount(p) = old + d; ranked += ((old + d, p)) }
+          else { pairCount -= p; pairWords -= p }
+        }
+      }
+      delta.clear()
+    }
+    syms.indices.foreach(tally(_, 1))
+    commit()
+    val merges = Seq.newBuilder[Merge]
+    var rank = 1
+    while (rank <= k && ranked.nonEmpty) {
+      val (c, p @ (l, r)) = ranked.head
+      merges += Merge(rank, l, r, c)
+      // the merged words never hold (l, r) again, so its set is not
+      // written while it is read, and its count commits to zero
+      pairWords(p).foreach { w =>
+        val merged = mergePair(syms(w), l, r)
+        if (merged ne syms(w)) { tally(w, -1); syms(w) = merged; tally(w, 1) }
+      }
+      commit()
+      rank += 1
+    }
+    merges.result()
+  }
+
+  /** A word's symbols before any merge: its characters, then "</w>". */
+  private def symbols(word: String): Vector[String] =
+    word.map(_.toString).toVector :+ "</w>"
+
+  /** Merge every (l, r) occurrence, greedily left to right; `s` itself
+    * when none occurs. */
+  private def mergePair(s: Vector[String], l: String, r: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var hit = false
+    var i = 0
+    while (i < s.length) {
+      if (i + 1 < s.length && s(i) == l && s(i + 1) == r) {
+        out += (l + r); i += 2; hit = true
+      } else { out += s(i); i += 1 }
+    }
+    if (hit) out.result() else s
+  }
+
+  /** Learn on a deterministic md5-coin SAMPLE of the corpus. The coin is
+    * the sampling family's standard first md5(doc_id) nibble —
+    * content-addressed, engine-independent, stable across runs — so the
+    * sampled vocabulary is as reproducible as the full one.
     *
-    * What sampling buys, MEASURED (tools.BpeSampleAgreement at 0791305,
-    * K=256, SURVEY §6.6): the corpus-sized word-count pass and the per-round
-    * dictionary shrink by 16/keep16 — the data-dependent terms, which
-    * at 100 TB are the whole cost — while the K sequential argmax
-    * rounds remain (wall 1.4–1.9× at this toy scale because rounds
-    * are scheduler-bound, not data-bound). What it costs: the merge
-    * sequence is NOT identical — near-tie argmax flips reorder merges
-    * early (longest common prefix ~1%), but the learned vocabulary
-    * SET converges with corpus size (pair-set agreement 38% on 5k
-    * docs → 76% on 50k at keep16=1, 79% at keep16=4) — a
-    * comparable-quality vocabulary, not a bit-identical one. This is
-    * still the faithful trade: merge BATCHING learns a structurally
-    * different vocabulary by construction (see learn's scaladoc),
-    * whereas sampling inherits Sennrich's own statistical assumption.
-    * BpeVocabSpec pins sample-vs-full top-K agreement ≥ 0.75 on a
+    * What sampling buys: the corpus-sized word-count pass, and the
+    * dictionary collected to the driver, shrink by about 16/keep16 —
+    * the data-dependent terms, which at 100 TB are the whole cost, and
+    * the bound on what [[learn]] can hold in driver memory. What it
+    * costs, MEASURED (at K=256 with the earlier per-merge-job learner,
+    * whose merges this one reproduces exactly; SURVEY §6.6, source at
+    * 0791305): the merge sequence is NOT identical — near-tie argmax
+    * flips reorder merges early (longest common prefix ~1%), but the
+    * learned vocabulary SET converges with corpus size (pair-set
+    * agreement 38% on 5k docs → 76% on 50k at keep16=1, 79% at
+    * keep16=4) — a comparable-quality vocabulary, not a bit-identical
+    * one. BpeVocabSpec pins sample-vs-full top-K agreement ≥ 0.75 on a
     * deterministic Zipf corpus. */
   def learnOnSample(docs: DataFrame, k: Int, keep16: Int = 1)
       : (Seq[Merge], Dataset[WordSyms]) = {
@@ -158,7 +167,7 @@ object BpeVocab {
   }
 
   /** Query entry: the learned merge table over the documents corpus.
-    * Rows-only by design — K chained argmax rounds are not one SQL
+    * Rows-only by design — K sequential argmax merges are not one SQL
     * statement; BpeVocabSpec pins the full merge sequence on a
     * known-answer corpus instead. */
   def bpeVocab(spark: SparkSession, dir: String): DataFrame = {
@@ -179,28 +188,12 @@ object BpeVocab {
     * against `learn`'s final dictionary. */
   private[graft] def encodeWord(
       word: String, ranks: Map[(String, String), Int]): Seq[String] = {
-    var syms: Vector[String] = word.map(_.toString).toVector :+ "</w>"
-    var done = false
-    while (!done && syms.length > 1) {
-      var bestRank = Int.MaxValue
-      var i = 0
-      while (i < syms.length - 1) {
-        val r = ranks.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
-        if (r < bestRank) bestRank = r
-        i += 1
-      }
-      if (bestRank == Int.MaxValue) done = true
-      else {
-        val out = Vector.newBuilder[String]
-        var j = 0
-        while (j < syms.length) {
-          if (j + 1 < syms.length &&
-              ranks.getOrElse((syms(j), syms(j + 1)), Int.MaxValue) == bestRank) {
-            out += (syms(j) + syms(j + 1)); j += 2
-          } else { out += syms(j); j += 1 }
-        }
-        syms = out.result()
-      }
+    var syms = symbols(word)
+    var present = syms.zip(syms.tail).filter(ranks.contains)
+    while (present.nonEmpty) {
+      val (l, r) = present.minBy(ranks)
+      syms = mergePair(syms, l, r)
+      present = syms.zip(syms.tail).filter(ranks.contains)
     }
     syms
   }

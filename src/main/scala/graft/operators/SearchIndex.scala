@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.tools.CorpusCache
@@ -39,27 +40,44 @@ object SearchIndex {
 
   /** Build-or-load: returns (postings, doclen, stats) lazy frames. */
   def bm25Cached(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) =
+    cachedIndex(spark, dir, "bm25", "STRING")(
+      Search.postings(Tables.documents(spark, dir)))
+
+  /** The doclen and stats tables' schemas as their writer produces them
+    * (parquet reads every column back nullable); [[cachedIndex]] declares
+    * the postings one. Reading with them, a warm open infers no schema
+    * and runs no Spark job. */
+  private val DoclenSchema = StructType.fromDDL("doc_id BIGINT, dl BIGINT")
+  private val StatsSchema = StructType.fromDDL("n_docs DOUBLE, sum_dl DOUBLE")
+
+  /** Build-or-load of one wire form's index under cache tag `kind`;
+    * `postings` (term type `termType`) is evaluated only on a build. */
+  private def cachedIndex(spark: SparkSession, dir: String, kind: String,
+                          termType: String)(postings: => DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val cache = CorpusCache.dirFor(dir, "documents", "bm25")
+    val postSchema = StructType.fromDDL(s"doc_id BIGINT, term $termType, tf BIGINT")
+    val cache = CorpusCache.dirFor(dir, "documents", kind)
     val postPath = new java.io.File(cache, "postings").getPath
     val dlPath   = new java.io.File(cache, "doclen").getPath
     val stPath   = new java.io.File(cache, "stats").getPath
+    def read(schema: StructType, path: String) =
+      spark.read.schema(schema).parquet(path)
     if (!CorpusCache.isBuilt(new java.io.File(cache, "stats"))) {
-      val post = Search.postings(Tables.documents(spark, dir))
-      graft.sinks.LakeSink.writeClustered(post, postPath, nFiles = 4,
+      graft.sinks.LakeSink.writeClustered(postings, postPath, nFiles = 4,
         col("term"))
-      val dl = spark.read.parquet(postPath)
+      val dl = read(postSchema, postPath)
         .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       graft.sinks.LakeSink.writeClustered(dl, dlPath, nFiles = 2,
         col("doc_id"))
       // stats LAST: its _SUCCESS is the build-complete marker
-      spark.read.parquet(dlPath)
+      read(DoclenSchema, dlPath)
         .agg(count(lit(1)).cast("double").as("n_docs"),
              sum(col("dl")).cast("double").as("sum_dl"))
         .coalesce(1).write.mode("overwrite").parquet(stPath)
     }
-    (spark.read.parquet(postPath), spark.read.parquet(dlPath),
-     spark.read.parquet(stPath))
+    (read(postSchema, postPath), read(DoclenSchema, dlPath),
+     read(StatsSchema, stPath))
   }
 
   /** Incremental ADD — tokenize ONLY the new batch into its postings
@@ -104,36 +122,17 @@ object SearchIndex {
     * equality, never a lexical range). Separate cache tag, so both
     * wire forms can coexist per corpus fingerprint. */
   def bm25CachedHashed(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val cache = CorpusCache.dirFor(dir, "documents", "bm25h")
-    val postPath = new java.io.File(cache, "postings").getPath
-    val dlPath   = new java.io.File(cache, "doclen").getPath
-    val stPath   = new java.io.File(cache, "stats").getPath
-    if (!CorpusCache.isBuilt(new java.io.File(cache, "stats"))) {
-      // Re-aggregate AFTER hashing: an intra-doc xxhash64 collision
-      // would otherwise leave two posting rows with the same
-      // (doc_id, term) — double-counting that doc in bm25FromTerms' df
-      // and splitting its tf across rows. The extra shuffle rides
-      // 8-byte keys over the already-aggregated postings, a tiny cost
-      // for keeping the one-row-per-(doc, term) invariant exact.
-      val post = Search.postings(Tables.documents(spark, dir))
+      : (DataFrame, DataFrame, DataFrame) =
+    // Re-aggregate AFTER hashing: an intra-doc xxhash64 collision
+    // would otherwise leave two posting rows with the same
+    // (doc_id, term) — double-counting that doc in bm25FromTerms' df
+    // and splitting its tf across rows. The extra shuffle rides
+    // 8-byte keys over the already-aggregated postings, a tiny cost
+    // for keeping the one-row-per-(doc, term) invariant exact.
+    cachedIndex(spark, dir, "bm25h", "BIGINT")(
+      Search.postings(Tables.documents(spark, dir))
         .withColumn("term", xxhash64(col("term")))
-        .groupBy(col("doc_id"), col("term")).agg(sum(col("tf")).as("tf"))
-      graft.sinks.LakeSink.writeClustered(post, postPath, nFiles = 4,
-        col("term"))
-      val dl = spark.read.parquet(postPath)
-        .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      graft.sinks.LakeSink.writeClustered(dl, dlPath, nFiles = 2,
-        col("doc_id"))
-      // stats LAST: its _SUCCESS is the build-complete marker
-      spark.read.parquet(dlPath)
-        .agg(count(lit(1)).cast("double").as("n_docs"),
-             sum(col("dl")).cast("double").as("sum_dl"))
-        .coalesce(1).write.mode("overwrite").parquet(stPath)
-    }
-    (spark.read.parquet(postPath), spark.read.parquet(dlPath),
-     spark.read.parquet(stPath))
-  }
+        .groupBy(col("doc_id"), col("term")).agg(sum(col("tf")).as("tf")))
 
   /** The `rag_bm25_indexed_hashed` entry: the same serve as
     * [[bm25Indexed]] against the hashed index — the query vocabulary

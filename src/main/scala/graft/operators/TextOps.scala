@@ -39,26 +39,28 @@ object TextOps {
     * The ratios divide only by a positive word count: with no word token
     * they are null, not DIVIDE_BY_ZERO under ANSI (a filter evaluates
     * shared subexpressions before its conjunction short-circuits). */
-  private def qualityScores(words: Column): Seq[Column] = {
-    val perWord = when(size(words) > 0, size(words))
+  private def qualityScores(words: Column): Seq[Column] =
     Seq(size(words).cast("long").as("n_words"),
-        rnd(totalChars(words).cast("double") / perWord, 2).as("avg_word_len"),
-        rnd(vocabHits(words, EnStop).cast("double") / perWord, 4)
+        rnd(totalChars(words).cast("double") / perWord(words), 2).as("avg_word_len"),
+        rnd(vocabHits(words, EnStop).cast("double") / perWord(words), 4)
           .as("stopword_ratio"))
-  }
+
+  /** The divisor of a per-word ratio: the word count, null when 0. */
+  private def perWord(words: Column): Column = when(size(words) > 0, size(words))
 
   /** Language-ID heuristic: profile-vocabulary scoring + argmax. (The
     * corpus is synthetic word salad, so the two profiles are English
     * stopwords vs tech jargon — the operator structure, ratio scoring
-    * with a deterministic argmax, is the point.) */
+    * with a deterministic argmax, is the point.) A document with no
+    * word token scores null on both profiles, as in [[qualityScores]]. */
   def langid(spark: SparkSession, dir: String): DataFrame = {
     val words = reTokens(col("text"))
     Tables.documents(spark, dir)
       .select(
         col("doc_id"),
-        rnd(vocabHits(words, EnStop).cast("double") / size(words), 4)
+        rnd(vocabHits(words, EnStop).cast("double") / perWord(words), 4)
           .as("en_score"),
-        rnd(vocabHits(words, TechWords).cast("double") / size(words), 4)
+        rnd(vocabHits(words, TechWords).cast("double") / perWord(words), 4)
           .as("tech_score"))
       .withColumn("predicted_lang",
         when(col("en_score") >= col("tech_score"), "en").otherwise("tech"))

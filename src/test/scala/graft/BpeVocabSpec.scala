@@ -1,27 +1,87 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.TextFunctions.reTokens
 import graft.operators.BpeVocab
+import graft.operators.BpeVocab.Merge
 
 /** BPE vocabulary learning — known-answer merge sequence on the classic
-  * Sennrich corpus, plus determinism under repartitioning. */
+  * Sennrich corpus, determinism under repartitioning, and exactness:
+  * the in-memory learner equals a recount-every-merge reference and the
+  * merge tables the earlier one-Spark-job-per-merge learner produced. */
 class BpeVocabSpec extends AnyFunSuite {
   import TestSpark._
 
-  // word frequencies: low×5 lower×2 newest×6 widest×3 (Sennrich ex.)
-  private def corpus(parts: Int) = {
-    import spark.implicits._
-    val words =
-      Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")
-    // spread the words across docs so the word count is a real aggregate
-    words.zipWithIndex
-      .map { case (w, i) => (i.toLong, w) }
-      .toDF("doc_id", "text")
-      .repartition(parts)
+  /** The recount-every-merge loop: count every adjacent pair
+    * (overlapping, weighted by word count), take the argmax on
+    * (count desc, left, right), merge it greedily left to right in every
+    * word, repeat until k merges or no pair is left. */
+  private def reference(words: Seq[(String, Long)], k: Int): Seq[Merge] = {
+    def merge(s: List[String], l: String, r: String): List[String] = s match {
+      case a :: b :: rest if a == l && b == r => (l + r) :: merge(rest, l, r)
+      case a :: rest => a :: merge(rest, l, r)
+      case Nil => Nil
+    }
+    var dict = words.map { case (w, c) => (w.map(_.toString).toList :+ "</w>", c) }
+    val out = Seq.newBuilder[Merge]
+    var rank = 1
+    var done = false
+    while (rank <= k && !done) {
+      val pairs = dict.flatMap { case (s, c) => s.zip(s.tail).map(_ -> c) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (pairs.isEmpty) done = true
+      else {
+        val ((l, r), c) = pairs.minBy { case ((l, r), c) => (-c, l, r) }
+        out += Merge(rank, l, r, c)
+        dict = dict.map { case (s, n) => (merge(s, l, r), n) }
+        rank += 1
+      }
+    }
+    out.result()
   }
+
+  /** One document per word occurrence, spread over `parts` partitions
+    * so the word count is a real aggregate. */
+  private def docsOf(dict: Seq[(String, Long)], parts: Int = 3): DataFrame = {
+    import spark.implicits._
+    dict.flatMap { case (w, c) => Seq.fill(c.toInt)(w) }.zipWithIndex
+      .map { case (w, i) => (i.toLong, w) }
+      .toDF("doc_id", "text").repartition(parts)
+  }
+
+  private def wordCounts(docs: DataFrame): Seq[(String, Long)] = {
+    import spark.implicits._
+    docs.select(explode(reTokens(col("text"))).as("word"))
+      .groupBy("word").count().as[(String, Long)].collect().toSeq
+  }
+
+  /** md5 of the merge table as "rank\tleft\tright\tpair_count" lines. */
+  private def digest(merges: Seq[Merge]): String = {
+    val text = merges.map(m => s"${m.rank}\t${m.left}\t${m.right}\t${m.pair_count}")
+      .mkString("\n")
+    java.security.MessageDigest.getInstance("MD5").digest(text.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  /** A deterministic Zipf dictionary of `n` distinct words: spellings of
+    * 3–10 letters drawn from a seeded generator (letters skewed toward
+    * the start of the alphabet), the i-th distinct word counted
+    * ⌈10⁶/(i+1)⌉ times. */
+  private def zipfDictionary(n: Int): Seq[(String, Long)] = {
+    val rnd = new scala.util.Random(42)
+    val words = scala.collection.mutable.LinkedHashSet.empty[String]
+    while (words.size < n)
+      words += Seq.fill(3 + rnd.nextInt(8))(
+        ('a' + rnd.nextInt(26) * rnd.nextInt(26) / 25).toChar).mkString
+    words.toSeq.zipWithIndex.map { case (w, i) => (w, (1000000L + i) / (i + 1)) }
+  }
+
+  // word frequencies of the Sennrich example
+  private val Classic = Seq("low" -> 5L, "lower" -> 2L, "newest" -> 6L, "widest" -> 3L)
+  private def corpus(parts: Int) = docsOf(Classic, parts)
 
   test("merge sequence matches the hand-computed BPE on the classic corpus") {
     val (merges, dict) = BpeVocab.learn(corpus(4), k = 6)
@@ -152,5 +212,78 @@ class BpeVocabSpec extends AnyFunSuite {
     assert(rows.forall(_.getLong(3) > 0))
     val again = BpeVocab.bpeVocab(spark, Sf).collect()
     assert(rows.map(_.toSeq).toSeq === again.map(_.toSeq).toSeq)
+  }
+
+  test("learn ≡ the recount-every-merge reference on crafted dictionaries") {
+    val dicts = Seq(
+      // the classic corpus, learned to exhaustion
+      Classic,
+      // count ties everywhere: "</w>" sorts after digits, before letters
+      Seq("a" -> 2L, "ab" -> 2L, "a1" -> 2L),
+      // overlapping pairs: (a,a) occurs 3 times in aaaa, twice in aaa
+      Seq("aaaa" -> 3L, "aaa" -> 2L, "ba" -> 1L),
+      // digit words
+      Seq("2024" -> 4L, "20" -> 3L, "404" -> 2L, "x86" -> 1L, "0x0" -> 2L),
+      // early exhaustion: both words are one symbol after 4 merges
+      Seq("abc" -> 1L, "ab" -> 1L))
+    dicts.foreach { dict =>
+      val want = reference(dict, 100)
+      assert(want.length < 100, "every dictionary runs to exhaustion")
+      assert(BpeVocab.learn(docsOf(dict), 100)._1 === want, dict)
+      assert(BpeVocab.learn(docsOf(dict), 3)._1 === want.take(3), dict)
+    }
+    // the tie-break order, spelled out
+    assert(reference(dicts(1), 3).map(m => (m.left, m.right)) ===
+      Seq(("1", "</w>"), ("a", "1</w>"), ("a", "</w>")))
+    assert(reference(dicts(2), 1).head === Merge(1, "a", "a", 13L))
+    assert(reference(dicts(4), 100).length === 4)
+  }
+
+  test("learnMerges ≡ the reference on seeded random tie-heavy dictionaries") {
+    val rnd = new scala.util.Random(7)
+    (0 until 300).foreach { _ =>
+      val dict = Seq.fill(1 + rnd.nextInt(8))(
+          Seq.fill(1 + rnd.nextInt(7))("ab1".charAt(rnd.nextInt(3))).mkString)
+        .distinct.map(_ -> (1L + rnd.nextInt(4)))
+      val k = 1 + rnd.nextInt(40)
+      assert(BpeVocab.learnMerges(dict, k) === reference(dict, k), dict)
+    }
+  }
+
+  test("documents tables: the reference and the earlier learner's merge tables") {
+    // md5s of the merge tables the one-Spark-job-per-merge learner
+    // produced (k = 200 runs to exhaustion, after 105 and 106 merges)
+    val pinned = Map(
+      ("sf0.001", 16) -> "6dbe66f909bdecb0ac4466b9fc0c6e28",
+      ("sf0.001", 200) -> "3208f5818a7c7514e4cc3bd6090f28e0",
+      ("sf0.01", 16) -> "e9394723341bcb1be3dc368a06cd0d01",
+      ("sf0.01", 200) -> "5a1740bf0e7a3759a46ae29e39381c0b")
+    Seq("sf0.001" -> 105, "sf0.01" -> 106).foreach { case (sf, exhausted) =>
+      val docs = Tables.documents(spark, s"${new java.io.File(Sf).getParent}/$sf")
+      val m200 = BpeVocab.learn(docs, 200)._1
+      assert(m200.length === exhausted, sf)
+      assert(m200 === reference(wordCounts(docs), 200), sf)
+      assert(digest(m200) === pinned((sf, 200)), sf)
+      assert(digest(BpeVocab.learn(docs, 16)._1) === pinned((sf, 16)), sf)
+    }
+  }
+
+  test("a 30k-merge fit over a 100k-word Zipf dictionary") {
+    val dict = zipfDictionary(100000)
+    assert(dict.map(_._1).distinct.length === 100000)
+    val merges = BpeVocab.learnMerges(dict, 30000)
+    assert(merges.map(_.rank) === (1 to 30000))
+    assert(merges.take(3) === reference(dict, 3))
+  }
+
+  test("building text_bpe_vocab and text_bpe_encode runs at most 2 Spark jobs") {
+    // the word-count shuffle stage and its collect; one job per merge
+    // round would make this 16 more
+    Seq("text_bpe_vocab", "text_bpe_encode").foreach { name =>
+      val jobs = JobCount.jobsIn(spark, s"$name-build") {
+        SparkEntry.queries(name)(spark, Sf)
+      }
+      assert(jobs <= 2, s"$name ran $jobs jobs while building its DataFrame")
+    }
   }
 }

@@ -267,4 +267,22 @@ class OracleEdgeSpec extends AnyFunSuite {
     assert(out.map(_.getAs[Long]("event_id")).toSeq === Seq(500L))
     assert(out.head.getAs[Double]("z") > 3.0)
   }
+
+  test("text_quality, text_langid: a document with no word token scores NULL") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("notoken").toString
+    Seq((1L, "!!! ...", "en", "web", 7L), (2L, "the spark of a stream", "en", "web", 21L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val lang = operators.TextOps.langid(spark, dir).orderBy("doc_id").collect()
+    assert(lang.map(_.getLong(0)).toSeq === Seq(1L, 2L))
+    assert(lang(0).isNullAt(1) && lang(0).isNullAt(2))
+    // NULL >= NULL is not true: the oracle's CASE falls to 'tech' too
+    assert(lang(0).getString(3) === "tech")
+    assert(lang(1).toSeq.tail === Seq(0.6, 0.4, "en"))
+    val quality = operators.TextOps.quality(spark, dir).orderBy("doc_id").collect()
+    assert(quality(0).getLong(1) === 0L)
+    assert(quality(0).isNullAt(2) && quality(0).isNullAt(3))
+    assert(quality(1).toSeq.tail === Seq(5L, 3.4, 0.6))
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SearchIndexSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
   test("indexed BM25 equals the inline form, and reloads hit the cache") {
@@ -52,5 +53,30 @@ class SearchIndexSpec extends AnyFunSuite {
       .orderBy(col("query_id"), col("rank")))
     val rebuilt = rows(operators.Search.bm25(spark, Sf))
     assert(appended === rebuilt)
+  }
+
+  test("a warm index open reads the declared schemas and runs no Spark job") {
+    import operators.SearchIndex._
+    Seq(("bm25", "string", bm25Cached _), ("bm25h", "long", bm25CachedHashed _))
+      .foreach { case (kind, termType, open) =>
+        open(spark, Sf) // build, or reuse a built cache
+        val cache = tools.CorpusCache.dirFor(Sf, "documents", kind)
+        var frames: (DataFrame, DataFrame, DataFrame) = null
+        assert(JobCount.jobsIn(spark, s"$kind-warm-open") {
+          frames = open(spark, Sf)
+        } === 0, kind)
+        val (post, dl, stats) = frames
+        // the declared schemas are the ones parquet inference returns
+        Seq(post -> "postings", dl -> "doclen", stats -> "stats").foreach {
+          case (df, table) =>
+            assert(df.schema === spark.read.parquet(s"$cache/$table").schema,
+              s"$kind $table")
+        }
+        assert(post.schema("term").dataType.typeName === termType)
+      }
+    // the served entries still equal the inline form (string, hashed)
+    val inline = rows(operators.Search.bm25(spark, Sf))
+    assert(rows(bm25Indexed(spark, Sf)) === inline)
+    assert(rows(bm25IndexedHashed(spark, Sf)) === inline)
   }
 }
