@@ -13,7 +13,8 @@ import graft.functions.Registry
   *
   * Injects every function in [[graft.functions.Registry.functions]] —
   * the same list Registry.register binds on an existing session — plus
-  * the TopKPerKey hint rule and planner strategy.
+  * the TopKPerKey hint rule and planner strategy. graft's DataFrame
+  * operators need neither: they build the expressions directly.
   *
   * An extension cannot size Spark's generated-code cache: it is a
   * static conf that `CodeGenerator` reads once per JVM. Pass it with the

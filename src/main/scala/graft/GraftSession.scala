@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The library's front door: a SparkSession wired the way graft's own
-  * mains run — native functions registered, the TopKPerKey operator
+  * mains run — native functions registered for SQL, the TopKPerKey operator
   * stack injected, and the session defaults every operator assumes
   * (UTC timestamps, AQE on, shuffle parallelism sized to the
   * cluster, not the 200 default).
@@ -64,8 +64,10 @@ object GraftSession {
   val CodegenCacheEntries: Int = 4096
 
   /** Apply graft's session-level requirements to an existing session:
-    * native function registration (idempotent) plus the runtime confs
-    * the serve paths assume: the IN-pushdown threshold below, and
+    * native function registration (idempotent) for SQL callers —
+    * graft's operators build their expressions directly and need none —
+    * plus the runtime confs the serve paths assume: the IN-pushdown
+    * threshold below, and
     * `parquet.nanosAsLong`, so a TIMESTAMP(NANOS) `events.ts` reads as
     * the raw int64 that graft.Tables.events rescales. Extensions
     * (rule/strategy) can only be injected at build time — sessions not
@@ -107,7 +109,7 @@ object GraftSession {
   def envCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** A local session with graft fully wired (the shape every graft main
-    * runs): extensions injected at build time, functions registered,
+    * runs): extensions injected at build time, SQL functions registered,
     * shuffle partitions = cores, and the generated-code cache sized to
     * [[CodegenCacheEntries]] unless the deployment set that key. The
     * one place graft builds a session.

@@ -1,13 +1,17 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
 
 import graft.Tables
 import graft.functions.Num.rnd
 import graft.functions.TextFunctions._
-import graft.functions.{Registry, VectorFunctions}
+import graft.functions.VectorFunctions
+import graft.functions.expressions.{BoundedBucket, MinHashSignature}
 
 /** Deduplication suite for a training-data pipeline.
   *
@@ -95,12 +99,10 @@ object Dedup {
     * contract). */
   private def boundedBucketsRaw(rows: DataFrame, keys: Seq[String],
                                 member: Column, maxBucket: Int): DataFrame = {
-    graft.functions.Registry.register(rows.sparkSession)
     val kc = keys.map(col)
     rows.select(kc :+ member.as("m"): _*)
       .groupBy(kc: _*)
-      .agg(call_function("graft_bounded_bucket", col("m"),
-        lit(maxBucket)).as("b"))
+      .agg(toColumn(BoundedBucket(toExpr(col("m")), maxBucket)).as("b"))
   }
 
   /** DROP-regime guarded bucket collect (exact pair generators and
@@ -350,12 +352,11 @@ object Dedup {
     * Output identical: est_jaccard is a function of the pair. */
   def minhashPairs(spark: SparkSession, docs: DataFrame,
                    maxBucket: Int = MaxBucket): DataFrame = {
-    graft.functions.Registry.register(spark)
     val P = graft.functions.expressions.MinHashFamily.P
     val hashed = shingleRows(docs, distinct = false)
       .withColumn("h", pmod(xxhash64(col("shingle")), lit(P)))
     val sigs = hashed.groupBy(col("doc_id"))
-      .agg(call_function("graft_minhash_sig", col("h")).as("sig"))
+      .agg(toColumn(MinHashSignature(toExpr(col("h")))).as("sig"))
       .localCheckpoint(false)
     val bands = sigs.select(
       col("doc_id"),
@@ -460,12 +461,11 @@ object Dedup {
 
   private[graft] def minhashIncrementalOn(spark: SparkSession,
                                           docs: DataFrame): DataFrame = {
-    graft.functions.Registry.register(spark)
     val P = graft.functions.expressions.MinHashFamily.P
     val hashed = shingleRows(docs, distinct = false)
       .withColumn("h", pmod(xxhash64(col("shingle")), lit(P)))
     val sigs = hashed.groupBy(col("doc_id"))
-      .agg(call_function("graft_minhash_sig", col("h")).as("sig"))
+      .agg(toColumn(MinHashSignature(toExpr(col("h")))).as("sig"))
       .withColumn("is_batch", bucket16(col("doc_id")) === 0)
     val bands = sigs.select(col("doc_id"), col("is_batch"),
       explode(transform(sequence(lit(0), lit(3)),
@@ -867,13 +867,9 @@ object Dedup {
     * read from a doc_id-only projection (column-pruned scan — for
     * parquet a footer-metadata count); it is the ONE eager job this
     * builder runs before the returned frame executes, the same
-    * plan-build statistics lookup a cost-based planner makes.
-    * The temp view is uniquely named and dropped as soon as the
-    * returned DataFrame is analyzed, so concurrent callers on one
-    * session cannot cross-bind. */
+    * plan-build statistics lookup a cost-based planner makes. */
   private[graft] def bloomIncrementalOn(spark: SparkSession,
                                         docs: DataFrame): DataFrame = {
-    graft.functions.Registry.register(spark)
     val hashed = docs
       .select(col("doc_id"), md5(normText(col("text"))).as("norm_hash"),
               (bucket16(col("doc_id")) === 0).as("is_batch"))
@@ -886,28 +882,19 @@ object Dedup {
         spark.conf.set(key, v.toString)
     raiseTo("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", estItems)
     raiseTo("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", numBits)
-    val view = "graft_bloom_docs_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    hashed.createOrReplaceTempView(view)
-    try {
-      val df = spark.sql(
-        s"""WITH corpus AS (SELECT * FROM $view WHERE NOT is_batch),
-           ck AS (SELECT norm_hash, min(doc_id) AS corpus_keeper
-                  FROM corpus GROUP BY norm_hash),
-           batch AS (SELECT doc_id, norm_hash FROM $view WHERE is_batch),
-           cand AS (
-             SELECT * FROM batch
-             WHERE graft_might_contain(
-               (SELECT graft_bloom_agg(xxhash64(norm_hash),
-                                       CAST($estItems AS BIGINT),
-                                       CAST($numBits AS BIGINT)) FROM corpus),
-               xxhash64(norm_hash)))
-           SELECT c.doc_id, c.norm_hash, ck.corpus_keeper
-           FROM cand c JOIN ck ON c.norm_hash = ck.norm_hash
-           ORDER BY c.doc_id""")
-      df.queryExecution.analyzed // bind the view BEFORE it is dropped
-      df
-    } finally spark.catalog.dropTempView(view)
+    val corpus = hashed.filter(!col("is_batch"))
+    val ck = corpus.groupBy(col("norm_hash"))
+      .agg(min(col("doc_id")).as("corpus_keeper"))
+    val bloom = corpus.agg(toColumn(new BloomFilterAggregate(
+      toExpr(xxhash64(col("norm_hash"))), toExpr(lit(estItems)),
+      toExpr(lit(numBits))))).scalar()
+    val cand = hashed.filter(col("is_batch"))
+      .select(col("doc_id"), col("norm_hash"))
+      .filter(toColumn(BloomFilterMightContain(toExpr(bloom),
+        toExpr(xxhash64(col("norm_hash"))))))
+    cand.as("c").join(ck.as("ck"), col("c.norm_hash") === col("ck.norm_hash"))
+      .select(col("c.doc_id"), col("c.norm_hash"), col("ck.corpus_keeper"))
+      .orderBy(col("c.doc_id"))
   }
 
   /** Benchmark decontamination — flag training documents sharing ≥10%
@@ -973,7 +960,6 @@ object Dedup {
 
   /** Embedding-cosine near-dup pairs, blocked by label. */
   def embedCosine(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
     val a = e.select(col("label"), col("vec_id").as("id_a"),
@@ -1003,7 +989,6 @@ object Dedup {
     * corpus never self-pairs, and best-match is the same max(struct)
     * aggregate as ngramIncremental — no per-vector window sort. */
   def embedIncremental(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     embedIncrementalOn(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding")))
   }
@@ -1077,7 +1062,6 @@ object Dedup {
   def embedLshPairs(spark: SparkSession, e: DataFrame, bands: Int,
                     planesPerBand: Int, threshold: Double,
                     maxBucket: Int = 1024): DataFrame = {
-    Registry.register(spark)
     val banded = e
       .select(col("vec_id"), col("embedding"),
               posexplode(VectorFunctions.hyperplaneBands(
@@ -1155,7 +1139,6 @@ object Dedup {
     * always co-clustered and emitted. */
   def semantic(spark: SparkSession, dir: String,
                thr: Double = 0.99): DataFrame = {
-    Registry.register(spark)
     semanticPairs(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
       k = 16, iters = 3, thr = thr)

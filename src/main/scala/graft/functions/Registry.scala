@@ -7,12 +7,15 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.functions.expressions.{BloomFileMightContain, BoundedBucket, DeflateLength, DotProduct, FreqItemsSketch, GramCounts, HyperplaneBands, MinHashSignature, SimHashSignature, UnicodeNormalize}
 
-/** graft's native Catalyst expressions as SQL functions. [[functions]]
-  * is the one name → builder list: [[register]] binds it on an
-  * existing session, and graft.GraftExtensions injects the same list
-  * through the SparkSessionExtensions SPI. The function registry is the
-  * supported route to custom expressions (the public Column API has no
-  * expression constructor). */
+/** graft's native Catalyst expressions as SQL functions — the SQL
+  * surface only. [[functions]] is the one name → builder list:
+  * [[register]] binds it on an existing session (through
+  * graft.GraftSession.configure), and graft.GraftExtensions injects the
+  * same list through the SparkSessionExtensions SPI. graft's own
+  * operators never look these names up: they build the expressions
+  * directly and wrap them as Columns through
+  * org.apache.spark.sql.graftshim.GraftShim, so they run on any
+  * session, registered or not. */
 object Registry {
 
   /** One SQL function: its name, the expression class it builds (shown

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
 
-import graft.functions.expressions.DotProduct
+import graft.functions.expressions.{DotProduct, HyperplaneBands}
 
 /** Embedding-vector math backed by the native codegen'd DotProduct
   * expression (graft.functions.expressions.DotProduct). Floats widen to
@@ -11,16 +12,14 @@ import graft.functions.expressions.DotProduct
   * results are bit-identical to the DuckDB oracle's
   * CAST(... AS DOUBLE[]) + list_dot_product formulation.
   *
-  * [[Registry.register]] must run once per session before using these
-  * columns (the public Column API has no constructor for custom
-  * expressions; the function registry is the supported route).
+  * The columns wrap the expressions directly (GraftShim), so they work
+  * on any session; the SQL names (`graft_dot`, …) are [[Registry]]'s.
   */
 object VectorFunctions {
 
-  private val FnName = "graft_dot"
-
   /** Dot product (codegen'd); widens float elements to double. */
-  def dot(a: Column, b: Column): Column = call_function(FnName, a, b)
+  def dot(a: Column, b: Column): Column =
+    toColumn(DotProduct(toExpr(a), toExpr(b)))
 
   /** Cosine similarity via three native dot products. */
   def cosine(a: Column, b: Column): Column =
@@ -29,5 +28,5 @@ object VectorFunctions {
   /** LSH band signatures (codegen'd): array<long> of `bands` hashes,
     * `planesPerBand` sign bits each, over the shared HyperplaneFamily. */
   def hyperplaneBands(v: Column, bands: Int, planesPerBand: Int): Column =
-    call_function("graft_hplane_bands", v, lit(bands), lit(planesPerBand))
+    toColumn(HyperplaneBands(toExpr(v), bands, planesPerBand))
 }

@@ -169,14 +169,15 @@ object BpeVocab {
   /** Query entry: the learned merge table over the documents corpus.
     * Rows-only by design — K sequential argmax merges are not one SQL
     * statement; BpeVocabSpec pins the full merge sequence on a
-    * known-answer corpus instead. */
+    * known-answer corpus instead. Rows come out in rank order with no
+    * sort: `learn` builds the merges on the driver in rank order, and
+    * the local table scan keeps it. */
   def bpeVocab(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (merges, _) = learn(Tables.documents(spark, dir), k = 16)
     merges.toDF().select(
       col("rank").cast("long").as("rank"),
       col("left"), col("right"), col("pair_count"))
-      .orderBy("rank")
   }
 
   /** BPE INFERENCE for one word: repeatedly merge all occurrences of

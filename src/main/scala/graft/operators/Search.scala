@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{Registry, VectorFunctions}
+import graft.functions.VectorFunctions
 import graft.functions.Num.rnd
 
 /** Full-text ranked retrieval (Okapi BM25) and sparse+dense hybrid
@@ -152,7 +152,6 @@ object Search {
     * is the dense view of the same item). Ranked on the rounded
     * cosine, self excluded — the ann_topk contract. */
   private[graft] def denseTopK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val q = e.filter(col("vec_id").isin(1L, 2L, 3L))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -186,7 +185,6 @@ object Search {
     * plan and the recall floor vs the brute-force leg. */
   private[graft] def indexedDenseTopK(spark: SparkSession, dir: String,
                                       k: Int): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val (cbooks, coarse, codes) =
       graft.similarity.AnnIndex.ivfPqCached(spark, dir)
@@ -283,7 +281,6 @@ object Search {
 
   private[graft] def mmrOn(spark: SparkSession, e: DataFrame,
                            k: Int, lambda: Double): DataFrame = {
-    Registry.register(spark)
     val q = e.filter(col("vec_id").isin(1L, 2L, 3L))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val scored = e.select(col("vec_id").as("doc_id"), col("embedding").as("nv"))
@@ -305,7 +302,6 @@ object Search {
     * scan (the corpus never cross-joins). The greedy diversification
     * is byte-identical to rag_mmr's. Approximate → rows-only. */
   def mmrIndexed(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val cand = indexedDenseTopK(spark, dir, 20)
       .select(col("query_id").as("c_query"), col("doc_id").as("c_doc"))

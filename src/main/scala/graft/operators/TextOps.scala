@@ -2,10 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
 
 import graft.Tables
 import graft.functions.Num.rnd
 import graft.functions.TextFunctions._
+import graft.functions.expressions.{DeflateLength, FreqItemsSketch, GramCounts, UnicodeNormalize}
 
 /** Text-analysis operators over the `documents` corpus — the
   * training-data-pipeline extension of the reference's per-file data
@@ -151,10 +153,8 @@ object TextOps {
     * predicates over the same scan (the repetition gate is
     * [[notRepetitive]]): the plan is map-only, with no exchange, no
     * join and no window. */
-  def cleanDocs(docs: DataFrame): DataFrame = {
-    graft.functions.Registry.register(docs.sparkSession)
+  def cleanDocs(docs: DataFrame): DataFrame =
     gateDocs(docs).filter(notRepetitive(col("text")))
-  }
 
   /** The deterministic md5 holdout coin (bucket 0-15; 15 = held out). */
   def holdoutCoin(docId: Column): Column =
@@ -437,7 +437,6 @@ object TextOps {
     * document with fewer than 2 tokens has no row; dup_trigram_frac is
     * null below 3 tokens. */
   def repetitionMetrics(docs: DataFrame): DataFrame = {
-    graft.functions.Registry.register(docs.sparkSession)
     val (top, dup) = repetitionFracs(col("g"))
     docs
       .filter(size(reTokens(col("text"))) >= 2)
@@ -451,7 +450,7 @@ object TextOps {
   /** struct<n_bigrams, top_bigram_c, n_trigrams, distinct_trigrams> of
     * the regex tokens of `text` (null under 2 tokens). */
   private def gramCounts(text: Column): Column =
-    call_function("graft_gram_counts", reTokens(text))
+    toColumn(GramCounts(toExpr(reTokens(text))))
 
   /** (top_bigram_frac, dup_trigram_frac) from a [[gramCounts]] struct:
     * Column arithmetic over the exact counts, rounded with [[rnd]];
@@ -757,7 +756,6 @@ object TextOps {
     * among uniform noise, with the sketch capacity (19) well below the
     * vocabulary (32) so the decrement path genuinely runs. */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val K = 20
     val seeded = Tables.documents(spark, dir).select(
       col("doc_id"),
@@ -766,7 +764,7 @@ object TextOps {
                .otherwise(lit(""))).as("txt"))
     val terms = seeded.select(explode(reTokens(col("txt"))).as("term"))
     val sketch = terms.agg(
-      call_function("graft_freq_items", col("term"), lit(K)).as("cands"),
+      toColumn(FreqItemsSketch(toExpr(col("term")), K)).as("cands"),
       count(lit(1)).as("total"))
     terms.crossJoin(broadcast(sketch))
       .filter(array_contains(col("cands"), col("term")))
@@ -800,7 +798,6 @@ object TextOps {
     * exists for — an empty text field WILL occur in a web corpus). */
   private[graft] def compressRatioOn(spark: SparkSession,
                                      docs: DataFrame): DataFrame = {
-    graft.functions.Registry.register(spark)
     val seeded = docs.select(
       col("doc_id"),
       when(col("doc_id") % 8 === 0, repeat(substring(col("text"), 1, 16), 40))
@@ -808,7 +805,7 @@ object TextOps {
     seeded.select(
         col("doc_id"),
         octet_length(col("txt")).cast("long").as("n_bytes"),
-        call_function("graft_deflate_len", col("txt")).as("z_bytes"))
+        toColumn(DeflateLength(toExpr(col("txt")))).as("z_bytes"))
       .withColumn("ratio",
         rnd(col("z_bytes") * 1.0 / nullif(col("n_bytes"), lit(0L)), 4))
       .withColumn("degenerate", col("ratio") < 0.1)
@@ -829,7 +826,6 @@ object TextOps {
     * nfc_normalize, which exercises the expression against an
     * independent ICU-backed implementation. */
   def normalizeText(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     // NOTE: Spark's chr() is mod-256 ASCII (chr(769) = chr(1)), unlike
     // DuckDB's codepoint chr — the combining acute must be a literal
     val seeded = Tables.documents(spark, dir).select(
@@ -839,7 +835,7 @@ object TextOps {
     seeded.select(
         col("doc_id"),
         length(col("raw")).cast("long").as("raw_len"),
-        call_function("graft_normalize", col("raw"), lit("NFC")).as("norm"))
+        toColumn(UnicodeNormalize(toExpr(col("raw")), "NFC")).as("norm"))
       .select(col("doc_id"), col("raw_len"),
         length(col("norm")).cast("long").as("nfc_len"),
         expr("right(norm, 4)").as("norm_tail"))

@@ -91,7 +91,6 @@ object AnnIndex {
   def ivfPqCached(spark: SparkSession, dir: String)
       : (IndexedSeq[IndexedSeq[Array[Double]]], IndexedSeq[Array[Double]],
          DataFrame) = {
-    graft.functions.Registry.register(spark)
     val cache = CorpusCache.dirFor(dir, "embeddings", "ivfpq")
     val (modelDir, codesDir) = livePaths(cache)
     if (!CorpusCache.isBuilt(modelDir)) {
@@ -211,7 +210,6 @@ object AnnIndex {
   /** Cache-level core (the spec plants a drifted corpus through `e`). */
   private[graft] def retrainCore(spark: SparkSession, cache: java.io.File,
                                  e: DataFrame, threshold: Double): Boolean = {
-    graft.functions.Registry.register(spark)
     val (modelDir, codesDir) = livePaths(cache)
     val (_, coarse, codes) = loadFrom(spark, modelDir, codesDir)
     val base = codes.filter(col("m") === 0)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Num.rnd
-import graft.functions.{Registry, VectorFunctions}
+import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor search over the embeddings table.
   *
@@ -32,7 +32,6 @@ object Knn {
 
   /** Brute-force cosine top-10 for query vectors (vec_id < 5). */
   def topK(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -73,7 +72,6 @@ object Knn {
     * heaps, no per-key sort — the shape that survives hot keys at
     * 100 TB. Output contract (and oracle) identical to ann_topk. */
   def topKOperator(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -96,7 +94,6 @@ object Knn {
     * RuntimeFilterSpec). Embedding ids and doc ids share the key space
     * by construction of the corpus. */
   def retrieve(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -135,7 +132,6 @@ object Knn {
     * bounded-heap TopKPerKey pass. Approximate (shortlist misses) →
     * rows-only. */
   def rerank(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val shortlist = pqTopK(spark, e, 25)
       .select(col("query_id").as("sl_query"), col("neighbor_id").as("sl_nb"))
@@ -156,7 +152,6 @@ object Knn {
     * pairs. The signature is one codegen'd HyperplaneBands kernel, not
     * 16 plane-literal dot columns. Approximate → rows-only check. */
   def lshBuckets(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val bucketed = e.withColumn("bucket",
       element_at(VectorFunctions.hyperplaneBands(col("embedding"), 1, 16), 1))
@@ -214,7 +209,6 @@ object Knn {
   /** The scored in-cell candidate set behind `ivf` (shared with
     * IvfAssignmentSpec's ranking-parity test). */
   private[graft] def ivfScored(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
@@ -253,7 +247,6 @@ object Knn {
     * monotonicity (recall vs exact top-k never drops when nprobe
     * grows, because the candidate set only widens). */
   def ivfProbes(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
@@ -303,7 +296,6 @@ object Knn {
     * max), which PqSpec asserts. Approximate by design → rows-only. */
   def pqTopK(spark: SparkSession, e: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    Registry.register(spark)
     val M = 4; val subDim = 16; val K = 16
     // "Training": the codebook is a bounded model parameter — M×K
     // subvectors, ~1 KB regardless of corpus size — so it is fit once
@@ -387,7 +379,6 @@ object Knn {
       e: DataFrame, k: Int,
       cbooks: IndexedSeq[IndexedSeq[Array[Double]]],
       qCells: Option[DataFrame]): DataFrame = {
-    Registry.register(spark)
     val M = cbooks.length
     val subDim = cbooks.head.head.length
     val codebook: IndexedSeq[IndexedSeq[Column]] =
@@ -432,7 +423,6 @@ object Knn {
   private[graft] def ivfPqServe(spark: SparkSession, e: DataFrame, k: Int,
       nprobe: Int, cbooks: IndexedSeq[IndexedSeq[Array[Double]]],
       coarse: IndexedSeq[Array[Double]], codes: DataFrame): DataFrame = {
-    Registry.register(spark)
     val probes = probeClusters(e.filter(isQuery), coarse, nprobe)
     // The probed cell set is a bounded model-sized value (≤ |queries| ×
     // nprobe ids), so it is collected and pushed as a LITERAL IN filter
@@ -466,7 +456,6 @@ object Knn {
     * invariant to this path. The search is the same literal-codebook
     * pure-map encode + broadcast-LUT ADC as pqTopK. */
   def pqTrained(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val M = 4; val subDim = 16; val K = 16
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     pqTrainedOn(spark, e, M, subDim, K, 10)
@@ -603,7 +592,6 @@ object Knn {
     * for the sampled fit, rqTrained for the k-means one). */
   private def rqSearch(spark: SparkSession, e: DataFrame, k: Int,
       c1: IndexedSeq[Array[Float]], c2: IndexedSeq[Array[Float]]): DataFrame = {
-    Registry.register(spark)
     val candCodes = rqEncode(e, c1, c2)
       .select(col("vec_id"), explode(array(
         struct(lit(1).as("level"), col("code1").as("code")),
@@ -664,7 +652,6 @@ object Knn {
     * two-LUT ADC) still runs over the full frame. */
   private[graft] def fitRqTrained(e: DataFrame)
       : (IndexedSeq[Array[Float]], IndexedSeq[Array[Float]]) = {
-    Registry.register(e.sparkSession)
     // 2 Lloyd rounds per level: the distortion win over the sampled
     // codebook comes almost entirely from seeing every residual, and
     // the two fits are sequential (level 2 needs level 1's assignment)
@@ -720,7 +707,6 @@ object Knn {
     * on the same index and that surviving scores are the exact
     * cosines. */
   def ivfPqRefined(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val (cbooks, coarse, codes) = AnnIndex.ivfPqCached(spark, dir)
@@ -739,7 +725,6 @@ object Knn {
 
   private[graft] def ivfPqOn(spark: SparkSession, e: DataFrame, k: Int,
                              nprobe: Int = 1): DataFrame = {
-    Registry.register(spark)
     val (cbooks, coarse) = ivfPqFit(e)
     val cells = KMeans.assign(e, coarse).select(col("vec_id"), col("cluster"))
     val probes = if (nprobe <= 1) None
@@ -834,7 +819,6 @@ object Knn {
   private[graft] def sq8TopK(spark: SparkSession, e: DataFrame, k: Int)
       : DataFrame = {
     import spark.implicits._
-    Registry.register(spark)
     // Per-dim [lo, hi]: O(dim) output rows, O(dim) collect — a bounded
     // model parameter like the PQ/IVF codebooks, NOT a data loop.
     val stats = e.select(posexplode(col("embedding")).as(Seq("d", "x")))
@@ -884,7 +868,6 @@ object Knn {
     * (inertia monotone non-increasing, assignment = exact argmin,
     * map-only assignment plan, planted-duplicate co-clustering). */
   def kmeansProfile(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // fit on the bounded training frame (trainPin: pass-through under
     // the cap, pinned md5 sample past it); the assignment + rollup
@@ -907,7 +890,6 @@ object Knn {
     * trained codebook's inertia ≤ the sampled init's (the Lloyd
     * guarantee that makes "trained" better than "sampled"). */
   def ivfTrained(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // fit on the bounded training frame (trainPin: pass-through under
     // the cap, pinned md5 sample past it); the corpus-side assignment
@@ -944,7 +926,6 @@ object Knn {
 
   private[graft] def assignmentPair(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    Registry.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))

@@ -2,10 +2,13 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.expressions.BloomFileMightContain
 import graft.operators.{Search, SearchIndex}
 import graft.similarity.{AnnIndex, Knn}
 
@@ -362,7 +365,7 @@ object IndexMaintainStream {
     * file, so shard count = file count and the dir is self-describing
     * for [[bloomProbe]].
     *
-    * The probe side (graft_bloom_probe) loads each shard executor-side
+    * The probe side (BloomFileMightContain) loads each shard executor-side
     * by path, once per executor lifetime — per-epoch probe cost is
     * O(plan-literal path bytes), not O(filter bytes) (the collected-
     * literal and scalar-subquery alternatives both re-ship the filter
@@ -377,7 +380,6 @@ object IndexMaintainStream {
                                        key: org.apache.spark.sql.Column)
       : Unit = {
     val spark = src.sparkSession
-    graft.functions.Registry.register(spark)
     val est = math.max(rowCount, BloomFloorItems)
     // Batch-sized sidecars get the TIGHT density (aggregate probe FPP
     // is additive across accumulated deltas — see TightBitsPerKey);
@@ -402,8 +404,8 @@ object IndexMaintainStream {
     val rows = (if (shards == 1) keyed
                 else keyed.repartition(shards, col("shard")))
       .groupBy(col("shard"))
-      .agg(call_function("graft_bloom_agg", col("k"),
-        lit(shardEst), lit(shardBits)).as("filter"))
+      .agg(toColumn(new BloomFilterAggregate(toExpr(col("k")),
+        toExpr(lit(shardEst)), toExpr(lit(shardBits)))).as("filter"))
       .toLocalIterator()
     val seen = scala.collection.mutable.Set.empty[Int]
     rows.forEachRemaining { r =>
@@ -454,7 +456,7 @@ object IndexMaintainStream {
     }.sum
 
   /** OR-of-probes predicate over a set of sharded bloom sidecar dirs —
-    * `graft_bloom_probe` per sidecar, executor-cached by shard path
+    * BloomFileMightContain per sidecar, executor-cached by shard path
     * (see BloomFileCache for why neither a literal nor a scalar
     * subquery survives at mature filter sizes). Shard counts come from
     * a driver-side metadata listing (sidecars are immutable). `key`
@@ -468,8 +470,8 @@ object IndexMaintainStream {
       val p = new Path(d)
       val shards = fsFor(spark, p).listStatus(p)
         .count(_.getPath.getName.startsWith("shard-"))
-      call_function("graft_bloom_probe", lit(d), lit(math.max(shards, 1)),
-        key)
+      toColumn(BloomFileMightContain(toExpr(lit(d)),
+        toExpr(lit(math.max(shards, 1))), toExpr(key)))
     }.reduceOption(_ || _)
 
   /** Literal-IN scan of `df` on `colName`, CHUNKED so no single pushed

@@ -191,7 +191,6 @@ object PretrainStream {
     if (deltas.isEmpty) return (clean, None)
     val (bloomed, legacy) = deltas.partition(d =>
       IndexMaintainStream.hasBloomSidecar(spark, d))
-    graft.functions.Registry.register(spark)
     val probe = IndexMaintainStream.bloomProbe(spark,
       bloomed.map(d => s"$d/bloom"), xxhash64(col("norm_hash")))
     val (afterBloomed, pinned) = probe match {

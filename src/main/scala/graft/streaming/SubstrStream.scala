@@ -127,7 +127,6 @@ object SubstrStream {
     if (deltas.isEmpty) return (empty, None)
     val (bloomed, legacy) = deltas.partition(d =>
       IndexMaintainStream.hasBloomSidecar(spark, d))
-    graft.functions.Registry.register(spark)
     val key = gramKey(form)
     var pinned: Option[DataFrame] = None
     val confirmed: Option[DataFrame] = IndexMaintainStream.bloomProbe(spark,

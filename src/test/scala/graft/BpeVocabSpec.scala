@@ -286,4 +286,12 @@ class BpeVocabSpec extends AnyFunSuite {
       assert(jobs <= 2, s"$name ran $jobs jobs while building its DataFrame")
     }
   }
+
+  test("executing text_bpe_vocab runs no Spark job") {
+    // the merges are built on the driver in rank order (pinned above);
+    // a sort would plan a range exchange over the 16-row local table
+    val df = SparkEntry.queries("text_bpe_vocab")(spark, Sf)
+    val jobs = JobCount.jobsIn(spark, "text_bpe_vocab-exec")(df.collect())
+    assert(jobs === 0, s"text_bpe_vocab ran $jobs jobs to return its rows")
+  }
 }

@@ -56,7 +56,6 @@ class CompactionRaceSpec extends AnyFunSuite {
   test("dropCovered under an in-flight probe fails the task loudly; " +
        "re-delivery heals byte-identically against the cbatch run") {
     import spark.implicits._
-    graft.functions.Registry.register(spark)
     val empty = spark.emptyDataset[Doc].select(col("doc_id").as("train_doc_id"))
     val raced = tmp("racedroot")
 

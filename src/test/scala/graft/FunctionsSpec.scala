@@ -53,7 +53,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("cosine similarity on known vectors") {
     import spark.implicits._
-    functions.Registry.register(spark)
     val df = Seq((Seq(1.0, 0.0), Seq(0.0, 1.0)),
                  (Seq(1.0, 2.0), Seq(2.0, 4.0)),
                  (Seq(1.0, 0.0), Seq(-1.0, 0.0))).toDF("a", "b")

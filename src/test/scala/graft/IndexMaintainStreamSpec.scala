@@ -336,7 +336,6 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.Registry.register(spark)
     val dir = "/root/testdata/sf0.001"
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // frozen model — trained once offline, shared by stream and cold path
@@ -462,7 +461,6 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
       assert(f.getLen > 3000000L && f.getLen < 8000000L,
         s"${f.getPath.getName}: ${f.getLen} bytes — clamped or missized")
     }
-    graft.functions.Registry.register(spark)
     val probe = IndexMaintainStream.bloomProbe(spark,
       Seq(s"$root/bloom"), col("k")).get
     // member keys: never a false negative
@@ -500,7 +498,6 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
       .map(_.getLen).sum
     assert(shardBytes > 40000L && shardBytes < 80000L,
       s"$shardBytes bytes for 20k keys — expected ~50 KB at 20 bits/key")
-    graft.functions.Registry.register(spark)
     val probe = IndexMaintainStream.bloomProbe(spark, sidecars,
       col("k")).get
     // member keys across several deltas: never a false negative

@@ -11,10 +11,8 @@ import graft.similarity.KMeans
 class KMeansSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def emb() = {
-    functions.Registry.register(spark)
+  private def emb() =
     Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
-  }
 
   test("Lloyd inertia is monotone non-increasing and training improves on the init") {
     val (_, inertias) = KMeans.fit(emb(), k = 8, maxIter = 6)
@@ -80,7 +78,6 @@ class KMeansSpec extends AnyFunSuite {
 
   test("dedup_semantic co-clusters and emits planted exact duplicates") {
     import spark.implicits._
-    functions.Registry.register(spark)
     val rnd = new scala.util.Random(7)
     def vec() = Array.fill(64)(rnd.nextGaussian())
     val base = (0 until 12).map(i => (i.toLong, vec()))
@@ -100,7 +97,6 @@ class KMeansSpec extends AnyFunSuite {
 
   test("empty clusters keep their previous centroid (k > distinct points)") {
     import spark.implicits._
-    functions.Registry.register(spark)
     // 3 distinct points, k=5: at most 3 clusters can ever own a point
     val pts = Seq(
       (0L, Array(0.0, 0.0)), (17L, Array(10.0, 0.0)), (34L, Array(0.0, 10.0)),

@@ -19,7 +19,6 @@ class RqSpec extends AnyFunSuite {
     Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
 
   private lazy val encoded = {
-    graft.functions.Registry.register(spark)
     val (c1, c2) = similarity.Knn.fitRq(e)
     similarity.Knn.rqEncode(e, c1, c2).collect()
   }
@@ -48,7 +47,6 @@ class RqSpec extends AnyFunSuite {
   }
 
   test("trained codebooks keep monotone refinement and beat the sampled fit") {
-    graft.functions.Registry.register(spark)
     val (tc1, tc2) = similarity.Knn.fitRqTrained(e)
     val trained = similarity.Knn.rqEncode(e, tc1, tc2).collect()
     assert(trained.nonEmpty)

@@ -95,7 +95,6 @@ class SearchIndexedSpec extends AnyFunSuite {
     // duplicate against all of them, not only the ones that survive a
     // top-k cut where equal PQ codes tie.
     import graft.similarity.{AnnIndex, Knn}
-    functions.Registry.register(spark)
     val e = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
     val dup = e.filter(col("vec_id") === 1L)
       .select(lit(100001L).as("vec_id"), col("embedding"))
@@ -120,7 +119,6 @@ class SearchIndexedSpec extends AnyFunSuite {
     // so narrowing the served query set (and with it the pushed
     // probed-cell IN) never changes a surviving query's rows
     import graft.similarity.{AnnIndex, Knn}
-    functions.Registry.register(spark)
     val e = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
     val (cbooks, coarse, codes) = AnnIndex.ivfPqCached(spark, Sf)
     def rows(df: org.apache.spark.sql.DataFrame) =

@@ -58,7 +58,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("text_heavy_hitters: sketch pass agrees with the exact groupBy") {
-    graft.functions.Registry.register(spark)
     val viaSketch = operators.TextOps.heavyHitters(spark, Sf)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     // The straight formulation the DuckDB oracle uses.

@@ -22,10 +22,8 @@ import graft.similarity.KMeans
 class TrainPinSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def emb() = {
-    functions.Registry.register(spark)
+  private def emb() =
     Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
-  }
 
   test("under the cap the pin is the input, row for row") {
     val e = emb()
