@@ -325,7 +325,7 @@ object Dedup {
     * makes minhash scale. The fixed hash family lives in MinHashFamily
     * (stable across runs/partitions, as a resumable pipeline needs). */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
-    minhashPairs(spark, Tables.documents(spark, dir))
+    minhashPairs(Tables.documents(spark, dir))
 
   /** Frame-level core (docs must have doc_id + text): candidate pairs.
     * (Measured note: a per-row HOF shingle transform — even without
@@ -350,7 +350,7 @@ object Dedup {
     * phash decode-once pattern; also stops guardedStarPairs' two
     * branches re-running the shingle window + signature aggregate).
     * Output identical: est_jaccard is a function of the pair. */
-  def minhashPairs(spark: SparkSession, docs: DataFrame,
+  def minhashPairs(docs: DataFrame,
                    maxBucket: Int = MaxBucket): DataFrame = {
     val P = graft.functions.expressions.MinHashFamily.P
     val hashed = shingleRows(docs, distinct = false)
@@ -395,7 +395,7 @@ object Dedup {
     * pair appears in the exact ngram_jaccard output with the SAME
     * jaccard. */
   def minhashVerified(spark: SparkSession, dir: String): DataFrame =
-    minhashVerifiedOn(spark, Tables.documents(spark, dir))
+    minhashVerifiedOn(Tables.documents(spark, dir))
 
   /** Candidate-bounded shingle frame for the verify stage: the corpus
     * is semi-joined down to ONLY the docs that appear in a candidate
@@ -414,13 +414,12 @@ object Dedup {
       .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
   }
 
-  private[graft] def minhashVerifiedOn(spark: SparkSession,
-                                       docs: DataFrame): DataFrame = {
+  private[graft] def minhashVerifiedOn(docs: DataFrame): DataFrame = {
     // checkpoint the candidate set first: it feeds the semi-join AND
     // both verify-join sides, and the minhash pipeline above it must
     // run exactly once (lazy + private materialization; cache() would
     // leak into the session CacheManager)
-    val cands = minhashPairs(spark, docs).select(col("doc_a"), col("doc_b"))
+    val cands = minhashPairs(docs).select(col("doc_a"), col("doc_b"))
       .localCheckpoint(false)
     // one candidate-bounded shingle pipeline feeds both pair sides
     val ex = candidateShingles(docs, cands).localCheckpoint(false)
@@ -457,10 +456,9 @@ object Dedup {
     * the split (identical signatures ⇒ guaranteed collision) and
     * pins batch-never-self-pairs. */
   def minhashIncremental(spark: SparkSession, dir: String): DataFrame =
-    minhashIncrementalOn(spark, Tables.documents(spark, dir))
+    minhashIncrementalOn(Tables.documents(spark, dir))
 
-  private[graft] def minhashIncrementalOn(spark: SparkSession,
-                                          docs: DataFrame): DataFrame = {
+  private[graft] def minhashIncrementalOn(docs: DataFrame): DataFrame = {
     val P = graft.functions.expressions.MinHashFamily.P
     val hashed = shingleRows(docs, distinct = false)
       .withColumn("h", pmod(xxhash64(col("shingle")), lit(P)))
@@ -1054,12 +1052,12 @@ object Dedup {
     val n = math.max(e.count(), 2L)
     val r = math.max(4, math.min(24,
       math.ceil(math.log(n.toDouble) / math.log(2.0)).toInt))
-    embedLshPairs(spark, e, bands = 16, planesPerBand = r, threshold = 0.3)
+    embedLshPairs(e, bands = 16, planesPerBand = r, threshold = 0.3)
   }
 
   /** Frame-level core (rows must have vec_id + embedding): banded
     * LSH near-dup pairs with the oversized-bucket star fallback. */
-  def embedLshPairs(spark: SparkSession, e: DataFrame, bands: Int,
+  def embedLshPairs(e: DataFrame, bands: Int,
                     planesPerBand: Int, threshold: Double,
                     maxBucket: Int = 1024): DataFrame = {
     val banded = e

@@ -198,7 +198,7 @@ object Search {
     // OWN probed cells via the cluster equality, so dropping another
     // query's cells never changes this query's scores.
     val shortlist = graft.similarity.Knn
-      .ivfPqServe(spark, e.filter(col("vec_id").isin(1L, 2L, 3L)), 80,
+      .ivfPqServe(e.filter(col("vec_id").isin(1L, 2L, 3L)), 80,
         nprobe = 3, cbooks, coarse, codes)
       .select(col("query_id").as("sl_query"), col("neighbor_id").as("sl_nb"))
     val q = e.filter(col("vec_id").isin(1L, 2L, 3L))

@@ -789,15 +789,14 @@ object TextOps {
     * is rows-only by design; SketchSpec pins known-answer orderings,
     * determinism, and interpreted-vs-codegen parity. */
   def compressRatio(spark: SparkSession, dir: String): DataFrame =
-    compressRatioOn(spark, Tables.documents(spark, dir))
+    compressRatioOn(Tables.documents(spark, dir))
 
   /** Frame-level core ((doc_id, text) rows; OracleEdgeSpec plants the
     * empty-document fixture through it). A zero-byte document has no
     * compressibility — ratio/degenerate NULL by construction, never an
     * ANSI DIVIDE_BY_ZERO crash (the crash class the edge sweep
     * exists for — an empty text field WILL occur in a web corpus). */
-  private[graft] def compressRatioOn(spark: SparkSession,
-                                     docs: DataFrame): DataFrame = {
+  private[graft] def compressRatioOn(docs: DataFrame): DataFrame = {
     val seeded = docs.select(
       col("doc_id"),
       when(col("doc_id") % 8 === 0, repeat(substring(col("text"), 1, 16), 40))

@@ -307,7 +307,7 @@ object Knn {
       .orderBy(col("vec_id")).limit(K)
       .select(col("embedding")).as[Seq[Float]].collect()
     require(sampled.nonEmpty, "PQ codebook sample is empty")
-    pqSearch(spark, e, k, (0 until M).map { m =>
+    pqSearch(e, k, (0 until M).map { m =>
       sampled.toIndexedSeq.map(v =>
         v.slice(m * subDim, (m + 1) * subDim).map(_.toDouble).toArray)
     })
@@ -321,7 +321,7 @@ object Knn {
     * ONLY inside the query's cell — the IVF-PQ composition: the ADC
     * join picks up a cluster equality, so the candidate set shrinks
     * from the corpus to ~N/K_coarse before any scoring work. */
-  private def pqSearch(spark: SparkSession, e: DataFrame, k: Int,
+  private def pqSearch(e: DataFrame, k: Int,
       cbooks: IndexedSeq[IndexedSeq[Array[Double]]],
       cells: Option[DataFrame] = None,
       probes: Option[DataFrame] = None): DataFrame = {
@@ -336,7 +336,7 @@ object Knn {
         cf.select(col("vec_id").as("query_id"),
                   col("cluster").as("q_cluster")))
     }
-    adcRank(spark, codes, e, k, cbooks, qCells)
+    adcRank(codes, e, k, cbooks, qCells)
   }
 
   /** Corpus encode: one row per (vector, subspace); the best codeword
@@ -375,7 +375,7 @@ object Knn {
     * the LUT replicates per probed cell, but the join's cluster
     * equality lets a candidate match ONLY the replica of its own cell,
     * so scores are never double-counted. */
-  private[graft] def adcRank(spark: SparkSession, codes: DataFrame,
+  private[graft] def adcRank(codes: DataFrame,
       e: DataFrame, k: Int,
       cbooks: IndexedSeq[IndexedSeq[Array[Double]]],
       qCells: Option[DataFrame]): DataFrame = {
@@ -420,7 +420,7 @@ object Knn {
     * coarse centroids and ADC-ranks through the broadcast LUT. This is
     * the query-time cost profile a production ANN deployment actually
     * has (the index is built offline, once per corpus). */
-  private[graft] def ivfPqServe(spark: SparkSession, e: DataFrame, k: Int,
+  private[graft] def ivfPqServe(e: DataFrame, k: Int,
       nprobe: Int, cbooks: IndexedSeq[IndexedSeq[Array[Double]]],
       coarse: IndexedSeq[Array[Double]], codes: DataFrame): DataFrame = {
     val probes = probeClusters(e.filter(isQuery), coarse, nprobe)
@@ -436,7 +436,7 @@ object Knn {
       .collect().map(_.getInt(0)).sorted
     val prunedCodes =
       codes.filter(col("cluster").isin(probedCells.map(Integer.valueOf): _*))
-    adcRank(spark, prunedCodes, e, k, cbooks, Some(probes))
+    adcRank(prunedCodes, e, k, cbooks, Some(probes))
   }
 
   /** PQ/ADC top-10 over the embeddings table (see pqTopK). */
@@ -458,7 +458,7 @@ object Knn {
   def pqTrained(spark: SparkSession, dir: String): DataFrame = {
     val M = 4; val subDim = 16; val K = 16
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    pqTrainedOn(spark, e, M, subDim, K, 10)
+    pqTrainedOn(e, M, subDim, K, 10)
   }
 
   /** Frame-level trained-PQ core (shared with PqSpec's planted run).
@@ -472,7 +472,7 @@ object Knn {
     * re-execute the corpus scan M × rounds times at 100 TB (the slice
     * is map-only, but its INPUT is the full scan); the search
     * (encode + ADC) still runs over the full frame. */
-  private[graft] def pqTrainedOn(spark: SparkSession, e: DataFrame, M: Int,
+  private[graft] def pqTrainedOn(e: DataFrame, M: Int,
       subDim: Int, K: Int, k: Int): DataFrame = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -484,7 +484,7 @@ object Knn {
           slice(col("embedding"), m * subDim + 1, subDim).as("embedding")),
           K, 3)._1
       }}), Duration.Inf).toIndexedSeq
-    pqSearch(spark, e, k, cbooks)
+    pqSearch(e, k, cbooks)
   }
 
   /** Residual (two-level / multi-codebook) quantization — the
@@ -583,14 +583,14 @@ object Knn {
   /** RQ/ADC top-k: candidates carry only their two byte codes; a
     * query's score against a candidate is two broadcast-LUT lookups
     * hash-summed, then the TopKPerKey bounded heap. */
-  def rqTopK(spark: SparkSession, e: DataFrame, k: Int): DataFrame = {
+  def rqTopK(e: DataFrame, k: Int): DataFrame = {
     val (c1, c2) = fitRq(e)
-    rqSearch(spark, e, k, c1, c2)
+    rqSearch(e, k, c1, c2)
   }
 
   /** RQ search against explicit level-1/level-2 codebooks (see rqTopK
     * for the sampled fit, rqTrained for the k-means one). */
-  private def rqSearch(spark: SparkSession, e: DataFrame, k: Int,
+  private def rqSearch(e: DataFrame, k: Int,
       c1: IndexedSeq[Array[Float]], c2: IndexedSeq[Array[Float]]): DataFrame = {
     val candCodes = rqEncode(e, c1, c2)
       .select(col("vec_id"), explode(array(
@@ -640,7 +640,7 @@ object Knn {
   def rqTrained(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val (c1, c2) = fitRqTrained(e)
-    rqSearch(spark, e, 10, c1, c2)
+    rqSearch(e, 10, c1, c2)
   }
 
   /** Trained RQ codebooks (shared with RqSpec). Both levels train on
@@ -671,7 +671,7 @@ object Knn {
 
   /** RQ/ADC top-10 over the embeddings table (see rqTopK). */
   def rq(spark: SparkSession, dir: String): DataFrame =
-    rqTopK(spark,
+    rqTopK(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), 10)
 
   /** IVF-PQ — the composition production ANN indexes actually ship
@@ -688,7 +688,7 @@ object Knn {
     * duplicate lands in the query's cell by argmin determinism and
     * must win its ADC). */
   def ivfPq(spark: SparkSession, dir: String): DataFrame =
-    ivfPqOn(spark,
+    ivfPqOn(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")), 10)
 
   /** IVF-PQ + exact REFINE — Faiss's IndexRefineFlat pattern, the
@@ -710,7 +710,7 @@ object Knn {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val (cbooks, coarse, codes) = AnnIndex.ivfPqCached(spark, dir)
-    val cands = ivfPqServe(spark, e, 50, 3, cbooks, coarse, codes)
+    val cands = ivfPqServe(e, 50, 3, cbooks, coarse, codes)
       .select(col("query_id"), col("neighbor_id"))
     val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -723,13 +723,13 @@ object Knn {
     rankTopK(scored, 10)
   }
 
-  private[graft] def ivfPqOn(spark: SparkSession, e: DataFrame, k: Int,
+  private[graft] def ivfPqOn(e: DataFrame, k: Int,
                              nprobe: Int = 1): DataFrame = {
     val (cbooks, coarse) = ivfPqFit(e)
     val cells = KMeans.assign(e, coarse).select(col("vec_id"), col("cluster"))
     val probes = if (nprobe <= 1) None
       else Some(probeClusters(e.filter(isQuery), coarse, nprobe))
-    pqSearch(spark, e, k, cbooks, cells = Some(cells), probes = probes)
+    pqSearch(e, k, cbooks, cells = Some(cells), probes = probes)
   }
 
   /** The IVF-PQ model fit (coarse quantizer + M sub-codebooks) shared

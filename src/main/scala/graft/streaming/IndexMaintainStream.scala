@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
@@ -159,12 +159,12 @@ object IndexMaintainStream {
   }
 
   /** Visible delta dirs (newest compacted run first, then plain deltas
-    * above its watermark) — for consumers that keep PER-DELTA sidecar
-    * tables (e.g. PretrainStream's bloom membership sketches) and so
-    * need the delta paths, not just the union read. Same driver-side
-    * metadata listing as [[readTable]]. */
-  private[streaming] def visibleDeltas(spark: SparkSession,
-                                       root: String): Seq[Path] = {
+    * above its watermark) — for the per-delta sidecars ([[committedKeys]],
+    * [[estimatedCommittedKeys]]) and per-delta sizes, which need the
+    * delta paths, not just the union read. Same driver-side metadata
+    * listing as [[readTable]]. */
+  private def visibleDeltas(spark: SparkSession,
+                            root: String): Seq[Path] = {
     val (best, plain) = committed(spark, root)
     (best.toSeq ++ plain).map(_._1)
   }
@@ -288,7 +288,7 @@ object IndexMaintainStream {
   def annServe(spark: SparkSession, root: String, e: DataFrame, k: Int,
                nprobe: Int, cbooks: IndexedSeq[IndexedSeq[Array[Double]]],
                coarse: IndexedSeq[Array[Double]]): DataFrame =
-    Knn.ivfPqServe(spark, e, k, nprobe, cbooks, coarse,
+    Knn.ivfPqServe(e, k, nprobe, cbooks, coarse,
       readTable(spark, root, "codes"))
 
   // ------------------------------------------------------- bloom sidecars
@@ -422,8 +422,8 @@ object IndexMaintainStream {
   /** Whether `deltaPath` carries a bloom sidecar dir at all (an
     * all-empty sidecar — an empty delta — still counts: it covers its
     * zero keys). */
-  private[streaming] def hasBloomSidecar(spark: SparkSession,
-                                         deltaPath: Path): Boolean =
+  private def hasBloomSidecar(spark: SparkSession,
+                              deltaPath: Path): Boolean =
     fsFor(spark, deltaPath).exists(new Path(deltaPath, "bloom"))
 
   /** Estimated COMMITTED key count under `root`, read from the bloom
@@ -433,7 +433,7 @@ object IndexMaintainStream {
     * driver-side metadata listing — O(#deltas · #shards) file
     * statuses, zero data read, additive across deltas — which is what
     * makes it cheap enough to consult EVERY micro-batch (the
-    * state-aware pregate gate in PretrainStream/SubstrStream). Deltas
+    * state-aware gate, [[pregateActive]]). Deltas
     * without a sidecar contribute 0 (conservative: the probe handles
     * them through the exact legacy path anyway); the per-delta
     * 1000-key sizing floor overestimates tiny deltas by ≤2.5 KB each —
@@ -489,6 +489,94 @@ object IndexMaintainStream {
     values.grouped(graft.GraftSession.InScanChunk)
       .map(vs => df.filter(col(colName).isin(vs: _*)))
       .reduce(_ union _)
+
+  // ------------------------------------------------- committed-key probe
+
+  /** Verified keys pushed as IN-literals into the clustered state scan
+    * up to this many; past it the verify falls back to a broadcast semi
+    * join (still scan-only on the state side). The literal route is
+    * CHUNKED ([[literalInScan]]), so this cap bounds total literal
+    * count / union fan-out, never the depth of a single pushed
+    * predicate. var only so specs can lower it to exercise the
+    * fallback branch with test-sized batches. */
+  private[graft] var InPushdownCap = 10000
+
+  /** Whether an epoch runs [[committedKeys]]' bloom-pregated arm:
+    * committed state, estimated from the sidecars' bytes
+    * ([[estimatedCommittedKeys]]), has reached `minKeys` — below it the
+    * naive arm is the cheaper epoch (each stream's
+    * DefaultPregateMinKeys documents its measured crossover). State
+    * only grows, so the gate flips once per root's life. `minKeys = 0`
+    * forces the pregate arm and `Long.MaxValue` the naive arm (the A/B
+    * harnesses' two settings). */
+  private[graft] def pregateActive(spark: SparkSession, root: String,
+                                   minKeys: Long): Boolean =
+    minKeys <= 0L || estimatedCommittedKeys(spark, root) >= minKeys
+
+  /** The committed keys of `table` (one `key` column under its writer's
+    * declared `schema`) that `batchKeys` can match: the right side of a
+    * stream's dedup anti-join (PretrainStream) or probe semi join
+    * (SubstrStream). Below `minKeys` committed keys ([[pregateActive]])
+    * it is the whole committed table — the naive target, which the join
+    * re-shuffles every epoch, O(state) per batch. Past it the target
+    * shrinks to the CONFIRMED batch-relevant sliver:
+    *
+    *   1. probe — the `batchKeys` rows (distinct keys) that any visible
+    *      delta's bloom sidecar maybe-contains, `bloomKey` being the
+    *      LONG the sidecars were built over. Blooms have no false
+    *      negatives, so an unflagged key is DEFINITELY new. The
+    *      positives are materialized ONCE (eager local checkpoint): the
+    *      limit-collect and — past the cap — the broadcast semi branch
+    *      read the same blocks instead of re-running the probe pass.
+    *   2. verify — the positives meet the bloomed deltas' state exactly:
+    *      chunked IN-literals into the key-clustered compacted run up to
+    *      [[InPushdownCap]] (row-group min/max skip the rest), a
+    *      broadcast semi join past it — either way the state is
+    *      scanned, never shuffled. Zero positives skip the state read.
+    *   3. legacy — deltas without a sidecar (pre-bloom roots) contribute
+    *      their keys verbatim: exact, slower, healed by the next
+    *      compaction's rebuilt sidecar.
+    *
+    * Either arm's target holds every committed key in `batchKeys` and
+    * nothing outside the committed set, so a join against it is
+    * row-identical to the naive arm's (false positives are verified
+    * away). The second slot is the pinned positives frame: the caller
+    * frees it (graft.CheckpointBlocks.free) once the epoch's writes
+    * have consumed it — Dataset.unpersist never frees checkpoint
+    * blocks. `batchKeys` is by-name: the naive arm builds no frame it
+    * does not join. */
+  private[graft] def committedKeys(spark: SparkSession, root: String,
+                                   table: String, schema: StructType,
+                                   key: String, batchKeys: => DataFrame,
+                                   bloomKey: org.apache.spark.sql.Column,
+                                   minKeys: Long)
+      : (DataFrame, Option[DataFrame]) = {
+    def none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    if (!pregateActive(spark, root, minKeys))
+      return (try readTable(spark, root, table, schema)
+              catch { case _: IllegalArgumentException => none }, None)
+    val (bloomed, legacy) =
+      visibleDeltas(spark, root).partition(hasBloomSidecar(spark, _))
+    def keysOf(deltas: Seq[Path]) =
+      spark.read.schema(schema).parquet(deltas.map(d => s"$d/$table"): _*)
+    val positives = bloomProbe(spark, bloomed.map(d => s"$d/bloom"), bloomKey)
+      .map(maybeSeen => batchKeys.filter(maybeSeen).localCheckpoint(true))
+    val confirmed = positives.flatMap { pos =>
+      val pk = pos.limit(InPushdownCap + 1).collect().map(_.get(0)).toSeq
+      if (pk.isEmpty) None
+      else Some(
+        (if (pk.length <= InPushdownCap) literalInScan(keysOf(bloomed), key, pk)
+         else keysOf(bloomed).join(broadcast(pos), Seq(key), "left_semi"))
+          .select(col(key)).distinct())
+    }
+    val target = (confirmed, legacy.nonEmpty) match {
+      case (None, false)    => none
+      case (Some(c), false) => broadcast(c)
+      case (None, true)     => keysOf(legacy)
+      case (Some(c), true)  => c.union(keysOf(legacy))
+    }
+    (target, positives)
+  }
 
   // ----------------------------------------------------------- compaction
 

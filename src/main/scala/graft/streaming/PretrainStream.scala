@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -45,8 +45,10 @@ import graft.operators.TextOps
   * committed state and total ingest cost is QUADRATIC in corpus size
   * (tools.StreamLadder measures exactly this). Instead, each delta
   * carries a bloom sidecar over its OWN new hashes (Spark's mergeable
-  * BloomFilterAggregate, the dedup_bloom_incremental precedent), and a
-  * micro-batch runs:
+  * BloomFilterAggregate, the dedup_bloom_incremental precedent), and
+  * once committed state passes [[DefaultPregateMinKeys]] a micro-batch
+  * runs IndexMaintainStream.committedKeys (the one seen-key probe,
+  * shared with SubstrStream's gram index):
   *
   *   1. probe — a map-only pass flags batch rows whose hash ANY
   *      visible delta's bloom maybe-contains. Blooms have no false
@@ -61,8 +63,9 @@ import graft.operators.TextOps
   *      literal cap. Zero flagged rows skip the state read entirely.
   *   3. the confirmed-dup hash set (≤ flagged, tiny) broadcast
   *      anti-joins the batch — false positives are removed, so the
-  *      output is EXACTLY the naive path's (`pregate = false` keeps
-  *      that path runnable; PretrainStreamSpec proves equality).
+  *      output is EXACTLY the naive path's (`pregateMinKeys =
+  *      Long.MaxValue` forces that path; PretrainStreamSpec proves
+  *      equality).
   *
   * Deltas are immutable once committed, so each sidecar's
   * deserialized filter is cached EXECUTOR-side by path
@@ -111,25 +114,8 @@ object PretrainStream {
     .add("n_words", LongType, nullable = true)
     .add("text", StringType, nullable = true)
 
-  /** Union of committed seen-hash deltas (empty frame before the first
-    * commit). */
-  private def priorHashes(spark: SparkSession, root: String): DataFrame =
-    try IndexMaintainStream.readTable(spark, root, "hashes", hashSchema)
-    catch {
-      case _: IllegalArgumentException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], hashSchema)
-    }
-
-  /** Verified-dup hashes pushed as IN-literals into the clustered state
-    * scan up to this many; past it the verify falls back to a broadcast
-    * semi join (still scan-only on the state side). The literal route
-    * is CHUNKED (IndexMaintainStream.literalInScan — one scan per
-    * ≤GraftSession.InScanChunk values), so this cap bounds total
-    * literal count / union fan-out, never the depth of a single pushed
-    * predicate. var only so specs can lower it to exercise the
-    * fallback branch with test-sized batches. */
-  private[graft] var InPushdownCap = 10000
+  /** The LONG every seen-hash bloom sidecar is built over and probed by. */
+  private val BloomKey = xxhash64(col("norm_hash"))
 
   /** State-aware pregate gate: below this many committed keys the
     * NAIVE full anti-join is the cheaper epoch — the probe+verify
@@ -145,92 +131,11 @@ object PretrainStream {
     * running StreamLadder's A/B rungs on the target cluster and
     * passing the measured crossover to [[start]] (README,
     * "Calibrating the streaming pregate on a cluster").
-    * State only grows, so the gate flips once per root's life;
-    * sidecars are WRITTEN from the first epoch regardless, so the
-    * root is pregate-ready the moment it crosses. Committed size is
-    * estimated from the sidecars' own bytes
-    * (IndexMaintainStream.estimatedCommittedKeys — a driver-side
-    * listing, no data read). */
+    * `pregateMinKeys = 0` forces the pregate arm and `Long.MaxValue`
+    * the naive arm; sidecars are WRITTEN from the first epoch on either
+    * arm, so the root is pregate-ready the moment it crosses
+    * (IndexMaintainStream.pregateActive documents the gate). */
   private[graft] val DefaultPregateMinKeys = 50000000L
-
-  /** Whether this epoch should run the bloom-pregated path: the caller
-    * wants it AND committed state is past the crossover. Both streams'
-    * A/B harnesses force the arms with minKeys = 0 / pregate = false. */
-  private[graft] def pregateActive(spark: SparkSession, root: String,
-                                   pregate: Boolean,
-                                   minKeys: Long): Boolean =
-    pregate && (minKeys <= 0L ||
-      IndexMaintainStream.estimatedCommittedKeys(spark, root) >= minKeys)
-
-  /** Rows of `clean` whose norm_hash is NOT in the committed seen-set.
-    * `pregate = true` is the bloom-probe path documented on the object
-    * (exactly the naive result — FPs verified away, no FNs possible);
-    * `false` is the naive full anti-join, kept for A/B measurement.
-    *
-    * The probe runs over `delivered`'s RAW content hashes (one cheap
-    * map pass — md5 of the normalized text), not over `clean`: gates
-    * can only SHRINK the batch, so every clean row's hash is among the
-    * raw hashes and no-false-negatives is preserved, while the probe
-    * job skips evaluating the gate chain's expressions. Extra positives
-    * from gate-failing docs only pad the verify sliver. */
-  /** Returns the first-seen frame plus the eagerly-checkpointed
-    * positives frame when the pregate path pinned one — the CALLER
-    * (processBatch) releases its blocks once the epoch's writes have
-    * consumed it; without the explicit release each micro-batch would
-    * pin another block set reclaimed only by GC-lazy ContextCleaner
-    * (Dataset.unpersist never frees checkpoint blocks — see
-    * [[graft.CheckpointBlocks]]). */
-  private def firstSeenOf(spark: SparkSession, root: String,
-                          delivered: DataFrame, clean: DataFrame,
-                          pregate: Boolean): (DataFrame, Option[DataFrame]) = {
-    if (!pregate)
-      return (clean.join(priorHashes(spark, root), Seq("norm_hash"),
-        "left_anti"), None)
-    // pregate decided by processBatch's gate; reaching here means ON
-    val deltas = IndexMaintainStream.visibleDeltas(spark, root)
-    if (deltas.isEmpty) return (clean, None)
-    val (bloomed, legacy) = deltas.partition(d =>
-      IndexMaintainStream.hasBloomSidecar(spark, d))
-    val probe = IndexMaintainStream.bloomProbe(spark,
-      bloomed.map(d => s"$d/bloom"), xxhash64(col("norm_hash")))
-    val (afterBloomed, pinned) = probe match {
-      case None => (clean, None)
-      case Some(maybeSeen) =>
-        // Materialized ONCE (eager local checkpoint): the limit-collect
-        // below and — past the cap — the broadcast semi branch both
-        // read the same blocks, instead of the fallback re-running the
-        // whole extraction+probe pass a second time.
-        val positives = delivered
-          .select(md5(normText(col("text"))).as("norm_hash"))
-          .distinct().filter(maybeSeen)
-          .localCheckpoint(true)
-        val ph = positives.limit(InPushdownCap + 1)
-          .collect().map(_.getString(0)).toSeq
-        if (ph.isEmpty) (clean, Some(positives)) // every row definitely new
-        else {
-          val state = spark.read.schema(hashSchema)
-            .parquet(bloomed.map(d => s"$d/hashes"): _*)
-          val confirmed =
-            if (ph.length <= InPushdownCap)
-              // chunked: one pushed IN per ≤InScanChunk literals — a
-              // single cap-sized IN is a recursive Or tree deep enough
-              // to overflow the task stack (GraftSession.InScanChunk)
-              IndexMaintainStream.literalInScan(state, "norm_hash", ph)
-            else state.join(broadcast(positives), Seq("norm_hash"),
-              "left_semi")
-          (clean.join(
-            broadcast(confirmed.select(col("norm_hash")).distinct()),
-            Seq("norm_hash"), "left_anti"), Some(positives))
-        }
-    }
-    val out =
-      if (legacy.isEmpty) afterBloomed
-      else afterBloomed.join(
-        spark.read.schema(hashSchema)
-          .parquet(legacy.map(d => s"$d/hashes"): _*),
-        Seq("norm_hash"), "left_anti")
-    (out, pinned)
-  }
 
   /** One micro-batch: gate, dedup against the committed seen-set,
     * holdout + decontaminate, commit the epoch delta atomically.
@@ -244,14 +149,9 @@ object PretrainStream {
                                   contaminated: DataFrame,
                                   root: String,
                                   epoch: Long,
-                                  pregate: Boolean = true,
                                   pregateMinKeys: Long = DefaultPregateMinKeys)
       : Boolean = {
     val spark = delivered.sparkSession
-    // state-aware: below the crossover the naive anti-join is cheaper
-    // (see DefaultPregateMinKeys); sidecars are still written so the
-    // root is pregate-ready the moment committed state crosses
-    val gated = pregateActive(spark, root, pregate, pregateMinKeys)
     // the epoch's checkpointed frames (its keepers, and the pregate's
     // positives) are released once the epoch's writes have consumed
     // them (finally, so a failed epoch doesn't leak the blocks either)
@@ -260,8 +160,16 @@ object PretrainStream {
         staging =>
       val clean = TextOps.cleanDocs(delivered)
         .withColumn("norm_hash", md5(normText(col("text"))))
-      val (firstSeen, pin) = firstSeenOf(spark, root, delivered, clean, gated)
+      // The probe runs over `delivered`'s RAW content hashes (one cheap
+      // map pass), not over `clean`: gates only SHRINK the batch, so
+      // every clean hash is among the raw ones (no false negatives),
+      // and the probe job skips the gate chain's expressions.
+      val (seen, pin) = IndexMaintainStream.committedKeys(spark, root,
+        "hashes", hashSchema, "norm_hash",
+        delivered.select(md5(normText(col("text"))).as("norm_hash")).distinct(),
+        BloomKey, pregateMinKeys)
       pinned = pin.toList
+      val firstSeen = clean.join(seen, Seq("norm_hash"), "left_anti")
       val byHash = Window.partitionBy(col("norm_hash")).orderBy(col("doc_id"))
       // Consumed three times (hashes, bloom sidecar, docs), so the
       // gate, dedup and window run ONCE: the keepers are pinned and
@@ -275,8 +183,8 @@ object PretrainStream {
       pinned ::= keepers
       keepers.select(col("norm_hash"))
         .write.parquet(s"$staging/hashes")
-      if (pregate) IndexMaintainStream.writeBloomSidecar(keepers, nKeepers,
-        s"$staging/bloom", xxhash64(col("norm_hash")))
+      IndexMaintainStream.writeBloomSidecar(keepers, nKeepers,
+        s"$staging/bloom", BloomKey)
       keepers
         .filter(TextOps.holdoutCoin(col("doc_id")) =!= 15)
         .join(contaminated, col("doc_id") === col("train_doc_id"),
@@ -290,13 +198,11 @@ object PretrainStream {
     * (doc_id: long, lang, text). The accepted corpus and the seen-hash
     * set accumulate under `root`. */
   def start(docs: DataFrame, contaminated: DataFrame, root: String,
-            pregate: Boolean = true,
             pregateMinKeys: Long = DefaultPregateMinKeys): StreamingQuery =
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        processBatch(batch, contaminated, root, epoch, pregate,
-          pregateMinKeys); ()
+        processBatch(batch, contaminated, root, epoch, pregateMinKeys); ()
       }
       .start()
 
@@ -327,7 +233,7 @@ object PretrainStream {
       acceptedDocs(spark, root).write.parquet(s"$stg/docs")
       val folded = spark.read.schema(hashSchema).parquet(s"$stg/hashes")
       IndexMaintainStream.writeBloomSidecar(folded, folded.count(),
-        s"$stg/bloom", xxhash64(col("norm_hash")))
+        s"$stg/bloom", BloomKey)
     }
     IndexMaintainStream.dropCovered(spark, root)
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -34,8 +34,9 @@ import graft.dedup.SubstrDedup
   * Per-epoch cost is O(batch), not O(state): each delta carries a
   * bloom sidecar over its own gram keys, and the probe join's state
   * side shrinks to the bloom-confirmed batch-relevant sliver before
-  * any join — see [[probeTarget]] (the PretrainStream seen-set design
-  * applied to the gram index; tools.StreamLadder measures both). */
+  * any join — IndexMaintainStream.committedKeys, the one seen-key
+  * probe PretrainStream's seen-set also runs (tools.StreamLadder
+  * measures both). */
 object SubstrStream {
 
   /** Wire form of the persisted gram index: `hashed = false` stores
@@ -57,6 +58,14 @@ object SubstrStream {
 
   private def gramKey(hashed: Boolean) = if (hashed) "kh" else "kg"
 
+  /** The LONG every gram bloom sidecar is built over and probed by. */
+  private def bloomKey(hashed: Boolean) =
+    if (hashed) col("kh") else xxhash64(col("kg"))
+
+  private def gramsOf(delivered: DataFrame, hashed: Boolean): DataFrame =
+    if (hashed) SubstrDedup.gramsOfHashed(delivered, SubstrDedup.MinRun)
+    else SubstrDedup.gramsOf(delivered, SubstrDedup.MinRun)
+
   /** The root's established wire form, read from the committed gram
     * table's schema — None when nothing is committed yet (the only
     * moment the caller's flag decides). */
@@ -66,24 +75,6 @@ object SubstrStream {
       val cols = IndexMaintainStream.readTable(spark, root, "grams").columns
       Some(cols.contains("kh"))
     } catch { case _: IllegalArgumentException => None }
-
-  private def priorGrams(spark: SparkSession, root: String,
-                         hashed: Boolean): DataFrame =
-    try IndexMaintainStream.readTable(spark, root, "grams")
-    catch {
-      case _: IllegalArgumentException =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], gramSchema(hashed))
-    }
-
-  /** Confirmed-gram keys pushed as IN-literals into the clustered state
-    * scan up to this many; past it the verify falls back to a broadcast
-    * semi join (still scan-only on the state side). Chunked per scan
-    * like the pretrain verify (IndexMaintainStream.literalInScan) so
-    * no single pushed IN is a stack-deep Or tree. var only so specs
-    * can lower it to exercise the fallback branch with test-sized
-    * batches. */
-  private[graft] var InPushdownCap = 10000
 
   /** The gram index's OWN pregate crossover, measured (round-12
     * StreamLadder A/B, 20k docs/epoch, last-quartile means): naive
@@ -97,89 +88,20 @@ object SubstrStream {
     * crossover earlier — calibrate with StreamLadder's A/B rungs
     * (mode=substr) on the target cluster and pass the measured value
     * to [[start]] (README, "Calibrating the streaming pregate on a
-    * cluster"). */
+    * cluster"). `pregateMinKeys = 0` forces the pregate arm and
+    * `Long.MaxValue` the naive arm; every epoch writes its sidecar on
+    * either arm. */
   private[graft] val DefaultPregateMinKeys = 100000000L
 
-  /** The probe TARGET for one micro-batch. The naive target (`pregate =
-    * false`) is the full committed gram set — a left-semi whose state
-    * side re-shuffles every epoch, O(state) per batch
-    * (tools.StreamLadder's finding on the pretrain root applies
-    * verbatim). With the bloom sidecars the target shrinks to the
-    * CONFIRMED batch-relevant sliver: batch gram keys that any delta's
-    * bloom maybe-contains (no false negatives — an unflagged key
-    * cannot be in the corpus) verified exactly against the state scan
-    * (IN-literal pushdown into the key-clustered compacted run when
-    * few; broadcast semi past the cap — either way the state never
-    * shuffles), so the downstream probe join's right side is tiny and
-    * broadcastable. Any delta without a sidecar (pre-bloom root)
-    * contributes its grams verbatim — exact, slower, self-healing at
-    * the next compaction (which rebuilds one bloom over everything).
-    * Correctness: the target is a SUBSET of the committed grams
-    * containing every key the batch can match, so the left-semi probe
-    * is row-identical to the naive path's. */
-  private def probeTarget(spark: SparkSession, root: String, form: Boolean,
-                          delivered: DataFrame, pregate: Boolean)
-      : (DataFrame, Option[DataFrame]) = {
-    if (!pregate) return (priorGrams(spark, root, form), None)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], gramSchema(form))
-    val deltas = IndexMaintainStream.visibleDeltas(spark, root)
-    if (deltas.isEmpty) return (empty, None)
-    val (bloomed, legacy) = deltas.partition(d =>
-      IndexMaintainStream.hasBloomSidecar(spark, d))
-    val key = gramKey(form)
-    var pinned: Option[DataFrame] = None
-    val confirmed: Option[DataFrame] = IndexMaintainStream.bloomProbe(spark,
-        bloomed.map(d => s"$d/bloom"),
-        if (form) col("kh") else xxhash64(col("kg")))
-      .flatMap { maybeSeen =>
-        // materialized ONCE (eager local checkpoint): the limit-collect
-        // and — past the cap — the broadcast semi branch both read the
-        // same blocks instead of re-running the gram extraction+probe.
-        // Handed to processBatch (second tuple slot) for release once
-        // the epoch's writes consume it — Dataset.unpersist never frees
-        // checkpoint blocks (graft.CheckpointBlocks).
-        val posit =
-          (if (form) SubstrDedup.gramsOfHashed(delivered, SubstrDedup.MinRun)
-           else SubstrDedup.gramsOf(delivered, SubstrDedup.MinRun))
-            .filter(maybeSeen)
-            .localCheckpoint(true)
-        pinned = Some(posit)
-        val pk = posit.limit(InPushdownCap + 1).collect()
-          .map(_.get(0)).toSeq
-        if (pk.isEmpty) None
-        else {
-          val state = spark.read.parquet(bloomed.map(d => s"$d/grams"): _*)
-          Some(
-            if (pk.length <= InPushdownCap)
-              // chunked pushed INs — never a stack-deep Or tree
-              // (GraftSession.InScanChunk; the 1B-rung lesson)
-              IndexMaintainStream.literalInScan(state, key, pk)
-                .select(col(key)).distinct()
-            else state.join(broadcast(posit), Seq(key), "left_semi")
-              .select(col(key)).distinct())
-        }
-      }
-    val legacyGrams =
-      if (legacy.isEmpty) None
-      else Some(spark.read.parquet(legacy.map(d => s"$d/grams"): _*))
-    val target = (confirmed, legacyGrams) match {
-      case (None, None)       => empty
-      case (Some(c), None)    => broadcast(c)
-      case (None, Some(l))    => l
-      case (Some(c), Some(l)) => c.unionByName(l.select(col(key)))
-    }
-    (target, pinned)
-  }
-
   /** One micro-batch: probe against the committed gram set (bloom
-    * pregated — see [[probeTarget]]), then commit this epoch's spans,
-    * its distinct grams, AND a bloom sidecar over those grams in ONE
-    * atomic delta. Returns false on re-delivery of a committed epoch. */
+    * pregated past [[DefaultPregateMinKeys]] — see
+    * IndexMaintainStream.committedKeys), then commit this epoch's
+    * spans, its distinct grams, AND a bloom sidecar over those grams in
+    * ONE atomic delta. Returns false on re-delivery of a committed
+    * epoch. */
   private[graft] def processBatch(delivered: DataFrame, root: String,
                                   epoch: Long,
                                   hashed: Boolean = false,
-                                  pregate: Boolean = true,
                                   pregateMinKeys: Long =
                                     DefaultPregateMinKeys)
       : Boolean = {
@@ -187,36 +109,27 @@ object SubstrStream {
     // established roots keep their committed wire form regardless of
     // the caller's flag — see the wire-form scaladoc above
     val form = wireFormOf(spark, root).getOrElse(hashed)
-    // state-aware pregate: this index LOSES at its measured 20M-gram
-    // rung (probe+verify constants beat nothing when the state the
-    // naive semi-join would shuffle is small), so below the crossover
-    // the naive full-state target is the shipped path; sidecars are
-    // still written, so the root pregates the moment state crosses
-    // (PretrainStream.DefaultPregateMinKeys documents the evidence)
-    val gated = PretrainStream.pregateActive(spark, root, pregate,
-      pregateMinKeys)
     // the pregate's eagerly-checkpointed positives frame is released
     // once the epoch's writes have consumed it (finally, so a failed
     // epoch doesn't leak the blocks either)
     var pinned: Option[DataFrame] = None
     try IndexMaintainStream.commitBatch(spark, root, s"batch=$epoch") {
         staging =>
-      val (prior, pin) = probeTarget(spark, root, form, delivered, gated)
+      val grams = gramsOf(delivered, form)
+      val (prior, pin) = IndexMaintainStream.committedKeys(spark, root,
+        "grams", gramSchema(form), gramKey(form), grams, bloomKey(form),
+        pregateMinKeys)
       pinned = pin
       val spans =
         if (form)
           SubstrDedup.probeSpansHashed(delivered, prior, SubstrDedup.MinRun)
         else SubstrDedup.probeSpans(delivered, prior, SubstrDedup.MinRun)
       spans.withColumn("epoch", lit(epoch)).write.parquet(s"$staging/spans")
-      (if (form) SubstrDedup.gramsOfHashed(delivered, SubstrDedup.MinRun)
-       else SubstrDedup.gramsOf(delivered, SubstrDedup.MinRun))
-        .write.parquet(s"$staging/grams")
-      if (pregate) {
-        val grams = spark.read.schema(gramSchema(form))
-          .parquet(s"$staging/grams")
-        IndexMaintainStream.writeBloomSidecar(grams, grams.count(),
-          s"$staging/bloom", if (form) col("kh") else xxhash64(col("kg")))
-      }
+      grams.write.parquet(s"$staging/grams")
+      val written = spark.read.schema(gramSchema(form))
+        .parquet(s"$staging/grams")
+      IndexMaintainStream.writeBloomSidecar(written, written.count(),
+        s"$staging/bloom", bloomKey(form))
     } finally pinned.foreach(graft.CheckpointBlocks.free)
   }
 
@@ -224,12 +137,11 @@ object SubstrStream {
     * (doc_id, text). */
   def start(docs: DataFrame, root: String,
             hashed: Boolean = false,
-            pregate: Boolean = true,
             pregateMinKeys: Long = DefaultPregateMinKeys): StreamingQuery =
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        processBatch(batch, root, epoch, hashed, pregate, pregateMinKeys); ()
+        processBatch(batch, root, epoch, hashed, pregateMinKeys); ()
       }
       .start()
 
@@ -263,7 +175,8 @@ object SubstrStream {
     val form = wireFormOf(spark, root).getOrElse(hashed)
     IndexMaintainStream.commitCompactedWith(spark, root) { staging =>
       graft.sinks.LakeSink.writeClustered(
-        IndexMaintainStream.readTable(spark, root, "grams").distinct(),
+        IndexMaintainStream.readTable(spark, root, "grams", gramSchema(form))
+          .distinct(),
         s"$staging/grams",
         // sized by input bytes — a hardcoded 1 was a single-task sort
         // of the whole gram set (see compactedFileCount's scaladoc)
@@ -274,7 +187,7 @@ object SubstrStream {
       val grams = spark.read.schema(gramSchema(form))
         .parquet(s"$staging/grams")
       IndexMaintainStream.writeBloomSidecar(grams, grams.count(),
-        s"$staging/bloom", if (form) col("kh") else xxhash64(col("kg")))
+        s"$staging/bloom", bloomKey(form))
     }
     IndexMaintainStream.dropCovered(spark, root)
   }

@@ -9,8 +9,11 @@ import org.apache.spark.sql.functions._
   * the naive micro-batch dedup (`batch LEFT ANTI JOIN all committed
   * hashes`) re-shuffles the whole seen-set every epoch, so per-epoch
   * wall grows LINEARLY with state and total ingest cost is QUADRATIC
-  * in corpus size; the bloom-sidecar pregate (`pregate = true`) keeps
-  * per-epoch cost O(batch).
+  * in corpus size; the bloom-sidecar pregate keeps per-epoch cost
+  * O(batch). The positional `pregate` argument picks the arm for every
+  * epoch: `true` runs with `pregateMinKeys = 0`, `false` with
+  * `Long.MaxValue` — the shipped below-crossover path, which still
+  * writes every epoch's bloom sidecar.
   *
   * Synthesizes a deterministic gate-passing firehose — 40 unique words
   * per doc plus a stopword frame (the PretrainStreamSpec body shape),
@@ -50,6 +53,10 @@ object StreamLadder {
     val epochs = if (args.length > 0) args(0).toInt else 20
     val perEpoch = if (args.length > 1) args(1).toLong else 20000L
     val pregate = if (args.length > 2) args(2).toBoolean else true
+    // the labeled arm at EVERY rung, so the ladder measures both paths
+    // across the crossover; the shipped default gates on committed
+    // state size (DefaultPregateMinKeys)
+    val minKeys = if (pregate) 0L else Long.MaxValue
     val compactEvery = if (args.length > 3) args(3).toInt else 0
     val cpus = if (args.length > 4) args(4).toInt else 32
     val mode = if (args.length > 5) args(5) else "pretrain"
@@ -114,7 +121,7 @@ object StreamLadder {
                 spark.range(0).select(col("id").as("kh")),
                 graft.dedup.SubstrDedup.MinRun)
               .withColumn("epoch", lit(0L)).write.parquet(s"$staging/spans")
-            if (pregate) graft.streaming.IndexMaintainStream
+            graft.streaming.IndexMaintainStream
               .writeBloomSidecar(grams, seedKeys, s"$staging/bloom",
                 col("kh"))
           } else {
@@ -126,7 +133,7 @@ object StreamLadder {
                 lit("en").as("lang"), lit(0L).as("n_words"),
                 lit("").as("text"))
               .write.parquet(s"$staging/docs")
-            if (pregate) graft.streaming.IndexMaintainStream
+            graft.streaming.IndexMaintainStream
               .writeBloomSidecar(hashes, seedKeys, s"$staging/bloom",
                 xxhash64(col("norm_hash")))
           }
@@ -138,16 +145,13 @@ object StreamLadder {
     val perEpochSecs = (start until start + epochs).map { ep =>
       val b = batchOf(ep).localCheckpoint(true) // exclude gen cost
       val t0 = System.nanoTime()
-      // pregateMinKeys = 0 forces the labeled arm at EVERY rung — the
-      // ladder measures both paths across the crossover; the shipped
-      // default gates on committed-state size (DefaultPregateMinKeys)
       if (mode == "substr")
         graft.streaming.SubstrStream.processBatch(
           b.select(col("doc_id"), col("text")), root, ep.toLong,
-          hashed = true, pregate = pregate, pregateMinKeys = 0L)
+          hashed = true, pregateMinKeys = minKeys)
       else
         graft.streaming.PretrainStream.processBatch(
-          b, contaminated, root, ep.toLong, pregate, pregateMinKeys = 0L)
+          b, contaminated, root, ep.toLong, pregateMinKeys = minKeys)
       val dt = (System.nanoTime() - t0) / 1e9
       // compactEvery > 0: unconditional fold every N epochs (caller-
       // managed cadence). compactEvery < 0: the PRODUCTION policy —

@@ -18,10 +18,10 @@ class AnnIndexSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val (cbooks, coarse, codes) = similarity.AnnIndex.ivfPqCached(spark, Sf)
     val served = rows(similarity.Knn
-      .ivfPqServe(spark, e, 10, nprobe = 3, cbooks, coarse, codes))
+      .ivfPqServe(e, 10, nprobe = 3, cbooks, coarse, codes))
     // identical training (same deterministic Lloyd fits) → identical
     // codebooks → byte-identical search results
-    val inline = rows(similarity.Knn.ivfPqOn(spark, e, 10, nprobe = 3))
+    val inline = rows(similarity.Knn.ivfPqOn(e, 10, nprobe = 3))
     assert(served === inline)
 
     // second call must load, not rebuild: the model payload on disk
@@ -33,7 +33,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val (cb2, co2, codes2) = similarity.AnnIndex.ivfPqCached(spark, Sf)
     assert(modelSuccess.lastModified() === mtime, "cache was rebuilt")
     assert(rows(similarity.Knn
-      .ivfPqServe(spark, e, 10, nprobe = 3, cb2, co2, codes2)) === served)
+      .ivfPqServe(e, 10, nprobe = 3, cb2, co2, codes2)) === served)
   }
 
   test("serving pushes the probed-cell filter into the codes scan") {
@@ -41,7 +41,7 @@ class AnnIndexSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     val (cbooks, coarse, codes) = similarity.AnnIndex.ivfPqCached(spark, Sf)
     val plan = similarity.Knn
-      .ivfPqServe(spark, e, 10, nprobe = 2, cbooks, coarse, codes)
+      .ivfPqServe(e, 10, nprobe = 2, cbooks, coarse, codes)
       .queryExecution.executedPlan.toString
     // the literal IN filter must reach the parquet scan (file/row-group
     // skipping on the range-clustered cluster column) — a join-only
@@ -67,9 +67,9 @@ class AnnIndexSpec extends AnyFunSuite {
     // and SERVING from the appended union is byte-identical to serving
     // from the persisted codes table (same model ⇒ same ADC ranking)
     assert(rows(similarity.Knn
-      .ivfPqServe(spark, all, 10, nprobe = 3, cbooks, coarse, appended)) ===
+      .ivfPqServe(all, 10, nprobe = 3, cbooks, coarse, appended)) ===
       rows(similarity.Knn
-        .ivfPqServe(spark, all, 10, nprobe = 3, cbooks, coarse, codes)))
+        .ivfPqServe(all, 10, nprobe = 3, cbooks, coarse, codes)))
   }
 
   test("drift monitor: zero drift on the build corpus, detects a planted shift") {
@@ -112,7 +112,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(!similarity.AnnIndex.retrainIfDrifted(spark, dir))
     assert(!new java.io.File(cache, "CURRENT").exists())
     val servedOld = rows(similarity.Knn
-      .ivfPqServe(spark, e, 10, nprobe = 3, cb0, co0, codes0))
+      .ivfPqServe(e, 10, nprobe = 3, cb0, co0, codes0))
 
     // planted covariate shift past the threshold → retrain fires
     val shifted = e.withColumn("embedding",
@@ -123,7 +123,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // a concurrent serve holding the OLD version is untorn: v0's files
     // survive the swap and reproduce the exact pre-retrain result
     assert(rows(similarity.Knn
-      .ivfPqServe(spark, e, 10, nprobe = 3, cb0, co0, codes0)) === servedOld)
+      .ivfPqServe(e, 10, nprobe = 3, cb0, co0, codes0)) === servedOld)
 
     // the next load resolves the pointer → the NEW model; drift against
     // the shifted corpus is now back under threshold

@@ -50,7 +50,7 @@ class BareSessionSpec extends AnyFunSuite {
   }
 
   test("dedup: MinHash signatures and bounded buckets run on a bare session") {
-    sameOnBare(s => Dedup.minhashPairs(s, Tables.documents(s, Sf)))
+    sameOnBare(s => Dedup.minhashPairs(Tables.documents(s, Sf)))
   }
 
   test("text: the gram-count repetition gate runs on a bare session") {

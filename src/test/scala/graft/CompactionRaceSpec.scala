@@ -15,11 +15,12 @@ import graft.streaming.{IndexMaintainStream, PretrainStream}
   * probe-build time while a concurrent `compact` + `dropCovered`
   * deletes those very deltas under it. This spec interleaves the two
   * deterministically at their ONLY shared state (the filesystem):
-  * the stale plan is built exactly the way firstSeenOf builds it
-  * (bloomProbe over the then-visible sidecar paths), compaction runs
-  * to completion, the cache is cleared to stand in for the cold
-  * executor the race hazards on (a warm executor masks the sidecar
-  * load but its verify scan holds the same doomed hash paths), and
+  * the stale plan is built exactly the way
+  * IndexMaintainStream.committedKeys builds it (bloomProbe over the
+  * then-visible sidecar paths), compaction runs to completion, the
+  * cache is cleared to stand in for the cold executor the race
+  * hazards on (a warm executor masks the sidecar load but its verify
+  * scan holds the same doomed hash paths), and
   * only then does the stale plan execute. Asserted: the task fails
   * with FileNotFoundException at the root of the cause chain — never
   * a silent empty-filter pass — and the re-delivered epoch, planned
@@ -61,13 +62,14 @@ class CompactionRaceSpec extends AnyFunSuite {
 
     (0 to 2).foreach { ep =>
       PretrainStream.processBatch(batch(ep).toDF(), empty, raced,
-        ep.toLong, pregate = true, pregateMinKeys = 0L)
+        ep.toLong, pregateMinKeys = 0L)
     }
 
-    // The in-flight epoch-3 plan, captured EXACTLY as firstSeenOf
-    // captures it: list visible deltas now, bake their sidecar paths
-    // (and shard counts — a driver-side listing at plan-build time)
-    // into the probe column. Execution comes later.
+    // The in-flight epoch-3 plan, captured EXACTLY as
+    // IndexMaintainStream.committedKeys captures it: list visible
+    // deltas now, bake their sidecar paths (and shard counts — a
+    // driver-side listing at plan-build time) into the probe column.
+    // Execution comes later.
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val staleDeltas = fs.listStatus(new org.apache.hadoop.fs.Path(raced))
@@ -98,7 +100,7 @@ class CompactionRaceSpec extends AnyFunSuite {
     // the same id; its fresh plan lists the compacted run. It must
     // commit (true = not a duplicate delivery)…
     assert(PretrainStream.processBatch(batch(3).toDF(), empty, raced,
-      3L, pregate = true, pregateMinKeys = 0L))
+      3L, pregateMinKeys = 0L))
 
     // …and the healed root must be byte-identical to a control root
     // that ran the same four epochs with compaction at the same point
@@ -106,11 +108,11 @@ class CompactionRaceSpec extends AnyFunSuite {
     val control = tmp("controlroot")
     (0 to 2).foreach { ep =>
       PretrainStream.processBatch(batch(ep).toDF(), empty, control,
-        ep.toLong, pregate = true, pregateMinKeys = 0L)
+        ep.toLong, pregateMinKeys = 0L)
     }
     PretrainStream.compact(spark, control)
     PretrainStream.processBatch(batch(3).toDF(), empty, control,
-      3L, pregate = true, pregateMinKeys = 0L)
+      3L, pregateMinKeys = 0L)
 
     def dump(root: String, table: String): Seq[String] =
       IndexMaintainStream.readTable(spark, root, table)

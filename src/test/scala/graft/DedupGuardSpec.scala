@@ -84,7 +84,7 @@ class DedupGuardSpec extends AnyFunSuite {
     import spark.implicits._
     val text = (0 until 20).map(j => s"w$j").mkString(" ")
     val docs = (0 until 500).map(i => (i.toLong, text)).toDF("doc_id", "text")
-    val pairs = dedup.Dedup.minhashPairs(spark, docs, maxBucket = 10)
+    val pairs = dedup.Dedup.minhashPairs(docs, maxBucket = 10)
     val rows = pairSet(pairs)
     assert(rows === (1 until 500).map(i => (0L, i.toLong)).toSet)
     // identical docs collide in all 4 bands → 4 hot band buckets ×500
@@ -110,7 +110,7 @@ class DedupGuardSpec extends AnyFunSuite {
     val docs = ((0 until 100).map(i => (i.toLong, boiler)) ++
       Seq((900L, priv), (901L, priv.replaceFirst("p3 ", "pX ")))
     ).toDF("doc_id", "text")
-    val got = pairSet(dedup.Dedup.minhashPairs(spark, docs, maxBucket = 10))
+    val got = pairSet(dedup.Dedup.minhashPairs(docs, maxBucket = 10))
     // the genuine near-dup pair survives on its own (non-hot) buckets
     assert(got.contains((900L, 901L)))
     // the mega bucket contributes only star edges from doc 0

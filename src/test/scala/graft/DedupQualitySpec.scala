@@ -26,7 +26,7 @@ class DedupQualitySpec extends AnyFunSuite {
   }
 
   test("minhash LSH recovers planted near-duplicate pairs") {
-    val pairs = dedup.Dedup.minhashPairs(spark, corpus())
+    val pairs = dedup.Dedup.minhashPairs(corpus())
       .collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     val planted = (0 until 10).map(i => (i.toLong, i + 100L)).toSet
@@ -59,7 +59,7 @@ class DedupQualitySpec extends AnyFunSuite {
     // planesPerBand=13 is what the corpus-scaled width resolves to at
     // N=5000 — recall must survive the widening (1-(1-p^13)^16 ≈ 1 at
     // cos 0.998)
-    val pairs = dedup.Dedup.embedLshPairs(spark, embCorpus(),
+    val pairs = dedup.Dedup.embedLshPairs(embCorpus(),
         bands = 16, planesPerBand = 13, threshold = 0.9)
       .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
@@ -76,7 +76,7 @@ class DedupQualitySpec extends AnyFunSuite {
     // 200 identical vectors: every band puts all of them in one bucket
     val v = Array.fill(64)(1.0)
     val df = (0 until 200).map(i => (i.toLong, v)).toDF("vec_id", "embedding")
-    val pairs = dedup.Dedup.embedLshPairs(spark, df,
+    val pairs = dedup.Dedup.embedLshPairs(df,
         bands = 4, planesPerBand = 8, threshold = 0.5, maxBucket = 50)
       .collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
@@ -206,7 +206,7 @@ class DedupQualitySpec extends AnyFunSuite {
     import spark.implicits._
     val text = (0 until 20).map(j => s"w$j").mkString(" ")
     val docs = (0 until 50).map(i => (i.toLong, text)).toDF("doc_id", "text")
-    val pairs = dedup.Dedup.minhashPairs(spark, docs, maxBucket = 10)
+    val pairs = dedup.Dedup.minhashPairs(docs, maxBucket = 10)
     val rows = pairs.collect().map(r => (r.getAs[Long]("doc_a"),
       r.getAs[Long]("doc_b")))
     assert(rows.length === 49)
@@ -217,7 +217,7 @@ class DedupQualitySpec extends AnyFunSuite {
   test("verify stage shingles ONLY candidate-pair docs (plan + rows)") {
     import spark.implicits._
     val docs = corpus()
-    val cands = dedup.Dedup.minhashPairs(spark, docs)
+    val cands = dedup.Dedup.minhashPairs(docs)
       .select($"doc_a", $"doc_b")
     val ex = dedup.Dedup.candidateShingles(docs, cands)
     // plan lock: the doc scan is semi-join-bounded before the explode
@@ -282,7 +282,7 @@ class DedupQualitySpec extends AnyFunSuite {
       val words = (0 until 30).map(j => s"v${base}_$j")
       (i.toLong, words.mkString(" "))
     }.toDF("doc_id", "text")
-    val out = dedup.Dedup.minhashIncrementalOn(spark, docs)
+    val out = dedup.Dedup.minhashIncrementalOn(docs)
     val isBatch = (id: Long) => {
       val d = java.security.MessageDigest.getInstance("MD5")
         .digest(id.toString.getBytes("UTF-8"))

@@ -353,7 +353,7 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     assert(served.nonEmpty)
 
     // cold re-encode of the full corpus with the same frozen model
-    val cold = rows(graft.similarity.Knn.ivfPqServe(spark, e, 10, 2,
+    val cold = rows(graft.similarity.Knn.ivfPqServe(e, 10, 2,
       cbooks, coarse, graft.similarity.AnnIndex.ivfPqAdd(e, cbooks, coarse)))
     assert(served === cold)
 

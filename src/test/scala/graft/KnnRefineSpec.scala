@@ -28,7 +28,7 @@ class KnnRefineSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, TestSpark.Sf)
       .select(col("vec_id"), col("embedding"))
     val unrefined =
-      similarity.Knn.ivfPqServe(spark, e, 10, 3, cbooks, coarse, codes)
+      similarity.Knn.ivfPqServe(e, 10, 3, cbooks, coarse, codes)
     val truth = asPairs(brute)
     val rRef = asPairs(refined).intersect(truth).size.toDouble / truth.size
     val rAdc = asPairs(unrefined).intersect(truth).size.toDouble / truth.size
@@ -51,7 +51,7 @@ class KnnRefineSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, TestSpark.Sf)
       .select(col("vec_id"), col("embedding"))
     val proposals =
-      asPairs(similarity.Knn.ivfPqServe(spark, e, 50, 3, cbooks, coarse, codes))
+      asPairs(similarity.Knn.ivfPqServe(e, 50, 3, cbooks, coarse, codes))
     assert(asPairs(refined).subsetOf(proposals))
   }
 }

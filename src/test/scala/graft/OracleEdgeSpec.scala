@@ -218,7 +218,7 @@ class OracleEdgeSpec extends AnyFunSuite {
 
   test("compress ratio: an empty document is NULL, not an ANSI crash") {
     import spark.implicits._
-    val out = operators.TextOps.compressRatioOn(spark,
+    val out = operators.TextOps.compressRatioOn(
       Seq((1L, ""), (2L, "hello world hello world"))
         .toDF("doc_id", "text"))
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap

@@ -40,7 +40,7 @@ class PqSpec extends AnyFunSuite {
     val dup = e.filter(col("vec_id") === 3L)
       .select(lit(9999L).as("vec_id"), col("embedding"))
     val rows = similarity.Knn
-      .pqTrainedOn(spark, e.union(dup), M = 4, subDim = 16, K = 16, k = 10)
+      .pqTrainedOn(e.union(dup), M = 4, subDim = 16, K = 16, k = 10)
       .collect()
     val q3 = rows.filter(_.getAs[Long]("query_id") == 3L)
     assert(q3.nonEmpty)
@@ -58,7 +58,7 @@ class PqSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
     val dup = e.filter(col("vec_id") === 3L)
       .select(lit(9999L).as("vec_id"), col("embedding"))
-    val rows = similarity.Knn.ivfPqOn(spark, e.union(dup), 10).collect()
+    val rows = similarity.Knn.ivfPqOn(e.union(dup), 10).collect()
     val q3 = rows.filter(_.getAs[Long]("query_id") == 3L)
     assert(q3.nonEmpty)
     val dupScore = q3.find(_.getAs[Long]("neighbor_id") == 9999L)

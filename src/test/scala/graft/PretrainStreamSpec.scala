@@ -197,13 +197,14 @@ class PretrainStreamSpec extends AnyFunSuite {
         (70L until 90L).map(i => doc(i, i)))
 
     val empty = spark.emptyDataset[Doc].select(col("doc_id").as("train_doc_id"))
-    val roots = Seq(true, false).map { pregate =>
-      val root = tmp(s"pretrainab$pregate")
+    val roots = Seq(0L, Long.MaxValue).map { minKeys =>
+      val root = tmp(s"pretrainab$minKeys")
       batches.zipWithIndex.foreach { case (b, ep) =>
-        // minKeys = 0: force the labeled arm — the default state gate
-        // would (correctly) pick naive at test-sized state
+        // minKeys = 0 forces the pregate arm (the default state gate
+        // would correctly pick naive at test-sized state), MaxValue
+        // the naive arm
         streaming.PretrainStream.processBatch(
-          b.toDF(), empty, root, ep.toLong, pregate, pregateMinKeys = 0L)
+          b.toDF(), empty, root, ep.toLong, pregateMinKeys = minKeys)
       }
       root
     }
@@ -218,6 +219,55 @@ class PretrainStreamSpec extends AnyFunSuite {
       rows(PretrainStream.accounting(spark, roots(1))))
   }
 
+  test("a root whose arm flips mid-life (naive epochs 0-1, pregate " +
+       "epochs 2-3) ≡ an all-naive root; every delta carries a sidecar") {
+    import spark.implicits._
+    def doc(id: Long, contentId: Long) =
+      Doc(id, "en",
+        (0 until 40).map(j => s"m${contentId}w$j").mkString(" ") +
+          " the of and a")
+    // the pregate epochs repeat content that naive epochs committed
+    // (probed through the naive arm's sidecars) and, in epoch 3,
+    // content the first pregate epoch committed
+    val batches = Seq(
+      (0L until 20L).map(i => doc(i, i)),
+      (20L until 40L).map(i => doc(i, i)),
+      (40L until 50L).map(i => doc(i, i - 40)) ++ // dups of epoch 0
+        (50L until 55L).map(i => doc(i, i - 30)) ++ // dups of epoch 1
+        (55L until 65L).map(i => doc(i, i)),
+      (65L until 70L).map(i => doc(i, i - 10)) ++ // dups of epoch 2
+        (70L until 75L).map(i => doc(i, i - 60)) ++ // dups of epoch 0
+        (75L until 85L).map(i => doc(i, i)))
+    val empty = spark.emptyDataset[Doc].select(col("doc_id").as("train_doc_id"))
+    def ingest(prefix: String, minKeys: Int => Long): String = {
+      val root = tmp(prefix)
+      batches.zipWithIndex.foreach { case (b, ep) =>
+        streaming.PretrainStream.processBatch(
+          b.toDF(), empty, root, ep.toLong, pregateMinKeys = minKeys(ep))
+      }
+      root
+    }
+    val flipped =
+      ingest("pretrainflip", ep => if (ep < 2) Long.MaxValue else 0L)
+    val naive = ingest("pretrainflipnaive", _ => Long.MaxValue)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    for (root <- Seq(flipped, naive); ep <- 0 to 3)
+      assert(fs.exists(
+        new org.apache.hadoop.fs.Path(s"$root/batch=$ep/bloom")),
+        s"epoch $ep delta of $root must carry its bloom sidecar")
+    val Seq(flippedIds, naiveIds) = Seq(flipped, naive).map { r =>
+      PretrainStream.acceptedDocs(spark, r)
+        .select("doc_id").as[Long].collect().toSet
+    }
+    assert(flippedIds === naiveIds)
+    assert(flippedIds.intersect(
+      ((40L until 55L) ++ (65L until 75L)).toSet).isEmpty,
+      "cross-epoch dups must be suppressed on both sides of the flip")
+    assert(rows(PretrainStream.accounting(spark, flipped)) ===
+      rows(PretrainStream.accounting(spark, naive)))
+  }
+
   test("pregate epochs release their checkpointed positives — no " +
        "block accumulation across micro-batches") {
     import spark.implicits._
@@ -230,7 +280,7 @@ class PretrainStreamSpec extends AnyFunSuite {
     // epoch 0 commits state + sidecar (no probe yet — nothing visible)
     streaming.PretrainStream.processBatch(
       (0L until 30L).map(i => doc(i, i)).toDF(), empty, root, 0L,
-      pregate = true, pregateMinKeys = 0L)
+      pregateMinKeys = 0L)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // epochs 1-3 run the pregate probe with NON-EMPTY positives (every
     // third doc repeats prior content), so each epoch eagerly
@@ -240,7 +290,7 @@ class PretrainStreamSpec extends AnyFunSuite {
       streaming.PretrainStream.processBatch(
         (base until base + 30L)
           .map(i => doc(i, if (i % 3 == 0) i - 30L else i)).toDF(),
-        empty, root, ep.toLong, pregate = true, pregateMinKeys = 0L)
+        empty, root, ep.toLong, pregateMinKeys = 0L)
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet === before,
       "each epoch's eagerly-checkpointed positives must be released " +
@@ -310,22 +360,23 @@ class PretrainStreamSpec extends AnyFunSuite {
         (0 until 40).map(j => s"g${id}w$j").mkString(" ") + " the of and a")
     val root = tmp("pretraingate")
     val empty = spark.emptyDataset[Doc].select(col("doc_id").as("train_doc_id"))
-    // empty root: nothing committed → gate off regardless of threshold
-    assert(!PretrainStream.pregateActive(spark, root, pregate = true,
+    // empty root: nothing committed → gate off for any positive threshold
+    assert(!streaming.IndexMaintainStream.pregateActive(spark, root,
       minKeys = 1L))
     streaming.PretrainStream.processBatch(
       (0L until 5L).map(doc).toDF(), empty, root, 0L)
     val est = streaming.IndexMaintainStream.estimatedCommittedKeys(spark, root)
     assert(est > 0L, "sidecar bytes must yield a nonzero key estimate")
-    // below threshold → naive; at/above → pregate; caller opt-out wins
-    assert(!PretrainStream.pregateActive(spark, root, pregate = true,
+    // below threshold → naive; at/above → pregate; 0 forces the
+    // pregate arm and Long.MaxValue the naive arm
+    assert(!streaming.IndexMaintainStream.pregateActive(spark, root,
       minKeys = est * 1000))
-    assert(PretrainStream.pregateActive(spark, root, pregate = true,
+    assert(streaming.IndexMaintainStream.pregateActive(spark, root,
       minKeys = 1L))
-    assert(PretrainStream.pregateActive(spark, root, pregate = true,
+    assert(streaming.IndexMaintainStream.pregateActive(spark, root,
       minKeys = 0L))
-    assert(!PretrainStream.pregateActive(spark, root, pregate = false,
-      minKeys = 0L))
+    assert(!streaming.IndexMaintainStream.pregateActive(spark, root,
+      minKeys = Long.MaxValue))
   }
 
   test("verify fallback past InPushdownCap (broadcast semi branch) ≡ " +
@@ -344,19 +395,19 @@ class PretrainStreamSpec extends AnyFunSuite {
       (0L until 20L).map(i => doc(i, i)),
       (20L until 32L).map(i => doc(i, i - 20)) ++
         (40L until 48L).map(i => doc(i, i)))
-    val prior = streaming.PretrainStream.InPushdownCap
+    val prior = streaming.IndexMaintainStream.InPushdownCap
     val roots =
       try {
-        streaming.PretrainStream.InPushdownCap = 3
-        Seq(true, false).map { pregate =>
-          val root = tmp(s"pretraincap$pregate")
+        streaming.IndexMaintainStream.InPushdownCap = 3
+        Seq(0L, Long.MaxValue).map { minKeys =>
+          val root = tmp(s"pretraincap$minKeys")
           batches.zipWithIndex.foreach { case (b, ep) =>
             streaming.PretrainStream.processBatch(
-              b.toDF(), empty, root, ep.toLong, pregate, pregateMinKeys = 0L)
+              b.toDF(), empty, root, ep.toLong, pregateMinKeys = minKeys)
           }
           root
         }
-      } finally streaming.PretrainStream.InPushdownCap = prior
+      } finally streaming.IndexMaintainStream.InPushdownCap = prior
     val Seq(gated, naive) = roots.map { r =>
       PretrainStream.acceptedDocs(spark, r)
         .select("doc_id").as[Long].collect().toSet

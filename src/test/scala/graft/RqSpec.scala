@@ -64,7 +64,7 @@ class RqSpec extends AnyFunSuite {
   }
 
   test("RQ/ADC top-k is well-formed: contiguous ranks, descending scores") {
-    val rows = similarity.Knn.rqTopK(spark, e, 10).collect()
+    val rows = similarity.Knn.rqTopK(e, 10).collect()
     assert(rows.nonEmpty)
     rows.groupBy(_.getAs[Long]("query_id")).foreach { case (_, qr) =>
       val ranks = qr.map(_.getAs[Long]("rank")).sorted.toSeq

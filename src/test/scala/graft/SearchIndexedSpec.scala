@@ -101,7 +101,7 @@ class SearchIndexedSpec extends AnyFunSuite {
     val planted = e.unionByName(dup)
     val (cbooks, coarse) = Knn.ivfPqFit(planted)
     val codes = AnnIndex.ivfPqAdd(planted, cbooks, coarse)
-    val scored = Knn.ivfPqServe(spark, planted, k = planted.count().toInt,
+    val scored = Knn.ivfPqServe(planted, k = planted.count().toInt,
       nprobe = 3, cbooks, coarse, codes)
       .filter(col("query_id") === 1L).collect()
     assert(scored.length > 10, "k = corpus size must keep every candidate")
@@ -125,9 +125,9 @@ class SearchIndexedSpec extends AnyFunSuite {
       df.filter(col("query_id").isin(1L, 2L, 3L)).collect()
         .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
                    r.getAs[Double]("adc_score"), r.getAs[Long]("rank"))).toSet
-    val narrowed = rows(Knn.ivfPqServe(spark,
+    val narrowed = rows(Knn.ivfPqServe(
       e.filter(col("vec_id").isin(1L, 2L, 3L)), 80, 3, cbooks, coarse, codes))
-    val full = rows(Knn.ivfPqServe(spark, e, 80, 3, cbooks, coarse, codes))
+    val full = rows(Knn.ivfPqServe(e, 80, 3, cbooks, coarse, codes))
     assert(narrowed === full)
   }
 

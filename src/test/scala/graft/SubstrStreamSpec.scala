@@ -84,13 +84,13 @@ class SubstrStreamSpec extends AnyFunSuite {
     val runA = words("ba", 12)
     // epoch 0 commits grams + sidecar
     SubstrStream.processBatch(Seq(Doc(1L, runA)).toDF(), root, 0L,
-      pregate = true, pregateMinKeys = 0L)
+      pregateMinKeys = 0L)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // epochs 1-3 probe with non-empty positives (each quotes runA)
     (1 to 3).foreach { ep =>
       SubstrStream.processBatch(
         Seq(Doc(ep + 1L, words(s"n$ep", 3) + " " + runA)).toDF(),
-        root, ep.toLong, pregate = true, pregateMinKeys = 0L)
+        root, ep.toLong, pregateMinKeys = 0L)
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet === before,
       "each epoch's eagerly-checkpointed positives must be released")
@@ -173,15 +173,15 @@ class SubstrStreamSpec extends AnyFunSuite {
     val batches = Seq(
       Seq(Doc(1L, runL)),
       Seq(Doc(2L, words("q", 2) + " " + runL), Doc(3L, words("n", 12))))
-    val prior = SubstrStream.InPushdownCap
+    val prior = streaming.IndexMaintainStream.InPushdownCap
     try {
-      SubstrStream.InPushdownCap = 2
+      streaming.IndexMaintainStream.InPushdownCap = 2
       Seq(false, true).foreach { hashed =>
-        val roots = Seq(true, false).map { pregate =>
-          val root = tmp(s"substrcap$hashed$pregate")
+        val roots = Seq(0L, Long.MaxValue).map { minKeys =>
+          val root = tmp(s"substrcap$hashed$minKeys")
           batches.zipWithIndex.foreach { case (b, ep) =>
             SubstrStream.processBatch(b.toDF(), root, ep.toLong, hashed,
-              pregate, pregateMinKeys = 0L)
+              pregateMinKeys = minKeys)
           }
           root
         }
@@ -190,7 +190,7 @@ class SubstrStreamSpec extends AnyFunSuite {
         assert(spans(roots.head) === spans(roots(1)),
           s"fallback must not change spans (hashed=$hashed)")
       }
-    } finally SubstrStream.InPushdownCap = prior
+    } finally streaming.IndexMaintainStream.InPushdownCap = prior
   }
 
   test("bloom pregate ≡ naive probe; sidecar rides deltas; pre-bloom " +
@@ -205,13 +205,14 @@ class SubstrStreamSpec extends AnyFunSuite {
 
     // A/B: both wire forms, pregate vs naive — span sets identical
     Seq(false, true).foreach { hashed =>
-      val roots = Seq(true, false).map { pregate =>
-        val root = tmp(s"substrab$hashed$pregate")
+      val roots = Seq(0L, Long.MaxValue).map { minKeys =>
+        val root = tmp(s"substrab$hashed$minKeys")
         batches.zipWithIndex.foreach { case (b, ep) =>
-          // minKeys = 0: force the labeled arm — the default state
-          // gate would (correctly) pick naive at test-sized state
+          // minKeys = 0 forces the pregate arm (the default state gate
+          // would correctly pick naive at test-sized state), MaxValue
+          // the naive arm
           SubstrStream.processBatch(b.toDF(), root, ep.toLong, hashed,
-            pregate, pregateMinKeys = 0L)
+            pregateMinKeys = minKeys)
         }
         root
       }
@@ -249,5 +250,42 @@ class SubstrStreamSpec extends AnyFunSuite {
       pregateMinKeys = 0L))
     assert(spans(root).contains((11L, 0L, 9L, 4L)),
       "the compacted bloom + clustered grams must still probe")
+  }
+
+  test("a root whose arm flips mid-life (naive epochs 0-1, pregate " +
+       "epochs 2-3) flags the all-naive root's spans, both wire forms") {
+    import spark.implicits._
+    val runA = words("ma", 10)
+    val runB = words("mb", 10)
+    val runC = words("mc", 10)
+    // the pregate epochs quote runs that naive epochs committed (probed
+    // through the naive arm's sidecars) and, in epoch 3, a run the first
+    // pregate epoch committed
+    val batches = Seq(
+      Seq(Doc(1L, words("p", 3) + " " + runA)),
+      Seq(Doc(2L, runB + " " + runA)),
+      Seq(Doc(3L, runC + " zz0 " + runB), Doc(4L, words("n", 12))),
+      Seq(Doc(5L, runC + " " + runA)))
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    Seq(false, true).foreach { hashed =>
+      val arms = Seq[Int => Long](
+        ep => if (ep < 2) Long.MaxValue else 0L, _ => Long.MaxValue)
+      val Seq(flipped, naive) = arms.zipWithIndex.map { case (minKeys, i) =>
+        val root = tmp(s"substrflip$hashed$i")
+        batches.zipWithIndex.foreach { case (b, ep) =>
+          SubstrStream.processBatch(b.toDF(), root, ep.toLong, hashed,
+            pregateMinKeys = minKeys(ep))
+        }
+        root
+      }
+      for (root <- Seq(flipped, naive); ep <- 0 to 3)
+        assert(fs.exists(new org.apache.hadoop.fs.Path(
+          s"$root/batch=$ep/bloom")), s"epoch $ep of $root must carry a bloom")
+      assert(Set(2L, 3L).subsetOf(spans(flipped).map(_._4)),
+        s"both pregate epochs must flag spans (hashed=$hashed)")
+      assert(spans(flipped) === spans(naive),
+        s"the flip must not change spans (hashed=$hashed)")
+    }
   }
 }

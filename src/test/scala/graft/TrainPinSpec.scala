@@ -70,7 +70,7 @@ class TrainPinSpec extends AnyFunSuite {
     // ann_pq_trained's core on the real fixture: 4 subspace fits now
     // slice ONE pin; the search output contract (top-10 per query,
     // ranked 1..10) is unchanged.
-    val out = similarity.Knn.pqTrainedOn(spark, emb(),
+    val out = similarity.Knn.pqTrainedOn(emb(),
       M = 4, subDim = 16, K = 16, k = 10).collect()
     val byQuery = out.groupBy(_.getAs[Long]("query_id"))
     assert(byQuery.nonEmpty)
