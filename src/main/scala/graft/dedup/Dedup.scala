@@ -1146,11 +1146,10 @@ object Dedup {
     * duplicates through it). */
   private[graft] def semanticPairs(e: DataFrame, k: Int, iters: Int,
                                    thr: Double): DataFrame = {
-    // fit on the bounded training frame (KMeans.trainPin — the Faiss
-    // train() contract: pass-through under the cap, pinned md5 sample
-    // past it); the corpus-side assignment below is a pure map
+    // fit on the bounded training sample (KMeans.sample — the Faiss
+    // train() contract); the corpus-side assignment below is a pure map
     val (cents, _) = graft.similarity.KMeans.fit(
-      graft.similarity.KMeans.trainPin(e), k, iters)
+      graft.similarity.KMeans.sample(e), k, iters)
     val assigned = graft.similarity.KMeans.assign(e, cents)
       .select(col("cluster"), col("vec_id"), col("embedding"))
     val a = assigned.select(col("cluster"), col("vec_id").as("id_a"),

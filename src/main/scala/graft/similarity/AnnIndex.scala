@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.tools.CorpusCache
 
@@ -11,7 +12,8 @@ import graft.tools.CorpusCache
   * a tiny codebook table, rebuilt only when the corpus changes):
   *
   *  - BUILD (once per corpus fingerprint): train the coarse quantizer
-  *    + M sub-codebooks (Knn.ivfPqFit — M+1 concurrent Lloyd fits),
+  *    + M sub-codebooks (Knn.ivfPqFit — M+1 in-memory Lloyd fits over
+  *    one training sample),
   *    encode every vector to (cluster, M byte codes) in one pure-map
   *    scan, and persist: `codes/` range-clustered on `cluster` via
   *    LakeSink (per-file min/max lets a cell-pruned read skip files)
@@ -46,6 +48,11 @@ object AnnIndex {
     else 0
   }
 
+  /** The model table's schema as [[buildInto]] writes it (one row per
+    * centroid: m = -1 for the coarse quantizer, else the subspace);
+    * reading with it, a warm open infers no schema. */
+  private[graft] val ModelSchema = StructType.fromDDL("m INT, cw INT, vec ARRAY<DOUBLE>")
+
   /** Train + encode `e` and persist into (modelDir, codesDir). Codes
     * first: the model dir's _SUCCESS is the build-complete marker, so
     * it must be the LAST thing written (a crash between the two writes
@@ -74,15 +81,14 @@ object AnnIndex {
       : (IndexedSeq[IndexedSeq[Array[Double]]], IndexedSeq[Array[Double]],
          DataFrame) = {
     import spark.implicits._
-    val rows = spark.read.parquet(modelDir.getPath)
-      .select(col("m"), col("cw"), col("vec"))
+    val rows = spark.read.schema(ModelSchema).parquet(modelDir.getPath)
       .as[(Int, Int, Seq[Double])].collect()
     val coarse = rows.filter(_._1 == -1).sortBy(_._2)
       .map(_._3.toArray).toIndexedSeq
     val cbooks = rows.filter(_._1 >= 0).groupBy(_._1).toIndexedSeq
       .sortBy(_._1)
       .map { case (_, cws) => cws.sortBy(_._2).map(_._3.toArray).toIndexedSeq }
-    (cbooks, coarse, spark.read.parquet(codesDir.getPath))
+    (cbooks, coarse, spark.read.schema(CodesSchema).parquet(codesDir.getPath))
   }
 
   /** Build-or-load the index for `dir`'s embeddings table. Returns
@@ -156,6 +162,10 @@ object AnnIndex {
         rnd(col("msd"), 4).as("mean_sqdist_now"))
       .orderBy(col("cluster"))
   }
+
+  /** The codes table's schema as [[ivfPqAdd]] produces it. */
+  private[graft] val CodesSchema =
+    StructType.fromDDL("vec_id BIGINT, cluster INT, m INT, code INT")
 
   /** Incremental ADD — the Faiss `add()` path: encode a NEW vector
     * batch against the FIXED trained model (coarse + sub-codebooks)

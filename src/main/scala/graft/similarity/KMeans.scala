@@ -5,31 +5,31 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
 
-/** Distributed Lloyd's k-means over an embedding column — the codebook
-  * trainer for the IVF/PQ/RQ family (which previously used id-strided
-  * samples as honest stand-ins) and the cluster step of semantic dedup
+/** Lloyd's k-means over an embedding column — the codebook trainer for
+  * the IVF/PQ/RQ family (which previously used id-strided samples as
+  * honest stand-ins) and the cluster step of semantic dedup
   * (dedup.Dedup.semantic).
   *
-  * The centroid set is a BOUNDED MODEL PARAMETER (k×dim doubles, a few
-  * KB independent of corpus size), so each Lloyd round collects it to
-  * the driver and inlines it as literals — which makes the ASSIGNMENT
-  * step a PURE MAP: one codegen'd argmax chain per row (k native dot
-  * products), no join, no broadcast, no shuffle. The UPDATE step is one
-  * map-side-combined `groupBy(cluster, pos)` aggregation over the
-  * posexploded components: the explode is map-local and the partial
-  * combine collapses it in-partition, so each Lloyd round shuffles at
-  * most k×dim partial rows per input partition — at 100 TB a round is
-  * a scan plus a k×dim-sized exchange.
+  * Training follows the Faiss train() contract: codebook quality needs
+  * thousands of representatives, not the corpus, so every trainer fits
+  * on [[sample]] — at most [[TrainCap]] rows, collected to the driver
+  * in ONE Spark job — and [[fit]] runs every Lloyd round in memory over
+  * it. The fit is model fitting on a bounded array (≤ TrainCap × dim
+  * doubles, ~307 MB at 768 dims), not a data loop: a distributed
+  * round would pay a plan, a shuffle stage, a collect and a fresh
+  * codegen (its centroids are literals) to aggregate the same ≤ cap
+  * rows. Its scores, tie-break and accumulation order are the ones
+  * [[assignLiteral]] runs, so an in-memory assignment equals the
+  * codegen'd one bit for bit.
   *
-  * The literal-argmax formulation bounds k (codegen method size); it is
-  * the right shape for codebook-scale k (≤ ~64). Beyond that (e.g.
+  * Corpus-side ASSIGNMENT stays in Spark and is a PURE MAP: the
+  * centroids are a bounded model parameter (k×dim doubles), inlined as
+  * literals — one codegen'd argmax chain per row (k native dot
+  * products), no join, no broadcast, no shuffle; at 100 TB a scan. The
+  * literal-argmax formulation bounds k (codegen method size); it is the
+  * right shape for codebook-scale k (≤ ~64). Beyond that (e.g.
   * SemDeDup's 100k clusters) assignment switches to the broadcast
-  * codebook + max_by groupBy shape already in Knn.assignToCentroids —
-  * same per-round shuffle profile, one extra exchange.
-  *
-  * Driver-side work per round is O(k×dim) model arithmetic on the
-  * collected stats — model fitting, not a data loop (same contract as
-  * the CC convergence check and the PQ/RQ codebook collects).
+  * codebook + max_by shape of Knn.assignToCentroids — one exchange.
   */
 object KMeans {
 
@@ -37,6 +37,24 @@ object KMeans {
     * right shape (codegen method size, plan bloat) and assignment
     * switches to the broadcast-centroids max_by regime. */
   private[graft] val LiteralArgmaxMaxK = 64
+
+  /** Training-sample cap (Faiss-style: train on a bounded
+    * representative sample, encode everything). */
+  private[graft] val TrainCap = 50000
+
+  private def sqn(c: Array[Double]): Double = c.map(x => x * x).sum
+
+  /** One struct(2·x·cᵢ − ‖cᵢ‖², −(i+1)) per literal centroid over the
+    * `embedding` column: argmax ⇔ argmin‖x − cᵢ‖² (x·x is constant per
+    * row), and equal scores break to the lowest cluster id through the
+    * −(i+1) field. Shared by the assignment and Knn.probeClusters. */
+  private[similarity] def scoreStructs(cents: IndexedSeq[Array[Double]]): Column =
+    array(cents.zipWithIndex.map { case (c, i) =>
+      struct(
+        (lit(2.0) * VectorFunctions.dot(col("embedding"), typedlit(c.toSeq))
+          - lit(sqn(c))).as("s"),
+        lit(-(i + 1)).as("negi"))
+    }: _*)
 
   /** Assignment dispatch: appends `cluster` (1-based) and `sqdist`
     * (‖x − c_cluster‖², clamped at 0 against FP drift) to a
@@ -49,20 +67,12 @@ object KMeans {
     if (cents.length <= LiteralArgmaxMaxK) assignLiteral(e, cents)
     else assignBroadcast(e, cents)
 
-  /** Literal-centroid regime: argmax(2·x·cᵢ − ‖cᵢ‖²) ⇔ argmin‖x − cᵢ‖²
-    * (x·x is constant per row); ties break to the lowest cluster id via
-    * the (score, −i) struct ordering. Pure map — at 100 TB a scan. */
+  /** Literal-centroid regime: the argmax of [[scoreStructs]]. Pure map
+    * — at 100 TB a scan. */
   private[graft] def assignLiteral(e: DataFrame,
                                    cents: IndexedSeq[Array[Double]]): DataFrame = {
-    def sqn(v: Array[Double]): Double = v.map(x => x * x).sum
     val v = col("embedding")
-    val best = array_max(array(cents.zipWithIndex.map { case (c, i) =>
-      struct(
-        (lit(2.0) * VectorFunctions.dot(v, typedlit(c.toSeq)) - lit(sqn(c)))
-          .as("s"),
-        lit(-(i + 1)).as("negi"))
-    }: _*))
-    e.withColumn("b", best)
+    e.withColumn("b", array_max(scoreStructs(cents)))
       .withColumn("cluster", -col("b.negi"))
       .withColumn("sqdist",
         greatest(VectorFunctions.dot(v, v) - col("b.s"), lit(0.0)))
@@ -80,7 +90,7 @@ object KMeans {
     val spark = e.sparkSession
     import spark.implicits._
     val cdf = cents.zipWithIndex
-      .map { case (c, i) => (i + 1, c.toSeq, c.map(x => x * x).sum) }
+      .map { case (c, i) => (i + 1, c.toSeq, sqn(c)) }
       .toDF("c_id", "cv", "c_sqn")
     e.crossJoin(broadcast(cdf))
       .withColumn("s",
@@ -95,87 +105,133 @@ object KMeans {
                          col("b.s"), lit(0.0)).as("sqdist"))
   }
 
-  /** Bounded training frame shared by every inline Lloyd fit of an
-    * entry (r14, guide §1.2/§2.4): Knn.ivfPqFit introduced the
-    * Faiss-style train() contract — codebook quality needs thousands
-    * of representatives, not the corpus — and r14 moves the shared
-    * gate here so EVERY inline trainer (pqTrainedOn's M subspace fits,
-    * fitRqTrained's two levels, ivfTrained, kmeansProfile,
-    * Dedup.semanticPairs) uses it. Past `cap` rows the training input
-    * is a deterministic md5-ordered sample (TakeOrderedAndProject:
-    * bounded per-partition heaps, O(cap) memory, one pass, no global
-    * sort), eagerly localCheckpointed so the M fits × rounds read ONE
-    * materialized ≤cap-row pin instead of each re-executing the corpus
-    * scan (pqTrainedOn alone re-ran it M×rounds+inits ≈ 16 times per
-    * call at 100 TB). UNDER the cap the frame passes through UNTOUCHED
-    * — the exact pre-sampling plan, so test-SF corpora pay one bounded
-    * probe job and entry outputs stay byte-identical by construction
-    * (an r14 A/B measured the eager under-cap pin variant NET-NEGATIVE
-    * at sf0.1: the probe+materialize jobs cost more than the trivial
-    * ≤cap-row rescans they save — honest negative result, reverted).
-    * The gate is a BOUNDED existence probe, not a count, and it runs
-    * as ONE job with NO exchange: a per-partition count capped at
-    * cap+1 rows, folded on the driver — Σ min(rows_p, cap+1) > cap ⟺
-    * total > cap, so the capped partials decide the gate exactly.
-    * (A/B'd alternatives both lost: limit().count() pays a
-    * global-limit shuffle + AQE stage materialization; take(cap+1)
-    * under the cap escalates through ~log rounds of incremental
-    * partition jobs to prove the rows aren't there.) Each partition
-    * reads at most cap+1 rows of one int column however large the
-    * corpus. */
-  private[graft] def trainPin(e: DataFrame, cap: Int = Knn.TrainCap): DataFrame = {
-    val overCap = e.select(lit(1).as("one")).queryExecution.toRdd
-      .mapPartitions(it => Iterator(it.take(cap + 1).size.toLong))
-      .fold(0L)(_ + _) > cap
-    if (!overCap) e
-    else e.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(cap)
-      .localCheckpoint(true)
+  /** Σ xᵢ·cᵢ over the common prefix, accumulated left to right in
+    * double — DotProduct's loop, so scores built on it equal the
+    * codegen'd ones bit for bit. */
+  private def dot(x: Array[Double], c: Array[Double]): Double = {
+    val n = math.min(x.length, c.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x(i) * c(i); i += 1 }
+    s
   }
 
-  /** Lloyd iterations from a deterministic id-strided init. Returns the
-    * final centroids and the inertia (Σ min-sqdist) measured at the
+  /** A training sample: `vecs(i)` is row `ids(i)`'s embedding as
+    * doubles (null for a null embedding), rows in md5(vec_id) order.
+    * `capped` says the frame held more than the cap, so the sample is
+    * not all of it. */
+  private[graft] final case class Sample(ids: Array[Long],
+                                         vecs: Array[Array[Double]],
+                                         capped: Boolean) {
+    /** Every vector's [from, until) components (a PQ subspace). */
+    def slice(from: Int, until: Int): Sample =
+      copy(vecs = vecs.map(v => if (v == null) null else v.slice(from, until)))
+  }
+
+  /** The bounded training sample of a (vec_id, embedding) frame, in ONE
+    * Spark job: the first `cap` rows in md5(vec_id), vec_id order, so
+    * under the cap it is every row and past it a deterministic,
+    * content-independent sample. The one row past the cap sets
+    * `capped` at no extra job.
+    *
+    * Collected through `.rdd`, i.e. the limit's execute path: each
+    * partition keeps its top cap + 1 and one single-partition exchange
+    * merges those heaps on an executor, so the driver receives at most
+    * cap + 1 rows. (`Dataset.collect` would take the limit's
+    * executeCollect path, which merges every partition's heap on the
+    * driver: partitions × (cap + 1) rows.) */
+  private[graft] def sample(e: DataFrame, cap: Int = TrainCap): Sample = {
+    val rows = sampleFrame(e, cap)
+    import rows.sparkSession.implicits._
+    val read = rows.as[(Long, Array[Double])].rdd.collect()
+    val kept = read.take(cap)
+    Sample(kept.map(_._1), kept.map(_._2), capped = read.length > cap)
+  }
+
+  /** The frame [[sample]] collects: `orderBy(...).limit(cap + 1)` plans
+    * as TakeOrderedAndProject, with bounded per-partition heaps. The
+    * embedding is read as `array<double>` (float → double widening is
+    * exact). */
+  private[graft] def sampleFrame(e: DataFrame, cap: Int): DataFrame =
+    e.select(col("vec_id").cast("long").as("vec_id"),
+             col("embedding").cast("array<double>").as("embedding"))
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+      .limit(cap + 1)
+
+  /** Each vector's cluster (1-based) and ‖x − c‖² (clamped at 0) under
+    * [[assignLiteral]]'s score, left-to-right dots and tie-break to the
+    * lowest id; a null or empty vector gets cluster 0. */
+  private[graft] def nearest(vecs: Array[Array[Double]], cents: IndexedSeq[Array[Double]])
+      : (Array[Int], Array[Double]) = {
+    val sq = cents.map(sqn)
+    val cluster = new Array[Int](vecs.length)
+    val sqdist = new Array[Double](vecs.length)
+    var i = 0
+    while (i < vecs.length) {
+      val v = vecs(i)
+      if (v != null && v.length > 0) {
+        var best = 0
+        var bestS = 2.0 * dot(v, cents(0)) - sq(0)
+        var j = 1
+        while (j < cents.length) {
+          val s = 2.0 * dot(v, cents(j)) - sq(j)
+          if (s > bestS) { best = j; bestS = s }
+          j += 1
+        }
+        cluster(i) = best + 1
+        sqdist(i) = math.max(dot(v, v) - bestS, 0.0)
+      }
+      i += 1
+    }
+    (cluster, sqdist)
+  }
+
+  /** Lloyd iterations over a training sample, from a deterministic
+    * id-strided init (vec_id % 17 == 0, by vec_id, first k). Returns
+    * the final centroids and the inertia (Σ min-sqdist) measured at the
     * START of each round — non-increasing by the Lloyd argument, which
-    * KMeansSpec asserts. Stops early when the update is a fixed point.
-    * Empty clusters keep their previous centroid. */
-  def fit(e: DataFrame, k: Int, maxIter: Int)
+    * KMeansSpec asserts. Each centroid is its members' mean per
+    * position; a null embedding contributes nothing; an empty cluster
+    * keeps its previous centroid; the fit stops early at a fixed
+    * point. */
+  def fit(s: Sample, k: Int, maxIter: Int)
       : (IndexedSeq[Array[Double]], Seq[Double]) = {
-    import e.sparkSession.implicits._
     require(k >= 1 && maxIter >= 1, s"need k>=1, maxIter>=1; got $k, $maxIter")
-    val init = e.filter(col("vec_id") % 17 === 0).orderBy(col("vec_id"))
-      .limit(k).select(col("embedding").cast("array<double>"))
-      .as[Seq[Double]].collect().map(_.toArray)
+    val init = s.ids.indices.filter(i => s.ids(i) % 17 == 0)
+      .sortBy(i => s.ids(i)).take(k)
     require(init.nonEmpty, "k-means init sample is empty")
-    val dim = init.head.length
-    var cents: IndexedSeq[Array[Double]] = init.toIndexedSeq
+    var cents: IndexedSeq[Array[Double]] = init.map { i =>
+      require(s.vecs(i) != null, s"k-means init row ${s.ids(i)} has a null embedding")
+      s.vecs(i)
+    }
+    val dim = cents.head.length
     val inertias = scala.collection.mutable.ArrayBuffer.empty[Double]
     var iter = 0
     var fixedPoint = false
     while (iter < maxIter && !fixedPoint) {
-      // One job per round: cluster/sqdist are row-local, the explode is
-      // map-side, and the (cluster, pos) hash agg partial-combines, so
-      // the shuffle carries ≤ k×dim rows per input partition. sqdist is
-      // replicated across a row's dim exploded components, so
-      // Σ sd / dim recovers the true inertia from the same pass.
-      val stats = assign(e, cents)
-        .select(col("cluster"), col("sqdist"),
-                posexplode(col("embedding")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"),
-             sum(col("sqdist")).as("sd"))
-        .collect()
-      inertias += stats.iterator.map(_.getAs[Double]("sd")).sum / dim
-      val next = Array.tabulate(cents.length)(i => cents(i))
-      stats.groupBy(_.getAs[Int]("cluster")).foreach { case (c, rows) =>
-        val arr = new Array[Double](dim)
-        rows.foreach { r =>
-          arr(r.getAs[Int]("pos")) =
-            r.getAs[Double]("s") / r.getAs[Long]("n")
+      val (cluster, sqdist) = nearest(s.vecs, cents)
+      val sums = Array.ofDim[Double](cents.length, dim)
+      val n = new Array[Long](cents.length)
+      var inertia = 0.0
+      var i = 0
+      while (i < s.vecs.length) {
+        val c = cluster(i) - 1
+        if (c >= 0) {
+          val v = s.vecs(i)
+          val acc = sums(c)
+          var p = 0
+          while (p < v.length) { acc(p) += v(p); p += 1 }
+          n(c) += 1
+          inertia += sqdist(i)
         }
-        next(c - 1) = arr
+        i += 1
       }
-      fixedPoint = cents.indices.forall(i => cents(i).sameElements(next(i)))
-      cents = next.toIndexedSeq
+      inertias += inertia
+      val next = cents.indices.map { c =>
+        if (n(c) == 0) cents(c) else sums(c).map(_ / n(c))
+      }
+      fixedPoint = cents.indices.forall(c => cents(c).sameElements(next(c)))
+      cents = next
       iter += 1
     }
     (cents, inertias.toSeq)

@@ -447,9 +447,8 @@ object Knn {
   /** PQ over TRAINED per-subspace codebooks — closing pqTopK's
     * documented "codebook is an honest sample" gap the same way
     * ann_ivf_trained does for IVF: each of the M=4 subspaces runs its
-    * own distributed Lloyd's k-means (similarity.KMeans, K=16, ≤3
-    * rounds) over the SLICED embeddings (the slice is map-only, each
-    * round shuffles ≤ K×subDim partial rows per input partition).
+    * own Lloyd's k-means (similarity.KMeans, K=16, ≤3 rounds) over the
+    * SLICED training sample.
     * Trained centroids quantize their subspace with lower distortion
     * than raw sample slices, so ADC scores track true dot products
     * more closely — PqSpec extends the planted-duplicate maximum
@@ -462,28 +461,16 @@ object Knn {
   }
 
   /** Frame-level trained-PQ core (shared with PqSpec's planted run).
-    * The M subspace trainers are independent job chains, so they are
-    * submitted CONCURRENTLY (Spark's scheduler interleaves jobs from
-    * multiple threads) — wall-clock is one trainer, not M; results
-    * stay deterministic because each future returns its own subspace's
-    * centroids regardless of completion order. All M fits slice ONE
-    * bounded training frame (KMeans.trainPin: pass-through under the
-    * cap, a pinned md5 sample past it) — without the gate the trainers
-    * re-execute the corpus scan M × rounds times at 100 TB (the slice
-    * is map-only, but its INPUT is the full scan); the search
-    * (encode + ADC) still runs over the full frame. */
+    * ONE training sample (KMeans.sample: one Spark job, every row under
+    * the cap, an md5 sample past it) feeds the M subspace fits, which
+    * run in memory one after another on its slices; the search
+    * (encode + ADC) runs over the full frame. */
   private[graft] def pqTrainedOn(e: DataFrame, M: Int,
       subDim: Int, K: Int, k: Int): DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val train = KMeans.trainPin(e)
-    val cbooks = Await.result(
-      Future.sequence((0 until M).map { m => Future {
-        KMeans.fit(train.select(col("vec_id"),
-          slice(col("embedding"), m * subDim + 1, subDim).as("embedding")),
-          K, 3)._1
-      }}), Duration.Inf).toIndexedSeq
+    val train = KMeans.sample(e)
+    val cbooks = (0 until M).map { m =>
+      KMeans.fit(train.slice(m * subDim, (m + 1) * subDim), K, 3)._1
+    }
     pqSearch(e, k, cbooks)
   }
 
@@ -624,19 +611,17 @@ object Knn {
   }
 
   /** RQ over TRAINED codebooks — the §7 refinement of rq's honest
-    * samples, mirroring ann_pq_trained: level 1 is a distributed
-    * Lloyd's fit over the raw embeddings; level 2 trains on the ACTUAL
-    * corpus residuals (x − c1[assign(x)]) — the residual frame is a
-    * pure map (zip_with against the literal level-1 centroids), so the
-    * residual trainer sees the actual residual of every training
-    * vector (the full corpus up to KMeans.trainPin's bounded cap; a
-    * deterministic sample past it — the Faiss train() contract), not
-    * a 15-row sample. Codeword
-    * 1 of the trained level-2 book is pinned to the zero vector, so
-    * "refine by nothing" stays available and the per-vector monotone
-    * guarantee err2 ≤ err1 survives training (RqSpec asserts it, plus
-    * that training beats the sampled residual codebook on corpus
-    * distortion). Search is the same two-LUT ADC as rq. */
+    * samples, mirroring ann_pq_trained: level 1 is a Lloyd's fit over
+    * the raw embeddings; level 2 trains on the ACTUAL corpus residuals
+    * (x − c1[assign(x)]) — the level-2 trainer sees the residual of
+    * every training vector (the full corpus up to KMeans.TrainCap; a
+    * deterministic sample past it — the Faiss train() contract), not a
+    * 15-row sample. Codeword 1 of the trained level-2 book is pinned to
+    * the zero vector, so "refine by nothing" stays available and the
+    * per-vector monotone guarantee err2 ≤ err1 survives training
+    * (RqSpec asserts it, plus that training beats the sampled residual
+    * codebook on corpus distortion). Search is the same two-LUT ADC as
+    * rq. */
   def rqTrained(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val (c1, c2) = fitRqTrained(e)
@@ -644,25 +629,25 @@ object Knn {
   }
 
   /** Trained RQ codebooks (shared with RqSpec). Both levels train on
-    * ONE bounded training frame (KMeans.trainPin — the Faiss train()
-    * contract: every vector up to the cap, a pinned deterministic md5
-    * sample past it); the residual frame is a pure map over it, so
-    * past the cap the sequential two-level fit reads the pin instead
-    * of re-scanning the corpus per round. The search (encode +
-    * two-LUT ADC) still runs over the full frame. */
+    * ONE training sample (KMeans.sample — the Faiss train() contract:
+    * every vector up to the cap, a deterministic md5 sample past it);
+    * the level-2 residuals x − c1[assign(x)] are computed in memory
+    * from it, in double, as a zip_with against the literal level-1
+    * centroids would. The search (encode + two-LUT ADC) runs over the
+    * full frame. */
   private[graft] def fitRqTrained(e: DataFrame)
       : (IndexedSeq[Array[Float]], IndexedSeq[Array[Float]]) = {
     // 2 Lloyd rounds per level: the distortion win over the sampled
     // codebook comes almost entirely from seeing every residual, and
     // the two fits are sequential (level 2 needs level 1's assignment)
     val K1 = 16; val K2 = 16
-    val train = KMeans.trainPin(e)
+    val train = KMeans.sample(e)
     val c1d = KMeans.fit(train, K1, 2)._1
-    val resid = KMeans.assignLiteral(train, c1d)
-      .select(col("vec_id"),
-        zip_with(col("embedding"),
-                 element_at(typedlit(c1d.map(_.toSeq)), col("cluster")),
-                 (x, y) => x - y).as("embedding"))
+    val (cluster, _) = KMeans.nearest(train.vecs, c1d)
+    val resid = train.copy(vecs = train.vecs.zip(cluster).map {
+      case (v, 0) => v // null or empty: contributes nothing
+      case (v, c) => Array.tabulate(v.length)(p => v(p) - c1d(c - 1)(p))
+    })
     val c2d = KMeans.fit(resid, K2, 2)._1
     val zero = Array.fill(c1d.head.length)(0.0f)
     (c1d.map(_.map(_.toFloat)).toIndexedSeq,
@@ -733,48 +718,29 @@ object Knn {
   }
 
   /** The IVF-PQ model fit (coarse quantizer + M sub-codebooks) shared
-    * by the inline entry and the persisted-index builder. The coarse
-    * quantizer and the M sub-codebooks are independent trainings — all
-    * M+1 Lloyd fits run concurrently (separate Spark jobs share the
-    * session) so the critical path is ONE fit, not two. */
-  /** IVF-PQ training-sample cap (Faiss-style: train on a bounded
-    * representative sample, encode everything). */
-  private[graft] val TrainCap = 50000
-
+    * by the inline entry and the persisted-index builder: the M+1 Lloyd
+    * fits run in memory, one after another, over ONE training sample
+    * (KMeans.sample — the Faiss train() contract); encoding and cell
+    * assignment (ivfPqAdd) run over the full corpus as pure maps. The
+    * dimension is read from the sample, so the stack is
+    * dimension-generic: every consumer (pqEncode, adcRank, ivfPqAdd)
+    * derives subDim from the codebooks. 64-dim test embeddings →
+    * subDim 16; 768-dim production embeddings → subDim 192, same
+    * plans. */
   private[graft] def ivfPqFit(e: DataFrame)
       : (IndexedSeq[IndexedSeq[Array[Double]]], IndexedSeq[Array[Double]]) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // Dimension inferred from the data (one driver-side row — a
-    // model-sized peek, same contract as the codebook collects), so the
-    // whole IVF-PQ stack is dimension-generic: every consumer below
-    // (pqEncode, adcRank, ivfPqAdd) already derives subDim from the
-    // codebooks themselves. 64-dim test embeddings → subDim 16;
-    // 768-dim production embeddings → subDim 192, same plans.
-    val M = 4
-    // Bounded training frame (KMeans.trainPin — the Faiss train()
-    // contract; r14 moved the shared gate+pin there so every inline
-    // trainer uses it): past the cap the 5 concurrent fits below read
-    // ONE pinned md5 sample instead of each re-running the corpus
-    // scan per Lloyd round; under the cap the frame passes through
-    // untouched, so entry outputs are unchanged by construction.
-    // Encoding/assignment (ivfPqAdd) still runs over the full corpus
-    // — that part is a pure map.
-    val train = KMeans.trainPin(e)
-    val dim = train.select(size(col("embedding"))).take(1).headOption.getOrElse(
+    val M = 4; val K = 16; val CoarseK = 8
+    val train = KMeans.sample(e)
+    val dim = train.vecs.find(_ != null).getOrElse(
       throw new IllegalArgumentException(
-        "ivfPqFit: cannot train on an empty embeddings corpus")).getInt(0)
+        "ivfPqFit: cannot train on an empty embeddings corpus")).length
     require(dim % M == 0, s"embedding dim $dim not divisible by M=$M")
-    val subDim = dim / M; val K = 16; val CoarseK = 8
-    val coarseF = Future { KMeans.fit(train, CoarseK, 3)._1 }
-    val cbooksF = Future.sequence((0 until M).map { m => Future {
-        KMeans.fit(train.select(col("vec_id"),
-          slice(col("embedding"), m * subDim + 1, subDim).as("embedding")),
-          K, 3)._1
-      }})
-    val coarse = Await.result(coarseF, Duration.Inf)
-    (Await.result(cbooksF, Duration.Inf).toIndexedSeq, coarse)
+    val subDim = dim / M
+    val coarse = KMeans.fit(train, CoarseK, 3)._1
+    val cbooks = (0 until M).map { m =>
+      KMeans.fit(train.slice(m * subDim, (m + 1) * subDim), K, 3)._1
+    }
+    (cbooks, coarse)
   }
 
   /** Top-nprobe nearest coarse cells per query — the ivfProbes recall
@@ -785,13 +751,7 @@ object Knn {
     * nprobe=1 reproduces the assignment exactly. */
   private[graft] def probeClusters(q: DataFrame,
       cents: IndexedSeq[Array[Double]], nprobe: Int): DataFrame = {
-    def sqn(c: Array[Double]): Double = c.map(x => x * x).sum
-    val scored = array(cents.zipWithIndex.map { case (c, i) =>
-      struct(
-        (lit(2.0) * VectorFunctions.dot(col("embedding"), typedlit(c.toSeq))
-          - lit(sqn(c))).as("s"),
-        lit(-(i + 1)).as("negi"))
-    }: _*)
+    val scored = KMeans.scoreStructs(cents)
     q.select(col("vec_id").as("query_id"),
         explode(slice(reverse(array_sort(scored)), 1, nprobe)).as("p"))
       .select(col("query_id"), (-col("p.negi")).as("q_cluster"))
@@ -869,10 +829,9 @@ object Knn {
     * map-only assignment plan, planted-duplicate co-clustering). */
   def kmeansProfile(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    // fit on the bounded training frame (trainPin: pass-through under
-    // the cap, pinned md5 sample past it); the assignment + rollup
-    // below still cover the corpus
-    val (cents, _) = KMeans.fit(KMeans.trainPin(e), 8, 5)
+    // fit on the bounded training sample; the assignment + rollup
+    // below cover the corpus
+    val (cents, _) = KMeans.fit(KMeans.sample(e), 8, 5)
     KMeans.assign(e, cents)
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_vectors"),
@@ -891,10 +850,9 @@ object Knn {
     * guarantee that makes "trained" better than "sampled"). */
   def ivfTrained(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    // fit on the bounded training frame (trainPin: pass-through under
-    // the cap, pinned md5 sample past it); the corpus-side assignment
-    // below is a pure map as before
-    val (cents, _) = KMeans.fit(KMeans.trainPin(e), 16, 3)
+    // fit on the bounded training sample; the corpus-side assignment
+    // below is a pure map
+    val (cents, _) = KMeans.fit(KMeans.sample(e), 16, 3)
     val assigned = KMeans.assign(e, cents)
       .select(col("cluster"), col("vec_id"), col("embedding"))
     val q = assigned.filter(isQuery)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.Num.rnd
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -168,8 +168,7 @@ object EventStream {
   /** Convenience: run the hourly aggregation over a micro-batch stream
     * into an in-memory sink (complete mode — append would hold back
     * windows the watermark hasn't closed yet, losing the stream's tail). */
-  def runHourlyToMemory(spark: SparkSession, events: DataFrame,
-                        queryName: String): Unit = {
+  def runHourlyToMemory(events: DataFrame, queryName: String): Unit = {
     val q = hourlyCounts(events).writeStream
       .outputMode(OutputMode.Complete)
       .format("memory")

@@ -73,7 +73,7 @@ object ScaleUpFresh {
           d.withColumn(k, col(k) + lit(i * s))
         }, i)
       }.reduce(_ unionByName _)
-    def asIs(d: DataFrame, i: Int): DataFrame = d
+    val asIs: (DataFrame, Int) => DataFrame = (d, _) => d
 
     // entity names re-derive from the offset key (the generator's own
     // Name#%09d convention), so replica entities are genuinely NEW

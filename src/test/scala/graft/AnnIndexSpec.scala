@@ -36,6 +36,27 @@ class AnnIndexSpec extends AnyFunSuite {
       .ivfPqServe(e, 10, nprobe = 3, cb2, co2, codes2)) === served)
   }
 
+  test("a warm open reads the declared schemas: one Spark job, the model collect") {
+    import similarity.{AnnIndex, Knn}
+    AnnIndex.ivfPqCached(spark, Sf) // build, or reuse a built cache
+    val cache = tools.CorpusCache.dirFor(Sf, "embeddings", "ivfpq")
+    var opened: (IndexedSeq[IndexedSeq[Array[Double]]], IndexedSeq[Array[Double]],
+                 org.apache.spark.sql.DataFrame) = null
+    // no schema inference job for either table; the ~5 KB model is
+    // still read through Spark, which is one job
+    assert(JobCount.jobsIn(spark, "ivfpq-warm-open") {
+      opened = AnnIndex.ivfPqCached(spark, Sf)
+    } === 1)
+    val (cbooks, coarse, codes) = opened
+    // the declared schemas are the ones parquet inference returns
+    assert(AnnIndex.ModelSchema === spark.read.parquet(s"$cache/model").schema)
+    assert(codes.schema === spark.read.parquet(s"$cache/codes").schema)
+    // and the served rows are the inline-trained form's
+    val e = Tables.embeddings(spark, Sf).select(col("vec_id"), col("embedding"))
+    assert(rows(Knn.ivfPqServe(e, 10, nprobe = 3, cbooks, coarse, codes)) ===
+      rows(Knn.ivfPqOn(e, 10, nprobe = 3)))
+  }
+
   test("serving pushes the probed-cell filter into the codes scan") {
     val e = Tables.embeddings(spark, Sf)
       .select(col("vec_id"), col("embedding"))

@@ -24,7 +24,7 @@ class EventStreamSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
     input.addData(loadEvents())
-    EventStream.runHourlyToMemory(spark, input.toDF(), "stream_hourly")
+    EventStream.runHourlyToMemory(input.toDF(), "stream_hourly")
     val streamed = spark.table("stream_hourly")
       .select("hour", "event_type", "n", "sum_value")
       .orderBy("hour", "event_type").collect().toSeq

@@ -139,7 +139,7 @@ class SearchIndexedSpec extends AnyFunSuite {
     import graft.similarity.{KMeans, Knn}
     val e = Tables.embeddings(spark, Sf)
       .select(col("vec_id"), col("embedding"))
-    val cents = KMeans.fit(e, 8, 3)._1
+    val cents = KMeans.fit(KMeans.sample(e), 8, 3)._1
     val q = e.filter(col("vec_id") < 5)
     val probe1 = Knn.probeClusters(q, cents, 1).collect()
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Int]("q_cluster")).toMap
