@@ -10,7 +10,7 @@ import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
 import graft.Tables
 import graft.functions.Num.rnd
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
+import graft.functions.{VectorFunctions, Wire}
 import graft.functions.expressions.{BoundedBucket, MinHashSignature}
 
 /** Deduplication suite for a training-data pipeline.
@@ -745,32 +745,26 @@ object Dedup {
   def ngramIncremental(spark: SparkSession, dir: String): DataFrame =
     ngramIncrementalOn(Tables.documents(spark, dir))
 
-  /** Hashed-wire twin: the persisted shingle→postings index and the
-    * batch probe join key on xxhash64(shingle) — 8-byte wire keys for
-    * BOTH the standing index (8 bytes/posting key instead of a 3-token
-    * string, a direct index-size cut) and every day's probe shuffle. A
-    * collision merges two shingles' postings, inflating `inter` by at
-    * most the colliding occurrences — jaccard over-estimate, i.e. the
-    * conservative direction for dedup (a non-dup flagged similar, never
-    * a dup missed); odds as the spans_hashed note, nil at test SF →
-    * full oracle. Per-doc `n_sh` is computed on the STRING shingles
-    * before hashing, so denominators are exact either way. */
-  def ngramIncrementalHashed(spark: SparkSession, dir: String): DataFrame =
-    ngramIncrementalOn(Tables.documents(spark, dir), hashed = true)
-
   /** Frame-level core (docs must have doc_id + text; the quality spec
-    * plants batch/corpus near-dup fixtures through it). */
+    * plants batch/corpus near-dup fixtures through it). Under
+    * `Wire.Hashed` (dedup_ngram_incremental_hashed) the persisted
+    * shingle→postings index and the batch probe join key on
+    * xxhash64(shingle) — 8-byte keys for BOTH the standing index (a
+    * direct index-size cut) and every day's probe shuffle. A collision
+    * merges two shingles' postings, inflating `inter` by at most the
+    * colliding occurrences: jaccard over-estimated, the conservative
+    * direction for dedup (a non-dup flagged similar, never a dup
+    * missed). Per-doc `n_sh` is computed on the STRING shingles before
+    * hashing, so denominators are exact on either wire. */
   private[graft] def ngramIncrementalOn(docs: DataFrame,
-                                        hashed: Boolean = false): DataFrame = {
+                                        wire: Wire = Wire.Text): DataFrame = {
     val strRows = shingleRows(docs.select(col("doc_id"), col("text")))
       .withColumn("n_sh",
         count(lit(1)).over(Window.partitionBy(col("doc_id"))))
       .withColumn("is_batch", bucket16(col("doc_id")) === 0)
     // hash AFTER n_sh: denominators stay exact string-shingle counts;
     // only the postings/probe key rides the wire as 8 bytes
-    val ex = if (hashed)
-      strRows.withColumn("shingle", xxhash64(col("shingle")))
-    else strRows
+    val ex = wire.keyed(strRows, "shingle")
     val corpus = ex.filter(!col("is_batch"))
     // minSize = 1: a batch doc can match a singleton corpus posting
     val postings = guardedBuckets(corpus, Seq("shingle"),
@@ -910,16 +904,6 @@ object Dedup {
   def contamination(spark: SparkSession, dir: String): DataFrame =
     contaminationOn(Tables.documents(spark, dir))
 
-  /** Hashed-wire twin: the shingle bucket-collect keys on
-    * xxhash64(shingle) — the one exchange this operator runs carries
-    * 8-byte keys instead of 3-token strings. A collision merges two
-    * shingles' buckets, inflating `inter` — overlap over-estimate, the
-    * conservative direction for decontamination (suspect more, miss
-    * nothing); odds as the spans_hashed note, nil at test SF → full
-    * oracle. `n_sh` denominators are exact (computed pre-hash). */
-  def contaminationHashed(spark: SparkSession, dir: String): DataFrame =
-    contaminationOn(Tables.documents(spark, dir), hashed = true)
-
   /** Frame-level core (docs must have doc_id + text). Same hot-shingle
     * drop guard as jaccardPairsOn (`contamination_hot_shingles` observed
     * metric): a shingle in >maxBucket docs identifies nothing about
@@ -928,17 +912,21 @@ object Dedup {
     * shingles, so overlap can only be UNDERestimated for pairs that
     * also shared a hot shingle — for decontamination, pair the guard
     * with a maxBucket above any real benchmark's doc count (eval sets
-    * are tiny; a benchmark shingle can never legitimately be hot). */
+    * are tiny; a benchmark shingle can never legitimately be hot).
+    * Under `Wire.Hashed` (dedup_contamination_hashed) the shingle
+    * bucket-collect — the one exchange this operator runs — keys on
+    * xxhash64(shingle). A collision merges two shingles' buckets,
+    * inflating `inter`: overlap over-estimated, the conservative
+    * direction for decontamination (suspect more, miss nothing).
+    * `n_sh` denominators are exact (computed pre-hash). */
   private[graft] def contaminationOn(docs: DataFrame,
                                      maxBucket: Int = MaxBucket,
-                                     hashed: Boolean = false): DataFrame = {
+                                     wire: Wire = Wire.Text): DataFrame = {
     val strRows = shingleRows(docs)
       .withColumn("n_sh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
       .withColumn("is_eval", bucket16(col("doc_id")) === 15)
     // hash AFTER n_sh (exact denominators); the bucket key is 8 bytes
-    val ex = if (hashed)
-      strRows.withColumn("shingle", xxhash64(col("shingle")))
-    else strRows
+    val ex = wire.keyed(strRows, "shingle")
     val byShingle = guardedBuckets(ex, Seq("shingle"),
       struct(col("doc_id"), col("is_eval"), col("n_sh")),
       "contamination_hot_shingles", maxBucket)
@@ -1211,11 +1199,13 @@ object Dedup {
     "dedup_canonical"     -> (canonicalEntry _),
     "dedup_incremental"   -> (incremental _),
     "dedup_ngram_incremental" -> (ngramIncremental _),
-    "dedup_ngram_incremental_hashed" -> (ngramIncrementalHashed _),
+    "dedup_ngram_incremental_hashed" ->
+      ((s, d) => ngramIncrementalOn(Tables.documents(s, d), Wire.Hashed)),
     "dedup_minhash_incremental" -> (minhashIncremental _),
     "dedup_bloom_incremental" -> (bloomIncremental _),
     "dedup_contamination" -> (contamination _),
-    "dedup_contamination_hashed" -> (contaminationHashed _),
+    "dedup_contamination_hashed" ->
+      ((s, d) => contaminationOn(Tables.documents(s, d), wire = Wire.Hashed)),
     "dedup_minhash_lsh"   -> (minhashLsh _),
     "dedup_minhash_verified" -> (minhashVerified _),
     "dedup_simhash"       -> (simhash _),
@@ -1579,8 +1569,7 @@ object Dedup {
          ORDER BY e.vec_id""")
 
   /** Hashed-wire twins carry their string form's FULL oracle — rows are
-    * identical absent an xxhash64 collision (the spans_hashed
-    * precedent; odds in the twin scaladocs, nil at any test SF). */
+    * identical absent an xxhash64 collision (graft.functions.Wire). */
   val oracles: Map[String, String] = baseOracles ++ Map(
     "dedup_ngram_incremental_hashed" ->
       baseOracles("dedup_ngram_incremental"),

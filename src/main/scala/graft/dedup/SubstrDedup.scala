@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Num.rnd
+import graft.functions.Wire
 import graft.functions.TextFunctions._
 
 /** Exact-substring (span-level) deduplication — the ExactSubstr pass of
@@ -48,9 +49,9 @@ import graft.functions.TextFunctions._
   *     cumulative sum, group by island.
   *
   * At 100 TB the only heavy exchange is step 3/4's shuffle on the gram
-  * string; a production run would group on xxhash64(gram) (8-byte wire
-  * keys; collision odds ~ n^2 / 2^64) — the string form is kept here so
-  * the DuckDB oracle is bit-exact with no collision caveat.
+  * key; the kernels take a [[graft.functions.Wire]], so a production run
+  * groups on xxhash64(gram) (dedup_substring_spans_hashed) while the
+  * string form keeps the DuckDB oracle bit-exact.
   *
   * Reference behavior anchor: the reference dedups referral rows only
   * whole-record (core/etl_service.py:210-246 drop_duplicates); span
@@ -63,8 +64,17 @@ object SubstrDedup {
     * docs while exercising identical machinery). */
   private[graft] val MinRun = 8
 
-  /** One row per (doc_id, gram start position, K-token gram). */
-  private def gramRows(docs: DataFrame, k: Int): DataFrame = {
+  /** The gram key column under `wire`: `kg` holds the K-token string,
+    * `kh` its xxhash64. */
+  private[graft] def gramKey(wire: Wire): String = wire match {
+    case Wire.Text => "kg"
+    case Wire.Hashed => "kh"
+  }
+
+  /** One row per (doc_id, gram start position, K-token gram key). The
+    * string is built map-side either way; under `Wire.Hashed` only its
+    * 8-byte key leaves this stage. */
+  private def gramRows(docs: DataFrame, k: Int, wire: Wire): DataFrame = {
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val leads = (1 until k).map(j => lead(col("w"), j).over(byDoc).as(s"w$j"))
     docs
@@ -73,8 +83,8 @@ object SubstrDedup {
         col("w") +: leads: _*)
       .filter(col(s"w${k - 1}").isNotNull)
       .select(col("doc_id"), col("pos"),
-        concat_ws(" ", col("w") +: (1 until k).map(j => col(s"w$j")): _*)
-          .as("kg"))
+        wire.key(concat_ws(" ",
+          col("w") +: (1 until k).map(j => col(s"w$j")): _*)).as(gramKey(wire)))
   }
 
   /** Islands interval-merge: duplicated K-gram START positions
@@ -99,23 +109,31 @@ object SubstrDedup {
 
   /** Maximal cross-doc duplicated spans:
     * (doc_id, span_start, span_end, span_len), token positions
-    * inclusive, 0-based, in regex-token space. */
-  private[graft] def spansOf(docs: DataFrame, k: Int): DataFrame = {
-    val grams = gramRows(docs, k)
+    * inclusive, 0-based, in regex-token space. Under `Wire.Hashed` the
+    * duplicate-gram groupBy and the start-probe semi-join shuffle 8-byte
+    * keys instead of ~K-token strings (≈6× less gram-stage wire at K=8
+    * on the synthetic corpus; more on real prose). A collision aliases
+    * two unrelated grams, so its only effect is over-scrubbing: at worst
+    * one false K-token span per colliding occurrence — a bounded ~10⁻⁸
+    * rate even at 10¹² grams. */
+  private[graft] def spansOf(docs: DataFrame, k: Int,
+                             wire: Wire = Wire.Text): DataFrame = {
+    val key = gramKey(wire)
+    val grams = gramRows(docs, k, wire)
     // "appears in >= 2 DISTINCT docs" == min(doc_id) != max(doc_id):
     // a plain partial min/max aggregate (one level, map-side combined
     // on the gram key alone) replaces the two-level distinct-count
-    // whose partial phase hashes (kg, doc_id) PAIRS — measured -10%
-    // on this string form at the 500k-doc rung (the hashed form is
+    // whose partial phase hashes (key, doc_id) PAIRS — measured -10%
+    // on the string form at the 500k-doc rung (the hashed form is
     // flat: its 8-byte keys made the pair phase cheap already); same
     // boolean, exact semantics
     val dupGrams = grams
-      .groupBy(col("kg"))
+      .groupBy(col(key))
       .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
       .filter(col("mn") =!= col("mx"))
-      .select(col("kg"))
+      .select(col(key))
     val hits = grams
-      .join(dupGrams, Seq("kg"), "left_semi")
+      .join(dupGrams, Seq(key), "left_semi")
       // hits are already distinct: gramRows emits ONE row per
       // (doc_id, pos) and a left-semi join never duplicates left rows
       // (even against duplicate gram keys) — no dedup exchange needed
@@ -123,87 +141,33 @@ object SubstrDedup {
     mergeStarts(hits, k)
   }
 
-  /** Span inventory entry. */
-  def spans(spark: SparkSession, dir: String): DataFrame =
-    spansOf(Tables.documents(spark, dir), MinRun)
+  /** Span inventory entry on `wire`'s gram keys. */
+  def spans(spark: SparkSession, dir: String, wire: Wire): DataFrame =
+    spansOf(Tables.documents(spark, dir), MinRun, wire)
       .orderBy(col("doc_id"), col("span_start"))
 
-  /** Production-wire variant of [[spansOf]]: grams leave the gram stage
-    * as their xxhash64 — the duplicate-gram groupBy and the start-probe
-    * semi-join shuffle 8-byte keys instead of ~K-token strings (≈6×
-    * less gram-stage wire at K=8 on the synthetic corpus; more on real
-    * prose). Expected xxhash64 collisions over n distinct grams are
-    * ~n²/2⁶⁵ (birthday bound): ~3% at n=10⁹ grams, but at n=10¹² grams
-    * (≈100 TB of text) that is ~2.7·10⁴ expected colliding PAIRS —
-    * collisions are certain at that scale, not rare. Each collision
-    * aliases two unrelated grams, whose worst case is one K-token span
-    * over-scrubbed per colliding occurrence; ~10⁴ false spans against
-    * ~10¹² token positions is a bounded ~10⁻⁸ over-scrub rate, which is
-    * acceptable for corpus dedup but is why the string form stays the
-    * oracle-bearing default and this is the documented, quantified
-    * swap-in. Spans are identical to [[spansOf]] absent a collision
-    * (SubstrDedupSpec pins set equality; the entry carries the string
-    * form's full oracle). */
-  private[graft] def spansOfHashed(docs: DataFrame, k: Int): DataFrame = {
-    val grams = gramRows(docs, k)
-      .select(col("doc_id"), col("pos"), xxhash64(col("kg")).as("kh"))
-    val dupGrams = grams
-      .groupBy(col("kh"))
-      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-      .filter(col("mn") =!= col("mx")) // see spansOf: ">=2 distinct docs"
-      .select(col("kh"))
-    val hits = grams
-      .join(dupGrams, Seq("kh"), "left_semi")
-      // hits are already distinct: gramRows emits ONE row per
-      // (doc_id, pos) and a left-semi join never duplicates left rows
-      // (even against duplicate gram keys) — no dedup exchange needed
-      .select(col("doc_id"), col("pos"))
-    mergeStarts(hits, k)
-  }
-
-  /** Hashed-wire span entry (same output contract as [[spans]]). */
-  def spansHashed(spark: SparkSession, dir: String): DataFrame =
-    spansOfHashed(Tables.documents(spark, dir), MinRun)
-      .orderBy(col("doc_id"), col("span_start"))
-
-  /** One row per distinct K-gram of `docs` — the unit a persisted gram
-    * index stores (streaming.SubstrStream appends one such frame per
-    * micro-batch). */
-  private[graft] def gramsOf(docs: DataFrame, k: Int): DataFrame =
-    gramRows(docs, k).select(col("kg")).distinct()
+  /** One row per distinct K-gram key of `docs` — the unit a persisted
+    * gram index stores (streaming.SubstrStream appends one such frame
+    * per micro-batch). Under `Wire.Hashed` a key is 8 bytes instead of
+    * a ~K-token string, shrinking both the standing index and every
+    * probe's semi-join wire (the §6.4 ladder's measured 2.1× at 5M
+    * docs applies to the probe shape verbatim). */
+  private[graft] def gramsOf(docs: DataFrame, k: Int,
+                             wire: Wire = Wire.Text): DataFrame =
+    gramRows(docs, k, wire).select(col(gramKey(wire))).distinct()
 
   /** Batch-vs-corpus probe: maximal spans of `docs` whose K-grams exist
-    * in `corpusGrams` (a standing distinct-gram set — derived in-query
-    * by [[incrementalSpansOn]], read from committed index deltas by
-    * streaming.SubstrStream). Left-semi on the gram key, so duplicate
-    * gram rows across index deltas are harmless and output stays linear
-    * in the probe's gram occurrences. */
+    * in `corpusGrams` (a standing distinct-gram set on the same `wire`
+    * — derived in-query by [[incrementalSpansOn]], read from committed
+    * index deltas by streaming.SubstrStream). Left-semi on the gram
+    * key, so duplicate gram rows across index deltas are harmless and
+    * output stays linear in the probe's gram occurrences. A collision
+    * can only add a span, as in [[spansOf]]. */
   private[graft] def probeSpans(docs: DataFrame, corpusGrams: DataFrame,
-                                k: Int): DataFrame = {
-    val hits = gramRows(docs, k)
-      .join(corpusGrams.select(col("kg")), Seq("kg"), "left_semi")
-      // hits are already distinct: gramRows emits ONE row per
-      // (doc_id, pos) and a left-semi join never duplicates left rows
-      // (even against duplicate gram keys) — no dedup exchange needed
-      .select(col("doc_id"), col("pos"))
-    mergeStarts(hits, k)
-  }
-
-  /** Hashed-wire twins of [[gramsOf]]/[[probeSpans]] for a persisted
-    * gram index that stores xxhash64 keys — 8 bytes per distinct gram
-    * instead of a ~K-token string, shrinking BOTH the standing index
-    * and every probe's semi-join wire (the §6.4 ladder's measured 2.1×
-    * at 5M docs applies to the probe shape verbatim). Same collision
-    * caveat as [[spansOfHashed]]. */
-  private[graft] def gramsOfHashed(docs: DataFrame, k: Int): DataFrame =
-    gramRows(docs, k).select(xxhash64(col("kg")).as("kh")).distinct()
-
-  private[graft] def probeSpansHashed(docs: DataFrame,
-                                      corpusGrams: DataFrame,
-                                      k: Int): DataFrame = {
-    val hits = gramRows(docs, k)
-      .select(col("doc_id"), col("pos"), xxhash64(col("kg")).as("kh"))
-      .join(corpusGrams.select(col("kh")), Seq("kh"), "left_semi")
+                                k: Int, wire: Wire = Wire.Text): DataFrame = {
+    val key = gramKey(wire)
+    val hits = gramRows(docs, k, wire)
+      .join(corpusGrams.select(col(key)), Seq(key), "left_semi")
       // hits are already distinct: gramRows emits ONE row per
       // (doc_id, pos) and a left-semi join never duplicates left rows
       // (even against duplicate gram keys) — no dedup exchange needed
@@ -231,7 +195,7 @@ object SubstrDedup {
 
   /** Frame-level core (docs must have doc_id + text). */
   private[graft] def incrementalSpansOn(docs: DataFrame, k: Int): DataFrame = {
-    val grams = gramRows(docs, k)
+    val grams = gramRows(docs, k, Wire.Text)
       .withColumn("is_batch", Dedup.bucket16(col("doc_id")) === 0)
     val corpusGrams = grams.filter(!col("is_batch"))
       .select(col("kg")).distinct()
@@ -309,8 +273,8 @@ object SubstrDedup {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_substring_decontam" -> (decontamSpans _),
-    "dedup_substring_spans" -> (spans _),
-    "dedup_substring_spans_hashed" -> (spansHashed _),
+    "dedup_substring_spans" -> ((s, d) => spans(s, d, Wire.Text)),
+    "dedup_substring_spans_hashed" -> ((s, d) => spans(s, d, Wire.Hashed)),
     "dedup_substring_scrub" -> (scrub _),
     "dedup_substring_incremental" -> (incrementalSpans _))
 
@@ -345,10 +309,8 @@ object SubstrDedup {
           SELECT doc_id, span_start, span_end, span_len
           FROM spans ORDER BY doc_id, span_start""",
     // the hashed wire produces IDENTICAL spans absent an xxhash64
-    // collision (expected pairs ~n²/2⁶⁵ — nil at any test SF; ~3% at
-    // 10⁹ grams, certain-but-bounded ~10⁻⁸ over-scrub at 10¹² grams,
-    // see spansOfHashed), so it carries the string form's full oracle
-    // rather than a weaker rows-only check
+    // collision (graft.functions.Wire), so it carries the string form's
+    // full oracle rather than a weaker rows-only check
     "dedup_substring_spans_hashed" ->
       s"""WITH $spansCte
           SELECT doc_id, span_start, span_end, span_len

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorFunctions
+import graft.functions.{VectorFunctions, Wire}
 import graft.functions.Num.rnd
 
 /** Full-text ranked retrieval (Okapi BM25) and sparse+dense hybrid
@@ -60,16 +60,22 @@ object Search {
 
   private val RrfK = 60 // standard reciprocal-rank-fusion damping
 
-  /** (doc_id, term, tf) inverted index. Tokenization = lowercase split
-    * on non-alphanumeric, mirrored exactly by the oracle's
-    * string_split_regex. Postings are PER-DOC-LOCAL (no cross-doc
-    * state), which is what makes the persisted index append-only:
-    * postings(A ∪ B) = postings(A) ∪ postings(B) exactly
-    * (SearchIndexSpec proves it through the served scores). */
-  private[operators] def postings(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
+  /** (doc_id, term, tf) inverted index on `wire`'s term keys.
+    * Tokenization = lowercase split on non-alphanumeric, mirrored
+    * exactly by the oracle's string_split_regex. Postings are
+    * PER-DOC-LOCAL (no cross-doc state), which is what makes the
+    * persisted index append-only: postings(A ∪ B) = postings(A) ∪
+    * postings(B) exactly (SearchIndexSpec proves it through the served
+    * scores). Under `Wire.Hashed` tokens are hashed BEFORE the
+    * aggregate, so an intra-doc xxhash64 collision sums into one
+    * (doc_id, term) row — the one-row-per-(doc, term) invariant
+    * bm25FromTerms' df count relies on holds on either wire — and the
+    * aggregate's shuffle rides 8-byte keys. */
+  private[graft] def postings(docs: DataFrame,
+                              wire: Wire = Wire.Text): DataFrame =
+    wire.keyed(docs.select(col("doc_id"),
         explode(split(lower(col("text")), "[^a-z0-9]+")).as("term"))
-      .filter(length(col("term")) > 0)
+      .filter(length(col("term")) > 0), "term")
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
@@ -104,7 +110,7 @@ object Search {
     * term column's CONTENT is opaque to the scoring tree (it only ever
     * rides equi-joins and never reaches the output), which is what lets
     * the hashed-postings index serve pass xxhash64 keys through the
-    * identical core (SearchIndex.bm25IndexedHashed). */
+    * identical core (SearchIndex.bm25Served). */
   private[graft] def bm25FromTerms(spark: SparkSession, scoredPost: DataFrame,
                                    dl: DataFrame, stats: DataFrame,
                                    k: Int, terms: DataFrame): DataFrame = {
@@ -370,8 +376,8 @@ object Search {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "rag_bm25"               -> (bm25 _),
-    "rag_bm25_indexed"       -> (SearchIndex.bm25Indexed _),
-    "rag_bm25_indexed_hashed" -> (SearchIndex.bm25IndexedHashed _),
+    "rag_bm25_indexed"       -> ((s, d) => SearchIndex.bm25Indexed(s, d)),
+    "rag_bm25_indexed_hashed" -> ((s, d) => SearchIndex.bm25Indexed(s, d, Wire.Hashed)),
     "rag_hybrid_rrf"         -> (hybridRrf _),
     "rag_hybrid_rrf_indexed" -> (hybridRrfIndexed _),
     "rag_mmr"                -> (mmrRerank _),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
 
 import graft.Tables
 import graft.functions.Num.rnd
+import graft.functions.Wire
 import graft.functions.TextFunctions._
 import graft.functions.expressions.{DeflateLength, FreqItemsSketch, GramCounts, UnicodeNormalize}
 
@@ -872,27 +873,18 @@ object TextOps {
     * rollup is a second map-side-combined agg. No collect_list — no
     * hot-shingle memory risk — and no corpus² anywhere. */
   def dupNgramFrac(spark: SparkSession, dir: String): DataFrame =
-    dupNgramFracOn(Tables.documents(spark, dir), hashed = false)
+    dupNgramFracOn(Tables.documents(spark, dir), Wire.Text)
 
-  /** Hashed-wire twin (the dedup_substring_spans_hashed precedent): the
-    * doc-frequency groupBy and the join back shuffle xxhash64 longs
-    * instead of the 3-token shingle STRING — 8 bytes per key on both
-    * exchanges. A collision aliases two shingles' df counts, whose only
-    * effect is a unique gram counted as duplicated (df inflation ⇒
-    * dup_frac over-estimate, never under) — expected colliding pairs
-    * ~n²/2⁶⁵ over n distinct shingles (~3% at 10⁹; bounded over-count
-    * at 10¹², see SubstrDedup.spansOfHashed), nil at any test SF, so
-    * the entry carries the string form's full oracle. */
-  def dupNgramFracHashed(spark: SparkSession, dir: String): DataFrame =
-    dupNgramFracOn(Tables.documents(spark, dir), hashed = true)
-
-  private def dupNgramFracOn(docs: DataFrame, hashed: Boolean): DataFrame = {
-    val raw = shingleRows(docs)
+  /** Under `Wire.Hashed` (text_dup_ngram_frac_hashed) the doc-frequency
+    * groupBy and the join back shuffle xxhash64 longs instead of the
+    * 3-token shingle STRING — 8 bytes per key on both exchanges. A
+    * collision aliases two shingles' df counts, whose only effect is a
+    * unique gram counted as duplicated: dup_frac over-estimated, never
+    * under. */
+  private def dupNgramFracOn(docs: DataFrame, wire: Wire): DataFrame = {
     // the string is still BUILT map-side (concat_ws feeds xxhash64);
     // hashing before the first exchange keeps it off every shuffle
-    val ex = if (hashed)
-      raw.select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-    else raw
+    val ex = wire.keyed(shingleRows(docs), "shingle")
     val df = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     ex.join(df, Seq("shingle"))
       .groupBy(col("doc_id"))
@@ -921,22 +913,17 @@ object TextOps {
     * frequent-line set joined back, per-doc rollup — no step
     * corpus-global, lines partition by content hash at 100 TB. */
   def boilerplateLines(spark: SparkSession, dir: String): DataFrame =
-    boilerplateLinesOn(Tables.documents(spark, dir), hashed = false)
+    boilerplateLinesOn(Tables.documents(spark, dir), Wire.Text)
 
-  /** Hashed-wire twin: the doc-frequency groupBy and the join back key
-    * on xxhash64(line) — 8 bytes on the wire instead of the full line
-    * string (lines are the LONGEST keys in this family — headers and
-    * cookie banners run to hundreds of bytes on real crawl data). A
-    * collision merges two lines' doc frequencies, so a rare line
-    * sharing a bucket with a frequent one can be over-dropped — the
-    * conservative direction for boilerplate removal; odds as the
-    * spans_hashed note. Output ≡ the string form absent a collision →
-    * full oracle. */
-  def boilerplateLinesHashed(spark: SparkSession, dir: String): DataFrame =
-    boilerplateLinesOn(Tables.documents(spark, dir), hashed = true)
-
-  private def boilerplateLinesOn(docs: DataFrame,
-                                 hashed: Boolean): DataFrame = {
+  /** Under `Wire.Hashed` (text_boilerplate_lines_hashed) the
+    * doc-frequency groupBy and the join back key on xxhash64(line) — 8
+    * bytes on the wire instead of the full line string (lines are the
+    * LONGEST keys in this family — headers and cookie banners run to
+    * hundreds of bytes on real crawl data). A collision merges two
+    * lines' doc frequencies, so a rare line sharing a bucket with a
+    * frequent one can be over-dropped — the conservative direction for
+    * boilerplate removal. */
+  private def boilerplateLinesOn(docs: DataFrame, wire: Wire): DataFrame = {
     val DfThreshold = 6
     val keyed = docs
       .select(col("doc_id"), explode(sequence(lit(0), lit(3))).as("line_idx"))
@@ -950,9 +937,7 @@ object TextOps {
       .withColumn("line",
         concat(lit("shared site boilerplate line "), col("lk").cast("string")))
       .drop("lk")
-    val lines =
-      if (hashed) keyed.withColumn("line_key", xxhash64(col("line")))
-      else keyed.withColumn("line_key", col("line"))
+    val lines = keyed.withColumn("line_key", wire.key(col("line")))
     val lineDf = lines.groupBy(col("line_key"))
       .agg(countDistinct(col("doc_id")).as("df"))
     lines.join(lineDf, Seq("line_key"))
@@ -967,9 +952,11 @@ object TextOps {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_boilerplate_lines" -> (boilerplateLines _),
-    "text_boilerplate_lines_hashed" -> (boilerplateLinesHashed _),
+    "text_boilerplate_lines_hashed" ->
+      ((s, d) => boilerplateLinesOn(Tables.documents(s, d), Wire.Hashed)),
     "text_dup_ngram_frac" -> (dupNgramFrac _),
-    "text_dup_ngram_frac_hashed" -> (dupNgramFracHashed _),
+    "text_dup_ngram_frac_hashed" ->
+      ((s, d) => dupNgramFracOn(Tables.documents(s, d), Wire.Hashed)),
     "text_normalize" -> (normalizeText _),
     "text_length_hist" -> (lengthHistogram _),
     "text_entropy" -> (entropy _),
@@ -997,8 +984,8 @@ object TextOps {
     "text_fingerprint" -> (fingerprint _))
 
   // hashed-wire twins produce IDENTICAL rows absent an xxhash64
-  // collision (nil at any test SF — see the scaladoc odds), so each
-  // carries its string form's full oracle, the spans_hashed precedent
+  // collision (graft.functions.Wire), so each carries its string
+  // form's full oracle, the spans_hashed precedent
   private val boilerplateSql =
     """WITH l AS (
          SELECT doc_id, i AS line_idx,

@@ -8,6 +8,7 @@ import org.apache.spark.sql.graftshim.GraftShim.{toColumn, toExpr}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.Wire
 import graft.functions.expressions.BloomFileMightContain
 import graft.operators.{Search, SearchIndex}
 import graft.similarity.{AnnIndex, Knn}
@@ -144,11 +145,18 @@ object IndexMaintainStream {
 
   /** Union read of `table` under the `schema` its writer declares — no
     * inference job. Readers that must learn the schema from the files
-    * (a root's wire form, e.g. [[bm25WireFormOf]]) use the inferring
-    * overload. */
+    * (a root's wire, e.g. [[bm25Serve]]) use the inferring overload. */
   def readTable(spark: SparkSession, root: String, table: String,
                 schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(tablePaths(spark, root, table): _*)
+
+  /** `table`'s committed schema, inferred from the files — how a root's
+    * wire is learned (its key column's type, Wire.of); None before the
+    * first commit. */
+  private[graft] def committedSchema(spark: SparkSession, root: String,
+                                     table: String): Option[StructType] =
+    try Some(readTable(spark, root, table).schema)
+    catch { case _: IllegalArgumentException => None }
 
   private def tablePaths(spark: SparkSession, root: String,
                          table: String): Seq[String] = {
@@ -171,48 +179,28 @@ object IndexMaintainStream {
 
   // ---------------------------------------------------------------- BM25
 
-  /** Wire form of a stream-maintained BM25 root, read from the
-    * committed postings schema (term: long = hashed, string = lexical)
-    * — the SubstrStream contract: the schema is authoritative, a
-    * caller flag only decides the FIRST batch of an empty root, so a
-    * misconfigured restart cannot flip an established root. */
-  private[graft] def bm25WireFormOf(spark: SparkSession,
-                                    root: String): Option[Boolean] =
-    try {
-      val t = readTable(spark, root, "postings").schema("term").dataType
-      Some(t == org.apache.spark.sql.types.LongType)
-    } catch { case _: IllegalArgumentException => None }
-
-  /** One BM25 delta: tokenize ONLY the batch (SearchIndex.addBatch),
-    * publish postings term-clustered (file-skipping parity with the
-    * offline build), doc lengths, and the delta's additive 1-row stats.
-    * doclen/stats derive from the STAGED postings read back, so the
-    * batch tokenizes once. `hashed = true` stores xxhash64(term) — the
-    * 8-byte wire form of the standing index (SearchIndex.
-    * bm25CachedHashed's streaming twin); per-doc lengths and the
-    * additive stats are term-agnostic, so the delta algebra is
-    * unchanged. */
+  /** One BM25 delta: tokenize ONLY the batch into its postings on the
+    * root's wire (Search.postings), publish them term-clustered
+    * (file-skipping parity with the offline build), doc lengths, and
+    * the delta's additive 1-row stats. doclen/stats derive from the
+    * STAGED postings read back under their declared schemas, so the
+    * batch tokenizes once. `wire` decides only an empty root's first
+    * batch: an established root keeps its committed postings `term`
+    * type (string or long), so a misconfigured restart cannot flip it.
+    * Per-doc lengths and the additive stats are term-agnostic, so the
+    * delta algebra is the same on either wire. */
   def mergeDocBatch(spark: SparkSession, root: String, docs: DataFrame,
-                    batchId: Long, hashed: Boolean = false): Boolean = {
-    val form = bm25WireFormOf(spark, root).getOrElse(hashed)
+                    batchId: Long, wire: Wire = Wire.Text): Boolean = {
+    val form = committedSchema(spark, root, "postings")
+      .fold(wire)(post => Wire.of(post("term").dataType))
     commitBatch(spark, root, s"batch=$batchId") { stg =>
-      val (post0, _) = SearchIndex.addBatch(docs)
-      // Re-aggregate after hashing: an intra-doc xxhash64 collision
-      // would otherwise leave two rows with the same (doc_id, term),
-      // breaking the one-row-per-(doc, term) invariant bm25FromTerms'
-      // df count relies on (SearchIndex.bm25CachedHashed has the same
-      // guard). Keys are already 8-byte longs, so the extra shuffle
-      // rides the cheap wire.
-      val post = if (form) post0.withColumn("term", xxhash64(col("term")))
-                   .groupBy(col("doc_id"), col("term"))
-                   .agg(sum(col("tf")).as("tf"))
-                 else post0
-      graft.sinks.LakeSink.writeClustered(post, s"$stg/postings", 1,
-        col("term"))
-      spark.read.parquet(s"$stg/postings")
+      graft.sinks.LakeSink.writeClustered(Search.postings(docs, form),
+        s"$stg/postings", 1, col("term"))
+      spark.read.schema(SearchIndex.postingsSchema(form))
+        .parquet(s"$stg/postings")
         .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
         .write.parquet(s"$stg/doclen")
-      spark.read.parquet(s"$stg/doclen")
+      spark.read.schema(SearchIndex.DoclenSchema).parquet(s"$stg/doclen")
         .agg(count(lit(1)).cast("double").as("n_docs"),
              sum(col("dl")).cast("double").as("sum_dl"))
         .coalesce(1).write.parquet(s"$stg/stats")
@@ -221,11 +209,11 @@ object IndexMaintainStream {
 
   /** Attach BM25 maintenance to a document stream (doc_id, text). */
   def startDocStream(stream: DataFrame, root: String,
-                     hashed: Boolean = false): StreamingQuery =
+                     wire: Wire = Wire.Text): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .foreachBatch { (b: DataFrame, id: Long) =>
-        mergeDocBatch(b.sparkSession, root, b, id, hashed); ()
+        mergeDocBatch(b.sparkSession, root, b, id, wire); ()
       }
       .start()
 
@@ -233,25 +221,16 @@ object IndexMaintainStream {
     * union scan of the postings deltas + summed additive stats —
     * the same expression tree as rag_bm25, so scores are
     * byte-identical to a cold rebuild over the same documents. The
-    * root's wire form is inferred from the postings schema: a hashed
-    * root is pruned by the 8-byte query-vocabulary literals and scored
-    * through the identical bm25FromTerms core. */
+    * postings read infers its schema, and the `term` type it finds is
+    * the root's wire; doclen and stats are read under their declared
+    * schemas. */
   def bm25Serve(spark: SparkSession, root: String, k: Int = 10): DataFrame = {
-    val hashed = bm25WireFormOf(spark, root).getOrElse(false)
     val post = readTable(spark, root, "postings")
-    val (pruned, terms) =
-      if (hashed)
-        (post.filter(col("term").isin(
-           SearchIndex.hashedQueryVocab(spark): _*)),
-         SearchIndex.hashedQueryTerms(spark))
-      else
-        (post.filter(col("term").isin(
-           Search.QueryTermList.map(t => t: Any): _*)),
-         Search.queryTermsDF(spark))
-    val stats = readTable(spark, root, "stats")
+    val stats = readTable(spark, root, "stats", SearchIndex.StatsSchema)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    Search.bm25FromTerms(spark, pruned, readTable(spark, root, "doclen"),
-      stats, k, terms)
+    SearchIndex.bm25Served(spark, post,
+      readTable(spark, root, "doclen", SearchIndex.DoclenSchema), stats, k,
+      Wire.of(post.schema("term").dataType))
       .orderBy(col("query_id"), col("rank"))
   }
 

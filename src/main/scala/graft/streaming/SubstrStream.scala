@@ -3,9 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.dedup.SubstrDedup
+import graft.functions.Wire
 
 /** Exact-substring dedup ON the stream — the streaming member of the
   * span family (corpus-wide: dedup_substring_spans; daily batch:
@@ -39,42 +40,36 @@ import graft.dedup.SubstrDedup
   * measures both). */
 object SubstrStream {
 
-  /** Wire form of the persisted gram index: `hashed = false` stores
-    * the gram STRING (`kg` — bit-exact, zero collision caveat),
-    * `hashed = true` stores xxhash64 keys (`kh` — 8 bytes per distinct
-    * gram instead of a ~K-token string, so the standing index and
-    * every probe's semi-join shrink by the §6.4-measured wire factor;
-    * same collision odds note as dedup_substring_spans_hashed). A root
-    * is one wire form for its whole life — the form picks the gram
-    * table's schema and the compaction cluster key. The AUTHORITATIVE
-    * form is the committed gram table's own schema (`kh` vs `kg`
-    * column, [[wireFormOf]]); the caller's flag only decides the form
-    * of a root's FIRST batch — after that a stale or wrong flag is
-    * ignored, so a misconfigured restart can no longer flip an
-    * established root's wire form. */
-  private def gramSchema(hashed: Boolean) =
-    if (hashed) new StructType().add("kh", LongType, nullable = true)
-    else new StructType().add("kg", StringType, nullable = true)
-
-  private def gramKey(hashed: Boolean) = if (hashed) "kh" else "kg"
+  /** The persisted gram index's schema on `wire`: the gram STRING
+    * (`kg` — bit-exact, zero collision caveat) or its xxhash64 (`kh` —
+    * 8 bytes per distinct gram instead of a ~K-token string, so the
+    * standing index and every probe's semi-join shrink by the
+    * §6.4-measured wire factor). A root is one wire for its whole life
+    * — it picks the gram table's schema and the compaction cluster
+    * key. The AUTHORITATIVE wire is the committed gram table's own
+    * schema ([[committedWire]]); the caller's `wire` only decides a
+    * root's FIRST batch, so a misconfigured restart cannot flip an
+    * established root. */
+  private def gramSchema(wire: Wire) =
+    new StructType().add(SubstrDedup.gramKey(wire), wire.dataType,
+      nullable = true)
 
   /** The LONG every gram bloom sidecar is built over and probed by. */
-  private def bloomKey(hashed: Boolean) =
-    if (hashed) col("kh") else xxhash64(col("kg"))
+  private def bloomKey(wire: Wire) =
+    wire.bloomKey(col(SubstrDedup.gramKey(wire)))
 
-  private def gramsOf(delivered: DataFrame, hashed: Boolean): DataFrame =
-    if (hashed) SubstrDedup.gramsOfHashed(delivered, SubstrDedup.MinRun)
-    else SubstrDedup.gramsOf(delivered, SubstrDedup.MinRun)
+  /** The spans table's schema as [[processBatch]] writes it (parquet
+    * reads every column back nullable), so span reads run no inference
+    * job. */
+  private[graft] val SpansSchema = StructType.fromDDL(
+    "doc_id BIGINT, span_start BIGINT, span_end BIGINT, span_len BIGINT, epoch BIGINT")
 
-  /** The root's established wire form, read from the committed gram
-    * table's schema — None when nothing is committed yet (the only
-    * moment the caller's flag decides). */
-  private[graft] def wireFormOf(spark: SparkSession,
-                                root: String): Option[Boolean] =
-    try {
-      val cols = IndexMaintainStream.readTable(spark, root, "grams").columns
-      Some(cols.contains("kh"))
-    } catch { case _: IllegalArgumentException => None }
+  /** The root's established wire, read from the committed gram table's
+    * schema — None when nothing is committed yet (the only moment the
+    * caller's `wire` decides). */
+  private def committedWire(spark: SparkSession, root: String): Option[Wire] =
+    IndexMaintainStream.committedSchema(spark, root, "grams")
+      .map(grams => Wire.of(grams.head.dataType))
 
   /** The gram index's OWN pregate crossover, measured (round-12
     * StreamLadder A/B, 20k docs/epoch, last-quartile means): naive
@@ -101,30 +96,27 @@ object SubstrStream {
     * epoch. */
   private[graft] def processBatch(delivered: DataFrame, root: String,
                                   epoch: Long,
-                                  hashed: Boolean = false,
+                                  wire: Wire = Wire.Text,
                                   pregateMinKeys: Long =
                                     DefaultPregateMinKeys)
       : Boolean = {
     val spark = delivered.sparkSession
-    // established roots keep their committed wire form regardless of
-    // the caller's flag — see the wire-form scaladoc above
-    val form = wireFormOf(spark, root).getOrElse(hashed)
+    // established roots keep their committed wire regardless of the
+    // caller's — see gramSchema's scaladoc
+    val form = committedWire(spark, root).getOrElse(wire)
     // the pregate's eagerly-checkpointed positives frame is released
     // once the epoch's writes have consumed it (finally, so a failed
     // epoch doesn't leak the blocks either)
     var pinned: Option[DataFrame] = None
     try IndexMaintainStream.commitBatch(spark, root, s"batch=$epoch") {
         staging =>
-      val grams = gramsOf(delivered, form)
+      val grams = SubstrDedup.gramsOf(delivered, SubstrDedup.MinRun, form)
       val (prior, pin) = IndexMaintainStream.committedKeys(spark, root,
-        "grams", gramSchema(form), gramKey(form), grams, bloomKey(form),
-        pregateMinKeys)
+        "grams", gramSchema(form), SubstrDedup.gramKey(form), grams,
+        bloomKey(form), pregateMinKeys)
       pinned = pin
-      val spans =
-        if (form)
-          SubstrDedup.probeSpansHashed(delivered, prior, SubstrDedup.MinRun)
-        else SubstrDedup.probeSpans(delivered, prior, SubstrDedup.MinRun)
-      spans.withColumn("epoch", lit(epoch)).write.parquet(s"$staging/spans")
+      SubstrDedup.probeSpans(delivered, prior, SubstrDedup.MinRun, form)
+        .withColumn("epoch", lit(epoch)).write.parquet(s"$staging/spans")
       grams.write.parquet(s"$staging/grams")
       val written = spark.read.schema(gramSchema(form))
         .parquet(s"$staging/grams")
@@ -136,12 +128,12 @@ object SubstrStream {
   /** Start the firehose: `docs` is a streaming frame with at least
     * (doc_id, text). */
   def start(docs: DataFrame, root: String,
-            hashed: Boolean = false,
+            wire: Wire = Wire.Text,
             pregateMinKeys: Long = DefaultPregateMinKeys): StreamingQuery =
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        processBatch(batch, root, epoch, hashed, pregateMinKeys); ()
+        processBatch(batch, root, epoch, wire, pregateMinKeys); ()
       }
       .start()
 
@@ -150,16 +142,15 @@ object SubstrStream {
     * than `maxDeltas` plain deltas have accumulated. Returns true when
     * a compaction ran. */
   def compactIfNeeded(spark: SparkSession, root: String,
-                      hashed: Boolean = false,
                       maxDeltas: Int = 64): Boolean = {
     if (IndexMaintainStream.plainDeltaCount(spark, root) <= maxDeltas) false
-    else { compact(spark, root, hashed); true }
+    else { compact(spark, root); true }
   }
 
   /** Every duplicated span flagged so far (doc_id, span_start,
     * span_end, span_len, epoch). */
   def spansSoFar(spark: SparkSession, root: String): DataFrame =
-    IndexMaintainStream.readTable(spark, root, "spans")
+    IndexMaintainStream.readTable(spark, root, "spans", SpansSchema)
 
   /** Fold per-epoch deltas into one compacted run (grams clustered on
     * the gram key — restores min/max file-skipping AND makes the
@@ -168,26 +159,25 @@ object SubstrStream {
     * duplicates), then REBUILD one bloom sidecar over the folded gram
     * set (per-epoch blooms have differing geometries, so they fold by
     * re-aggregation; this is also how a pre-bloom root self-heals into
-    * the pregated steady state). */
-  def compact(spark: SparkSession, root: String,
-              hashed: Boolean = false): Unit = {
-    // cluster on the root's ESTABLISHED key column, not the flag
-    val form = wireFormOf(spark, root).getOrElse(hashed)
+    * the pregated steady state). The fold clusters on the root's
+    * committed gram key ([[committedWire]]); an empty root is a no-op. */
+  def compact(spark: SparkSession, root: String): Unit = {
     IndexMaintainStream.commitCompactedWith(spark, root) { staging =>
+      val wire = committedWire(spark, root).get
       graft.sinks.LakeSink.writeClustered(
-        IndexMaintainStream.readTable(spark, root, "grams", gramSchema(form))
+        IndexMaintainStream.readTable(spark, root, "grams", gramSchema(wire))
           .distinct(),
         s"$staging/grams",
         // sized by input bytes — a hardcoded 1 was a single-task sort
         // of the whole gram set (see compactedFileCount's scaladoc)
         IndexMaintainStream.compactedFileCount(spark, root, "grams"),
-        col(gramKey(form)))
-      IndexMaintainStream.readTable(spark, root, "spans")
+        col(SubstrDedup.gramKey(wire)))
+      IndexMaintainStream.readTable(spark, root, "spans", SpansSchema)
         .write.parquet(s"$staging/spans")
-      val grams = spark.read.schema(gramSchema(form))
+      val grams = spark.read.schema(gramSchema(wire))
         .parquet(s"$staging/grams")
       IndexMaintainStream.writeBloomSidecar(grams, grams.count(),
-        s"$staging/bloom", bloomKey(form))
+        s"$staging/bloom", bloomKey(wire))
     }
     IndexMaintainStream.dropCovered(spark, root)
   }

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Wire
+
 /** Scale ladder for the stateful streaming consumers — the per-EPOCH
   * cost curve as committed state grows, the axis the batch ladders
   * can't see. The hypothesis under test (PretrainStream's scaladoc):
@@ -115,11 +117,11 @@ object StreamLadder {
               grams, s"$staging/grams", seedFiles, col("kh"))
             // 0-row spans THROUGH the real probe, so the seed delta's
             // schema is exactly what the stream writes
-            graft.dedup.SubstrDedup.probeSpansHashed(
+            graft.dedup.SubstrDedup.probeSpans(
                 spark.range(0).select(col("id").as("doc_id"),
                   lit("").as("text")),
                 spark.range(0).select(col("id").as("kh")),
-                graft.dedup.SubstrDedup.MinRun)
+                graft.dedup.SubstrDedup.MinRun, Wire.Hashed)
               .withColumn("epoch", lit(0L)).write.parquet(s"$staging/spans")
             graft.streaming.IndexMaintainStream
               .writeBloomSidecar(grams, seedKeys, s"$staging/bloom",
@@ -148,7 +150,7 @@ object StreamLadder {
       if (mode == "substr")
         graft.streaming.SubstrStream.processBatch(
           b.select(col("doc_id"), col("text")), root, ep.toLong,
-          hashed = true, pregateMinKeys = minKeys)
+          Wire.Hashed, pregateMinKeys = minKeys)
       else
         graft.streaming.PretrainStream.processBatch(
           b, contaminated, root, ep.toLong, pregateMinKeys = minKeys)
@@ -163,12 +165,11 @@ object StreamLadder {
         val ran =
           if (compactEvery < 0) {
             if (mode == "substr")
-              graft.streaming.SubstrStream.compactIfNeeded(spark, root,
-                hashed = true)
+              graft.streaming.SubstrStream.compactIfNeeded(spark, root)
             else graft.streaming.PretrainStream.compactIfNeeded(spark, root)
           } else if ((ep + 1) % compactEvery == 0) {
             if (mode == "substr")
-              graft.streaming.SubstrStream.compact(spark, root, hashed = true)
+              graft.streaming.SubstrStream.compact(spark, root)
             else graft.streaming.PretrainStream.compact(spark, root)
             true
           } else false

@@ -68,7 +68,8 @@ class HashedWireSpec extends AnyFunSuite {
     assert(rows(hashed) === expected)
 
     // the standing index stores longs, never the term string
-    val (post, _, _) = operators.SearchIndex.bm25CachedHashed(spark, Sf)
+    val (post, _, _) =
+      operators.SearchIndex.bm25Cached(spark, Sf, functions.Wire.Hashed)
     assert(post.schema("term").dataType.typeName === "long")
 
     // the serve pushes the hashed query vocabulary into the scan as a

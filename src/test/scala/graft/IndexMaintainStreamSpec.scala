@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.functions.Wire
 import graft.streaming.IndexMaintainStream
 
 object IndexMaintainStreamSpec {
@@ -79,9 +80,9 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     val all = docs(45)
 
     // identical ingest through BOTH wire forms
-    Seq((strRoot, false), (khRoot, true)).foreach { case (root, hashed) =>
+    Seq((strRoot, Wire.Text), (khRoot, Wire.Hashed)).foreach { case (root, wire) =>
       val input = MemoryStream[Doc]
-      val q = IndexMaintainStream.startDocStream(input.toDF(), root, hashed)
+      val q = IndexMaintainStream.startDocStream(input.toDF(), root, wire)
       all.grouped(17).foreach { b => input.addData(b); q.processAllAvailable() }
       q.stop()
     }
@@ -94,16 +95,16 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     assert(post.schema("term").dataType.typeName === "long")
 
     // established root keeps its committed wire form over a wrong flag:
-    // appending with hashed=false must still write longs and serve right
+    // appending with Wire.Text must still write longs and serve right
     assert(IndexMaintainStream.mergeDocBatch(spark, khRoot,
       Seq(Doc(100L, "spark stream merge window hash")).toDF(),
-      batchId = 99, hashed = false))
+      batchId = 99, wire = Wire.Text))
     assert(IndexMaintainStream.readTable(spark, khRoot, "postings")
       .schema("term").dataType.typeName === "long")
     val coldRoot = tmp("bm25khcold")
     assert(IndexMaintainStream.mergeDocBatch(spark, coldRoot,
       (all :+ Doc(100L, "spark stream merge window hash")).toDF(), 0,
-      hashed = true))
+      wire = Wire.Hashed))
     assert(rows(IndexMaintainStream.bm25Serve(spark, khRoot)) ===
            rows(IndexMaintainStream.bm25Serve(spark, coldRoot)))
 
@@ -318,18 +319,48 @@ class IndexMaintainStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmp("bm25khdedup")
     assert(IndexMaintainStream.mergeDocBatch(spark, root, docs(20).toDF(), 0,
-      hashed = true))
+      wire = Wire.Hashed))
     val post = IndexMaintainStream.readTable(spark, root, "postings")
     assert(post.groupBy(col("doc_id"), col("term")).count()
       .filter(col("count") > 1).isEmpty,
       "streamed hashed postings must be unique per (doc_id, term)")
-    // same invariant on the offline hashed index (bm25CachedHashed)
+    // same invariant on the offline hashed index (bm25Cached on Wire.Hashed)
     val corpusDir = tmp("bm25khcorpus")
     docs(20).toDF().write.parquet(s"$corpusDir/documents.parquet")
     val (offPost, _, _) =
-      graft.operators.SearchIndex.bm25CachedHashed(spark, corpusDir)
+      graft.operators.SearchIndex.bm25Cached(spark, corpusDir, Wire.Hashed)
     assert(offPost.groupBy(col("doc_id"), col("term")).count()
       .filter(col("count") > 1).isEmpty)
+  }
+
+  test("a warm hashed bm25Serve infers only the postings schema; a merge " +
+       "reads its staged tables back under declared schemas") {
+    import spark.implicits._
+    val root = tmp("bm25jobs")
+    val all = docs(30)
+    assert(IndexMaintainStream.mergeDocBatch(spark, root, all.take(15).toDF(),
+      0, wire = Wire.Hashed))
+    // one delta into an established root: the postings read that learns
+    // its wire, then the postings, doclen and stats writes; the staged
+    // read-backs infer nothing (11 jobs when they did and the hashed
+    // postings aggregated twice)
+    val mergeJobs = JobCount.jobsIn(spark, "bm25-merge") {
+      assert(IndexMaintainStream.mergeDocBatch(spark, root,
+        all.drop(15).toDF(), 1))
+    }
+    IndexMaintainStream.bm25Serve(spark, root)
+    var served: org.apache.spark.sql.DataFrame = null
+    val serveJobs = JobCount.jobsIn(spark, "bm25-warm-serve") {
+      served = IndexMaintainStream.bm25Serve(spark, root)
+    }
+    // only the postings read that learns the wire (4 when the wire was
+    // learned by a second postings read and doclen/stats inferred too)
+    assert(serveJobs === 1)
+    assert(mergeJobs === 8)
+    val cold = tmp("bm25jobscold")
+    assert(IndexMaintainStream.mergeDocBatch(spark, cold, all.toDF(), 0,
+      wire = Wire.Hashed))
+    assert(rows(served) === rows(IndexMaintainStream.bm25Serve(spark, cold)))
   }
 
   test("ANN codes maintained on the stream ≡ cold re-encode, through serve") {

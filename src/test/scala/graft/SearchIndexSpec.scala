@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.Wire
+
 /** The persisted BM25 postings index (operators/SearchIndex.scala):
   * build once per corpus fingerprint, serve from the clustered tables.
   * Contract = the AnnIndex one — served output IDENTICAL to the inline
@@ -57,13 +59,13 @@ class SearchIndexSpec extends AnyFunSuite {
 
   test("a warm index open reads the declared schemas and runs no Spark job") {
     import operators.SearchIndex._
-    Seq(("bm25", "string", bm25Cached _), ("bm25h", "long", bm25CachedHashed _))
-      .foreach { case (kind, termType, open) =>
-        open(spark, Sf) // build, or reuse a built cache
+    Seq(("bm25", "string", Wire.Text), ("bm25h", "long", Wire.Hashed))
+      .foreach { case (kind, termType, wire) =>
+        bm25Cached(spark, Sf, wire) // build, or reuse a built cache
         val cache = tools.CorpusCache.dirFor(Sf, "documents", kind)
         var frames: (DataFrame, DataFrame, DataFrame) = null
         assert(JobCount.jobsIn(spark, s"$kind-warm-open") {
-          frames = open(spark, Sf)
+          frames = bm25Cached(spark, Sf, wire)
         } === 0, kind)
         val (post, dl, stats) = frames
         // the declared schemas are the ones parquet inference returns
@@ -77,6 +79,6 @@ class SearchIndexSpec extends AnyFunSuite {
     // the served entries still equal the inline form (string, hashed)
     val inline = rows(operators.Search.bm25(spark, Sf))
     assert(rows(bm25Indexed(spark, Sf)) === inline)
-    assert(rows(bm25IndexedHashed(spark, Sf)) === inline)
+    assert(rows(bm25Indexed(spark, Sf, Wire.Hashed)) === inline)
   }
 }

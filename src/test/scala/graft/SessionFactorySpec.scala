@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * width, extensions) without any test noticing; this guard does.
   * Likewise GraftSession.configure is the one place graft binds its SQL
   * functions on a session: operators build the expressions directly,
-  * so none of them mutates the caller's function registry. */
+  * so none of them mutates the caller's function registry. And
+  * graft.functions.Wire is the one place a kernel's key is chosen
+  * between a string and its xxhash64: a `hashed` flag or a `…Hashed`
+  * copy of a kernel would re-decide it. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(Path, String)] = {
@@ -43,5 +46,16 @@ class SessionFactorySpec extends AnyFunSuite {
     val lookups = offenders("call_function(\"graft_")
     assert(lookups.isEmpty,
       s"build the expression through GraftShim, not by name in: ${lookups.mkString(", ")}")
+  }
+
+  test("the string-or-hash wire is one Wire parameter: no hashed flag, no *Hashed twin") {
+    val flag = """hashed\s*:\s*Boolean""".r
+    val twin = """def\s+\w+Hashed\b""".r
+    val found = sources.collect {
+      case (p, src) if flag.findFirstIn(src).isDefined ||
+                       twin.findFirstIn(src).isDefined => p
+    }
+    assert(found.isEmpty,
+      s"take a graft.functions.Wire instead, in: ${found.mkString(", ")}")
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.functions.Wire
 import graft.streaming.SubstrStream
 
 object SubstrStreamSpec {
@@ -77,6 +78,29 @@ class SubstrStreamSpec extends AnyFunSuite {
     assert(spans(root).contains((9L, 0L, 9L, 3L)))
   }
 
+  test("spans are read under the declared SpansSchema: it equals parquet " +
+       "inference on both wires, and spansSoFar opens with no job") {
+    import spark.implicits._
+    val runA = words("sa", 10)
+    Seq(Wire.Text, Wire.Hashed).foreach { wire =>
+      val root = tmp(s"substrspans$wire")
+      SubstrStream.processBatch(Seq(Doc(1L, runA)).toDF(), root, 0L, wire)
+      SubstrStream.processBatch(
+        Seq(Doc(2L, words("q", 2) + " " + runA)).toDF(), root, 1L, wire)
+      def inferred =
+        streaming.IndexMaintainStream.readTable(spark, root, "spans").schema
+      assert(inferred === SubstrStream.SpansSchema, s"wire=$wire")
+      assert(JobCount.jobsIn(spark, s"spans-open-$wire") {
+        SubstrStream.spansSoFar(spark, root)
+      } === 0, s"wire=$wire")
+      assert(spans(root) === Set((2L, 2L, 11L, 1L)), s"wire=$wire")
+      // the compacted copy keeps the schema
+      SubstrStream.compact(spark, root)
+      assert(inferred === SubstrStream.SpansSchema, s"wire=$wire compacted")
+      assert(spans(root) === Set((2L, 2L, 11L, 1L)), s"wire=$wire compacted")
+    }
+  }
+
   test("pregate epochs release their checkpointed positives — no " +
        "block accumulation across micro-batches") {
     import spark.implicits._
@@ -110,9 +134,9 @@ class SubstrStreamSpec extends AnyFunSuite {
       Seq(Doc(2L, runC + " " + runA)),
       Seq(Doc(3L, runC + " zz0 " + runA)))
     // drive BOTH wire forms through the identical epoch sequence
-    Seq((strRoot, false), (khRoot, true)).foreach { case (root, hashed) =>
+    Seq((strRoot, Wire.Text), (khRoot, Wire.Hashed)).foreach { case (root, wire) =>
       val input = MemoryStream[Doc]
-      val q = SubstrStream.start(input.toDF(), root, hashed)
+      val q = SubstrStream.start(input.toDF(), root, wire)
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
       q.stop()
     }
@@ -125,10 +149,10 @@ class SubstrStreamSpec extends AnyFunSuite {
       .toSeq === Seq(("kh", "long")))
 
     // compaction under the hashed key preserves spans and future probes
-    SubstrStream.compact(spark, khRoot, hashed = true)
+    SubstrStream.compact(spark, khRoot)
     assert(spans(khRoot) === spans(strRoot))
     assert(SubstrStream.processBatch(
-      Seq(Doc(9L, runA)).toDF(), khRoot, epoch = 3L, hashed = true))
+      Seq(Doc(9L, runA)).toDF(), khRoot, epoch = 3L, wire = Wire.Hashed))
     assert(spans(khRoot).contains((9L, 0L, 9L, 3L)))
   }
 
@@ -139,26 +163,26 @@ class SubstrStreamSpec extends AnyFunSuite {
 
     // first batch of an empty root: the flag decides → hashed wire
     assert(SubstrStream.processBatch(
-      Seq(Doc(1L, runA)).toDF(), root, epoch = 0L, hashed = true))
+      Seq(Doc(1L, runA)).toDF(), root, epoch = 0L, wire = Wire.Hashed))
 
-    // a misconfigured restart passes hashed=false — the committed gram
+    // a misconfigured restart passes Wire.Text — the committed gram
     // schema (kh) wins: the batch probes AND appends in the hashed form,
     // so the prior-epoch run is still flagged and the index stays longs
     assert(SubstrStream.processBatch(
       Seq(Doc(2L, words("q", 2) + " " + runA)).toDF(),
-      root, epoch = 1L, hashed = false))
+      root, epoch = 1L, wire = Wire.Text))
     assert(spans(root).contains((2L, 2L, 11L, 1L)))
     val grams = streaming.IndexMaintainStream.readTable(spark, root, "grams")
     assert(grams.schema.fields.map(f => (f.name, f.dataType.typeName))
       .toSeq === Seq(("kh", "long")))
 
-    // compact with the wrong flag clusters on the ESTABLISHED key —
-    // no analysis error, schema unchanged, future probes intact
-    SubstrStream.compact(spark, root, hashed = false)
+    // compact clusters on the ESTABLISHED key — no analysis error,
+    // schema unchanged, future probes intact
+    SubstrStream.compact(spark, root)
     assert(streaming.IndexMaintainStream.readTable(spark, root, "grams")
       .columns.toSeq === Seq("kh"))
     assert(SubstrStream.processBatch(
-      Seq(Doc(3L, runA)).toDF(), root, epoch = 2L, hashed = false))
+      Seq(Doc(3L, runA)).toDF(), root, epoch = 2L, wire = Wire.Text))
     assert(spans(root).contains((3L, 0L, 9L, 2L)))
   }
 
@@ -176,19 +200,19 @@ class SubstrStreamSpec extends AnyFunSuite {
     val prior = streaming.IndexMaintainStream.InPushdownCap
     try {
       streaming.IndexMaintainStream.InPushdownCap = 2
-      Seq(false, true).foreach { hashed =>
+      Seq(Wire.Text, Wire.Hashed).foreach { wire =>
         val roots = Seq(0L, Long.MaxValue).map { minKeys =>
-          val root = tmp(s"substrcap$hashed$minKeys")
+          val root = tmp(s"substrcap$wire$minKeys")
           batches.zipWithIndex.foreach { case (b, ep) =>
-            SubstrStream.processBatch(b.toDF(), root, ep.toLong, hashed,
+            SubstrStream.processBatch(b.toDF(), root, ep.toLong, wire,
               pregateMinKeys = minKeys)
           }
           root
         }
         assert(spans(roots.head).contains((2L, 2L, 21L, 1L)),
-          s"run must flag through the broadcast branch (hashed=$hashed)")
+          s"run must flag through the broadcast branch (wire=$wire)")
         assert(spans(roots.head) === spans(roots(1)),
-          s"fallback must not change spans (hashed=$hashed)")
+          s"fallback must not change spans (wire=$wire)")
       }
     } finally streaming.IndexMaintainStream.InPushdownCap = prior
   }
@@ -204,27 +228,27 @@ class SubstrStreamSpec extends AnyFunSuite {
       Seq(Doc(3L, runC + " zz0 " + runA)))
 
     // A/B: both wire forms, pregate vs naive — span sets identical
-    Seq(false, true).foreach { hashed =>
+    Seq(Wire.Text, Wire.Hashed).foreach { wire =>
       val roots = Seq(0L, Long.MaxValue).map { minKeys =>
-        val root = tmp(s"substrab$hashed$minKeys")
+        val root = tmp(s"substrab$wire$minKeys")
         batches.zipWithIndex.foreach { case (b, ep) =>
           // minKeys = 0 forces the pregate arm (the default state gate
           // would correctly pick naive at test-sized state), MaxValue
           // the naive arm
-          SubstrStream.processBatch(b.toDF(), root, ep.toLong, hashed,
+          SubstrStream.processBatch(b.toDF(), root, ep.toLong, wire,
             pregateMinKeys = minKeys)
         }
         root
       }
       assert(spans(roots.head).nonEmpty)
       assert(spans(roots.head) === spans(roots(1)),
-        s"pregate must not change spans (hashed=$hashed)")
+        s"pregate must not change spans (wire=$wire)")
     }
 
     // sidecar presence + pre-bloom fallback (hashed form)
     val root = tmp("substrbloomfb")
     batches.zipWithIndex.foreach { case (b, ep) =>
-      SubstrStream.processBatch(b.toDF(), root, ep.toLong, hashed = true,
+      SubstrStream.processBatch(b.toDF(), root, ep.toLong, Wire.Hashed,
         pregateMinKeys = 0L)
     }
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -236,17 +260,17 @@ class SubstrStreamSpec extends AnyFunSuite {
     // a pre-upgrade delta loses its sidecar: its grams must still probe
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/batch=0/bloom"), true)
     assert(SubstrStream.processBatch(
-      Seq(Doc(9L, runA)).toDF(), root, epoch = 3L, hashed = true,
+      Seq(Doc(9L, runA)).toDF(), root, epoch = 3L, wire = Wire.Hashed,
       pregateMinKeys = 0L))
     assert(spans(root).contains((9L, 0L, 9L, 3L)),
       "a run known only to the bloom-less delta must still flag")
     // compaction rebuilds ONE bloom over the folded gram set
-    SubstrStream.compact(spark, root, hashed = true)
+    SubstrStream.compact(spark, root)
     val cbatch = fs.listStatus(new org.apache.hadoop.fs.Path(root))
       .map(_.getPath.getName).filter(_.startsWith("cbatch=")).head
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/$cbatch/bloom")))
     assert(SubstrStream.processBatch(
-      Seq(Doc(11L, runC)).toDF(), root, epoch = 4L, hashed = true,
+      Seq(Doc(11L, runC)).toDF(), root, epoch = 4L, wire = Wire.Hashed,
       pregateMinKeys = 0L))
     assert(spans(root).contains((11L, 0L, 9L, 4L)),
       "the compacted bloom + clustered grams must still probe")
@@ -268,13 +292,13 @@ class SubstrStreamSpec extends AnyFunSuite {
       Seq(Doc(5L, runC + " " + runA)))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    Seq(false, true).foreach { hashed =>
+    Seq(Wire.Text, Wire.Hashed).foreach { wire =>
       val arms = Seq[Int => Long](
         ep => if (ep < 2) Long.MaxValue else 0L, _ => Long.MaxValue)
       val Seq(flipped, naive) = arms.zipWithIndex.map { case (minKeys, i) =>
-        val root = tmp(s"substrflip$hashed$i")
+        val root = tmp(s"substrflip$wire$i")
         batches.zipWithIndex.foreach { case (b, ep) =>
-          SubstrStream.processBatch(b.toDF(), root, ep.toLong, hashed,
+          SubstrStream.processBatch(b.toDF(), root, ep.toLong, wire,
             pregateMinKeys = minKeys(ep))
         }
         root
@@ -283,9 +307,9 @@ class SubstrStreamSpec extends AnyFunSuite {
         assert(fs.exists(new org.apache.hadoop.fs.Path(
           s"$root/batch=$ep/bloom")), s"epoch $ep of $root must carry a bloom")
       assert(Set(2L, 3L).subsetOf(spans(flipped).map(_._4)),
-        s"both pregate epochs must flag spans (hashed=$hashed)")
+        s"both pregate epochs must flag spans (wire=$wire)")
       assert(spans(flipped) === spans(naive),
-        s"the flip must not change spans (hashed=$hashed)")
+        s"the flip must not change spans (wire=$wire)")
     }
   }
 }
